@@ -16,13 +16,13 @@ import org.apache.spark.sql.functions._
   * appends accumulate — the read path's anti-join cost and the
   * file-open cost both reset to zero.
   *
-  * Compaction is reader-atomic via a versioned layout — the same
-  * pointer-flip pattern [[StateStore]] uses: data lives under
-  * `root/v<N>/`, a `root/_current` pointer file names the live
-  * version, and [[compact]] writes `v<N+1>` IN FULL before flipping
-  * the pointer. A reader never sees a missing or half-written table:
-  * it resolves the pointer once ([[dataDir]]) and reads an immutable
-  * complete version dir. The PREVIOUS version is retained until the
+  * Every change is a version behind a pointer — the model
+  * [[StateStore]] shares: data lives under `root/v<N>/`, a
+  * `root/_current` pointer file names the live version, appends and
+  * tombstones land file-atomically inside it, and [[compact]] writes
+  * `v<N+1>` IN FULL before flipping the pointer. A reader never sees a
+  * missing or half-written table: it resolves the pointer once
+  * ([[dataDir]]) and reads an immutable complete version dir. The PREVIOUS version is retained until the
   * next compaction as a grace copy, so a reader that resolved the old
   * pointer mid-compact finishes its scan against intact files; only
   * versions two compactions old are deleted. (Disk high-water mark:
@@ -31,9 +31,10 @@ import org.apache.spark.sql.functions._
   * the deployment-scale graduation and this object's surface maps 1:1
   * onto it: append = append, tombstone = delete, compact = OPTIMIZE.)
   *
-  * Legacy bare-layout roots (data files directly under `root`, the
-  * pre-pointer layout) still read via [[DirSwap.recover]] healing and
-  * are migrated into the versioned layout by their first [[compact]].
+  * [[init]] lands `v0`, and so does the first [[append]] to a root
+  * that does not exist yet. A root holding neither `_current` nor a
+  * committed `v<N>` is not a shard table: every reader and writer
+  * fails loudly on it.
   *
   * Concurrency contract: READERS are lock-free at any time (the
   * pointer + grace copy above); WRITERS are single-threaded — one
@@ -52,10 +53,9 @@ object ShardStore {
 
   private def currentPath(root: String) = new Path(s"$root/_current")
 
-  /** Version index of a data dir under the versioned layout; -1 for a
-    * legacy bare root. */
+  /** Version index of a data dir `root/v<N>`. */
   private def versionOf(root: String, dir: String): Long =
-    if (dir == root) -1L else dir.substring(root.length + 2).toLong
+    dir.substring(root.length + 2).toLong
 
   private def versionDirs(f: org.apache.hadoop.fs.FileSystem,
                           root: String): Seq[(Long, Path)] =
@@ -80,51 +80,28 @@ object ShardStore {
     if (!f.exists(m)) f.create(m, true).close()
   }
 
-  /** The LIVE data directory: `root/<_current>` under the versioned
-    * layout, `root` itself for a legacy bare table. Resolving the
-    * pointer is the reader's only coupling to maintenance — the dir it
-    * returns is complete and immutable-under-compaction (appends do
-    * land in it, file-atomically). If the pointer file is mid-flip
-    * (the delete→rename instant of [[StateStore.writeLatest]]'s
-    * pattern), the highest version dir IS the flip target and complete
-    * — fall back to it. */
+  /** The LIVE data directory `root/<_current>`. Resolving the pointer
+    * is the reader's only coupling to maintenance — the dir it returns
+    * is complete and immutable-under-compaction (appends do land in
+    * it, file-atomically). If the pointer file is mid-flip (the
+    * delete→rename instant of [[Pointer.flip]]), the highest committed
+    * version dir IS the flip target and complete — fall back to it. A
+    * root with neither is not a shard table: fail loudly rather than
+    * read or append to it as one. */
   def dataDir(spark: SparkSession, root: String): String = {
     val f = fs(spark, root)
-    if (!f.exists(new Path(root))) DirSwap.recover(f, root)
-    val cur = currentPath(root)
-    if (f.exists(cur)) {
-      val in = f.open(cur)
-      val name = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                 finally in.close()
-      s"$root/$name"
-    } else {
-      // only COMMITTED versions resolve — during a legacy root's first
-      // compact, the half-written v0 has no marker yet and readers keep
-      // resolving the still-intact legacy root
+    val name = Pointer.read(f, currentPath(root)).getOrElse {
       val vs = committedVersionDirs(f, root)
-      if (vs.isEmpty) root // legacy bare layout
-      else s"$root/v${vs.map(_._1).max}"
+      require(vs.nonEmpty, s"$root has neither a _current pointer nor a " +
+        "committed v<N> dir — not a shard table (damaged or foreign root)")
+      s"v${vs.map(_._1).max}"
     }
+    s"$root/$name"
   }
 
-  private def flipCurrent(spark: SparkSession, root: String, name: String): Unit = {
-    val f = fs(spark, root)
-    val tmp = new Path(s"$root/_current.tmp")
-    val out = f.create(tmp, true)
-    try out.write(name.getBytes("UTF-8")) finally out.close()
-    if (f.exists(currentPath(root))) f.delete(currentPath(root), false)
-    require(f.rename(tmp, currentPath(root)), s"could not flip $root/_current")
-  }
+  private def flipCurrent(spark: SparkSession, root: String, name: String): Unit =
+    Pointer.flip(fs(spark, root), currentPath(root), name)
 
-  /** Manifest rows + their text, clustered and landed. Fails loudly if
-    * a manifest row has no document (stale or filtered input).
-    *
-    * `maxRecordsPerFile` (0 = unbounded) bounds shard-file size — the
-    * knob a training-data reader wants ("one shard file ≈ one worker's
-    * chunk") — and, because rows are clustered by (bin, doc_id), it
-    * makes each file a contiguous bin range: a bin-range read then
-    * skips whole files' row groups on parquet min/max stats
-    * (ShardPruningSpec measures exactly that). */
   /** In-partition clustering strategies share one landing path so the
     * validation and writer contract cannot diverge between layouts.
     * Both sorts lead with the partition columns so the dynamic-
@@ -139,6 +116,15 @@ object ShardStore {
       .sortWithinPartitions(col("split"), col("lang"), col("__z"))
       .drop("__z")
 
+  /** Manifest rows + their text, clustered and landed. Fails loudly if
+    * a manifest row has no document (stale or filtered input).
+    *
+    * `maxRecordsPerFile` (0 = unbounded) bounds shard-file size — the
+    * knob a training-data reader wants ("one shard file ≈ one worker's
+    * chunk") — and, because rows are clustered by (bin, doc_id), it
+    * makes each file a contiguous bin range: a bin-range read then
+    * skips whole files' row groups on parquet min/max stats
+    * (ShardPruningSpec measures exactly that). */
   private def land(docs: DataFrame, manifest: DataFrame, root: String,
                    mode: String, maxRecordsPerFile: Long,
                    cluster: DataFrame => DataFrame = plainCluster): Unit = {
@@ -189,10 +175,13 @@ object ShardStore {
 
   /** Land one ingest's accepted rows (appends; bins were opened past
     * each group's historical max, so clustering stays monotone across
-    * the appended files). */
+    * the appended files). The first append to a root that does not
+    * exist yet lands them as `v0`, the way [[init]] would. */
   def append(batchDocs: DataFrame, accepted: DataFrame, root: String,
              maxRecordsPerFile: Long = 0L): Unit =
-    land(batchDocs, accepted, dataDir(batchDocs.sparkSession, root),
+    if (!fs(batchDocs.sparkSession, root).exists(new Path(root)))
+      init(batchDocs, accepted, root, maxRecordsPerFile)
+    else land(batchDocs, accepted, dataDir(batchDocs.sparkSession, root),
       "append", maxRecordsPerFile)
 
   /** Record retractions: (doc_id, reason) appended to the side table. */
@@ -201,9 +190,7 @@ object ShardStore {
       .write.mode("append")
       .parquet(tombDir(dataDir(tombstones.sparkSession, root)))
 
-  /** The live table: every landed row minus tombstoned docs. Heals an
-    * interrupted compaction swap first (root missing but the rewrite
-    * or the moved-aside original present — see [[DirSwap.recover]]). */
+  /** The live table: every landed row minus tombstoned docs. */
   def read(spark: SparkSession, root: String): DataFrame =
     readDir(spark, root, dataDir(spark, root))
 
@@ -274,8 +261,6 @@ object ShardStore {
                    maxFilesPerPartition: Int = 16,
                    maxTombstoneFrac: Double = 0.2,
                    maxRecordsPerFile: Long = 0L): Option[Int] = {
-    // dataDir heals a mid-swap legacy root BEFORE the data read —
-    // every entry point must not throw on a state read() would recover
     val dir = dataDir(spark, root)
     val dead = if (!fs(spark, root).exists(new Path(tombDir(dir)))) 0L
       else spark.read.parquet(tombDir(dir)).select(col("doc_id")).distinct().count()
@@ -284,6 +269,13 @@ object ShardStore {
     maybeCompact(spark, root, liveDocs = total - dead, deadDocs = dead,
       maxFilesPerPartition, maxTombstoneFrac, maxRecordsPerFile)
   }
+
+  /** Claim file fencing version `v` against a CONCURRENT compactor:
+    * created atomically (create-if-absent) OUTSIDE the version dir —
+    * the rewrite's overwrite would delete an in-dir sentinel. Deleted
+    * after the pointer flips (a flipped pointer makes the claim
+    * moot: the next compaction targets v+1). */
+  private def claimPath(root: String, v: Long) = new Path(s"$root/_claim_v$v")
 
   /** Physically apply tombstones and merge accumulated small files:
     * rewrite the live rows fully re-clustered into the NEXT version
@@ -295,20 +287,10 @@ object ShardStore {
     * the flip leaves a complete-but-unreferenced next dir that the
     * following compact simply overwrites; no crash point ever leaves
     * the pointer naming an incomplete dir. Returns the data file
-    * count of the new version. Legacy bare roots are healed
-    * ([[DirSwap.recover]]) and migrated: their files are deleted only
-    * AFTER v0 is complete and the pointer names it. */
-  /** Claim file fencing version `v` against a CONCURRENT compactor:
-    * created atomically (create-if-absent) OUTSIDE the version dir —
-    * the rewrite's overwrite would delete an in-dir sentinel. Deleted
-    * after the pointer flips (a flipped pointer makes the claim
-    * moot: the next compaction targets v+1). */
-  private def claimPath(root: String, v: Long) = new Path(s"$root/_claim_v$v")
-
+    * count of the new version. */
   def compact(spark: SparkSession, root: String,
               maxRecordsPerFile: Long = 0L): Int = {
     val f = fs(spark, root)
-    DirSwap.recover(f, root)
     val cur = dataDir(spark, root)
     val curVer = versionOf(root, cur)
     val next = s"$root/v${curVer + 1}"
@@ -356,14 +338,8 @@ object ShardStore {
     markCommitted(f, next)
     flipCurrent(spark, root, s"v${curVer + 1}")
     f.delete(claimPath(root, curVer + 1), false) // flipped: the claim is moot
-    if (curVer < 0L) {
-      // one-time legacy migration: drop the bare-layout data now that
-      // the pointer names v0 (split=*/ partition dirs + side table)
-      f.globStatus(new Path(s"$root/*=*")).foreach(st => f.delete(st.getPath, true))
-      f.delete(new Path(tombDir(root)), true)
-    } else
-      versionDirs(f, root).filter(_._1 < curVer)
-        .foreach { case (_, p) => f.delete(p, true) }
+    versionDirs(f, root).filter(_._1 < curVer)
+      .foreach { case (_, p) => f.delete(p, true) }
     spark.read.parquet(next).inputFiles.length
   }
 }

@@ -27,30 +27,47 @@ import graft.operators.TrainingPipeline.{CorpusState, IngestDelta}
   *                          MUTATE on merge, so they are not
   *                          append-shaped; they are also the smallest
   *                          table (non-singleton nodes only)
-  *   commits/v<v>           empty marker: version v fully written
+  *   staging/<token>/<t>/   one writer's artifacts, before its claim
+  *   commits/v<v>           "<token> <base>": version v is claimed
   *   LATEST                 pointer file, flipped last
   * }}}
   *
-  * [[loadVersion]] reconstructs state-at-v by partition-pruned reads
-  * (`ingest <= v`) plus ONE anti-join of the accumulated dead set onto
-  * shingles and manifest — exactly the logical state `runIncremental`
-  * maintains in memory, because doc ids are globally unique and a doc
-  * is never re-admitted after a tombstone (both are existing contract).
-  * Old versions stay readable (state time travel) until [[compact]]
-  * consolidates the accumulated delta partitions.
+  * Every version is written by ONE routine ([[commitStaged]]): stage
+  * the artifacts under a writer-private `staging/<token>/`, claim
+  * `commits/v<v>` (exactly one writer wins a version number), move the
+  * staged dirs into place, flip LATEST. A delta version stages one
+  * ingest's increment; a BASE version ([[commitBootstrap]],
+  * [[compact]]) stages the full live state. Each marker names its
+  * version's base, so [[loadVersion]] reconstructs state-at-v from the
+  * partitions `base <= ingest <= v` plus ONE anti-join of the
+  * accumulated dead set onto shingles and manifest — exactly the
+  * logical state `runIncremental` maintains in memory, because doc ids
+  * are globally unique and a doc is never re-admitted after a
+  * tombstone (both are existing contract). Versions back to the latest
+  * base stay readable (state time travel); a base deletes the
+  * partitions below it once LATEST names it — the Delta VACUUM trade.
   *
-  * Crash/replay semantics: every per-version artifact write is an
-  * OVERWRITE of a directory no committed version references yet, so a
-  * replayed commit is idempotent; the `commits/v<v>` marker lands only
-  * after every artifact, and LATEST flips last. A lost LATEST is
-  * RECOVERED from the markers (max committed v) instead of silently
-  * bootstrapping an empty corpus — the failure that would re-admit
-  * every previously shipped doc. State artifacts with NO markers fail
-  * loudly as corruption.
+  * Crash/replay semantics: table dirs receive files only from a
+  * claimed marker, so
+  *   - a crash while staging leaves an unclaimed staging dir and
+  *     nothing else; a replay commits the version afresh;
+  *   - a crash between claim and flip is healed forward by the next
+  *     [[latestVersion]], which finishes moving the staged dirs;
+  *   - a crash after a base's flip leaves pre-base partitions that no
+  *     read touches; the next compaction deletes them.
+  * A lost LATEST is RECOVERED from the markers (max committed v)
+  * instead of silently bootstrapping an empty corpus — the failure
+  * that would re-admit every previously shipped doc. State tables with
+  * NO markers fail loudly as corruption. Orphaned staging dirs are not
+  * swept: a concurrent writer's in-flight stage looks the same as a
+  * crashed writer's, and deleting it would let that writer's claim
+  * materialize nothing.
   */
 object StateStore {
 
   private val Tables = Seq("hashes", "sigs", "shingles", "manifest", "dead")
+  /** Everything a version writes: the delta tables plus its labels. */
+  private val Artifacts = Tables :+ "labels"
 
   private val schemas: Map[String, StructType] = Map(
     "hashes" -> StructType(Seq(StructField("h", StringType))),
@@ -78,154 +95,79 @@ object StateStore {
 
   private def latestPath(root: String) = new Path(s"$root/LATEST")
   private def markerPath(root: String, v: Long) = new Path(s"$root/commits/v$v")
-  // In-flight-commit sentinel: created BEFORE any artifact, deleted
-  // right after the version marker lands — so it can never outlive a
-  // real commit. Its presence (with no markers) means "a commit died
-  // mid-write, replay is safe"; its absence alongside state artifacts
-  // means the markers of a REAL corpus were lost — loud corruption.
-  private def initSentinel(root: String) = new Path(s"$root/commits/.init")
+  private def stagingDir(root: String, token: String) = s"$root/staging/$token"
 
-  /** Latest committed version — the COMMIT MARKERS are the truth,
-    * LATEST is a healed-forward cache. A missing LATEST with markers
-    * present is recovered; a STALE LATEST behind a newer marker (an
-    * optimistic commit that crashed between claim and pointer flip)
-    * is healed forward after materializing that version's staged
-    * artifacts; state tables with no markers at all fail loudly —
-    * silently treating a damaged root as an empty corpus would
-    * re-admit every shipped doc downstream. */
-  def latestVersion(spark: SparkSession, root: String): Option[Long] = {
-    val f = fs(spark, root)
-    if (f.exists(latestPath(root))) {
-      val in = f.open(latestPath(root))
-      val l = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      val commitsDir = new Path(s"$root/commits")
-      val maxMarker =
-        if (!f.exists(commitsDir)) None
-        else f.listStatus(commitsDir).toSeq
-          .map(_.getPath.getName).filter(_.startsWith("v"))
-          .map(_.drop(1).toLong).sorted.lastOption
-      maxMarker.filter(_ > l) match {
-        case Some(m) => // claimed + marked but the flip crashed: heal forward
-          (l + 1L to m).foreach(v => materializePending(spark, root, v))
-          writeLatest(spark, root, m)
-          Some(m)
-        case None => Some(l)
-      }
-    } else {
-      val commitsDir = new Path(s"$root/commits")
-      val recovered =
-        if (!f.exists(commitsDir)) None
-        else f.listStatus(commitsDir).toSeq
-          .map(_.getPath.getName).filter(_.startsWith("v"))
-          .map(_.drop(1).toLong).sorted.lastOption
-      recovered match {
-        case Some(v) => // heal the pointer (+ any staged artifacts)
-          (0L to v).foreach(x => materializePending(spark, root, x))
-          writeLatest(spark, root, v); Some(v)
-        case None =>
-          // No markers. Distinguish an interrupted commit (the `.init`
-          // sentinel lands before any artifact and is deleted only
-          // after the marker, so sentinel + artifacts + no marker = a
-          // v0 commit that died mid-write — safe to treat as empty:
-          // the replayed bootstrap overwrites the same dirs) from true
-          // damage (artifacts but NO sentinel = the markers of a real
-          // corpus were lost, even if the commits dir itself survived).
-          val initSeen = f.exists(initSentinel(root))
-          require(initSeen || Tables.forall(t => !f.exists(new Path(s"$root/$t"))),
-            s"state tables exist under $root but no commit marker does — " +
-              "refusing to treat a damaged state root as an empty corpus")
-          None
-      }
+  /** Partition column of table `t`: labels are whole per version. */
+  private def partitionKey(t: String) = if (t == "labels") "v" else "ingest"
+  private def partitionPath(root: String, t: String, v: Long) =
+    new Path(s"$root/$t/${partitionKey(t)}=$v")
+
+  /** (staging token, base version) from the body of marker `v`. */
+  private def marker(spark: SparkSession, root: String, v: Long): (String, Long) = {
+    val body = Pointer.read(fs(spark, root), markerPath(root, v)).getOrElse(
+      throw new IllegalStateException(s"commit marker v$v is missing under $root"))
+    body.split(" ") match {
+      case Array(token, base) => (token, base.toLong)
+      case _ => throw new IllegalStateException(
+        s"malformed commit marker $root/commits/v$v: '$body'")
     }
   }
 
-  private def writeLatest(spark: SparkSession, root: String, v: Long): Unit = {
+  /** Latest committed version — the COMMIT MARKERS are the truth,
+    * LATEST is a healed-forward cache. A missing LATEST with markers
+    * present is recovered; a LATEST behind a newer marker (a commit
+    * that crashed between claim and pointer flip) is healed forward
+    * after materializing that version's staged artifacts; state tables
+    * with no markers at all fail loudly — silently treating a damaged
+    * root as an empty corpus would re-admit every shipped doc
+    * downstream. */
+  def latestVersion(spark: SparkSession, root: String): Option[Long] = {
     val f = fs(spark, root)
-    val tmp = new Path(s"$root/LATEST.tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (f.exists(latestPath(root))) f.delete(latestPath(root), false)
-    require(f.rename(tmp, latestPath(root)), s"could not flip $root/LATEST")
+    val commitsDir = new Path(s"$root/commits")
+    val maxMarker =
+      if (!f.exists(commitsDir)) None
+      else f.listStatus(commitsDir).toSeq
+        .map(_.getPath.getName).filter(_.startsWith("v"))
+        .map(_.drop(1).toLong).sorted.lastOption
+    maxMarker match {
+      case None =>
+        // table dirs receive files only after a claim, so tables
+        // without any marker mean the markers of a real corpus were
+        // lost; a first commit that died while staging left none
+        require(Tables.forall(t => !f.exists(new Path(s"$root/$t"))),
+          s"state tables exist under $root but no commit marker does — " +
+            "refusing to treat a damaged state root as an empty corpus")
+        None
+      case Some(m) =>
+        val latest = Pointer.read(f, latestPath(root)).map(_.toLong)
+        require(latest.forall(_ <= m), s"LATEST names v${latest.get} under $root " +
+          s"but the newest commit marker is v$m — refusing to roll the state back")
+        if (!latest.contains(m)) { // claimed but the flip crashed: heal forward
+          (latest.fold(0L)(_ + 1L) to m)
+            .foreach(v => materialize(spark, root, v, marker(spark, root, v)._1))
+          writeLatest(spark, root, m)
+        }
+        Some(m)
+    }
   }
 
-  private def writePartition(df: DataFrame, table: String, root: String,
-                             v: Long, cols: Seq[String]): Unit =
-    df.select(cols.map(col): _*)
-      .write.mode("overwrite").parquet(s"$root/$table/ingest=$v")
+  private def writeLatest(spark: SparkSession, root: String, v: Long): Unit =
+    Pointer.flip(fs(spark, root), latestPath(root), v.toString)
 
-  private def commitVersion(spark: SparkSession, root: String, v: Long,
-                            hashes: DataFrame, sigs: DataFrame,
-                            shingles: DataFrame, manifest: DataFrame,
-                            dead: DataFrame, labels: DataFrame): Long = {
-    val f = fs(spark, root)
-    // the `.init` sentinel lands BEFORE any artifact: a crash
-    // mid-commit then reads as an interrupted commit, not as
-    // corruption — see latestVersion. Deleted after the marker, so a
-    // committed corpus whose markers are later lost stays loud.
-    f.mkdirs(new Path(s"$root/commits"))
-    f.create(initSentinel(root), true).close()
-    // heal any mid-swap table root a crashed compact() left behind —
-    // writing into a recreated root would make a LATER recover()
-    // delete the moved-aside corpus state (the readTable hazard,
-    // guarded on the write path too)
-    Tables.foreach(t => DirSwap.recover(f, s"$root/$t"))
-    writePartition(hashes, "hashes", root, v, Seq("h"))
-    writePartition(sigs, "sigs", root, v, Seq("id", "hs", "sig"))
-    writePartition(shingles, "shingles", root, v, Seq("doc_id", "split", "h"))
-    writePartition(manifest, "manifest", root, v,
-      Seq("split", "lang", "bin", "doc_id", "n_tokens"))
-    writePartition(dead, "dead", root, v, Seq("doc_id"))
-    labels.select(col("id"), col("comp"))
-      .write.mode("overwrite").parquet(s"$root/labels/v=$v")
-    fs(spark, root).create(markerPath(root, v), true).close() // commit point for recovery
-    f.delete(initSentinel(root), false) // marker landed: the sentinel may not outlive it
-    writeLatest(spark, root, v)
-    v
-  }
-
-  /** Commit one ingest's DELTA as version latest+1: the three witness
-    * deltas and the accepted manifest rows append as new `ingest`
-    * partitions, this ingest's tombstoned doc ids land in `dead`, and
-    * only `labels` (small) is written in full. Commit bytes are
-    * O(batch), independent of corpus size — StateCommitSpec measures
-    * exactly that. */
-  def commitDelta(spark: SparkSession, delta: IngestDelta, root: String): Long = {
-    val v = latestVersion(spark, root).getOrElse(-1L) + 1L
-    commitVersion(spark, root, v,
-      hashes = delta.stateDelta.newHashes,
-      sigs = delta.stateDelta.newSigs,
-      shingles = delta.stateDelta.newShingles,
-      manifest = delta.accepted,
-      dead = delta.tombstones.select(col("doc_id")),
-      labels = delta.state.labels)
-  }
-
-  // ---- optimistic concurrency (the rows-90/93 Delta-story close) ----
-
-  private def stagingDir(root: String, token: String) = s"$root/staging/$token"
-
-  /** Atomically claim version `v` for the writer holding `token`:
-    * create the commit marker with overwrite = false — exactly one
-    * writer wins (the filesystem's create-if-absent is the fence; on
-    * HDFS and precondition-capable object stores it is atomic, on a
-    * raw local FS it is the strongest primitive available). The
-    * marker body carries the winner's staging token so a crash
-    * between claim and materialization is completed by any later
-    * reader ([[materializePending]]). */
+  /** Atomically claim version `v`: the marker body (staging token and
+    * base) goes to a writer-private tmp, then is RENAMED into place —
+    * the marker becomes visible with its body complete, and Hadoop
+    * rename refuses an existing destination, so the rename is the
+    * fence: exactly one writer wins a version number (atomic on HDFS
+    * and precondition-capable object stores; on a raw local FS the
+    * strongest primitive available). */
   private def claim(spark: SparkSession, root: String, v: Long,
-                    token: String): Boolean = {
+                    token: String, base: Long): Boolean = {
     val f = fs(spark, root)
     f.mkdirs(new Path(s"$root/commits"))
-    // token written to a writer-private tmp, then RENAMED into place:
-    // the marker becomes visible with its body complete (a created-
-    // then-written marker has a window where a concurrent reader sees
-    // an EMPTY body, misreads it as a legacy marker, and heals LATEST
-    // past a version whose artifacts are still staged). Hadoop rename
-    // refuses an existing destination, so the rename IS the fence.
     val tmp = new Path(s"$root/commits/.claim.$token")
     val out = f.create(tmp, true)
-    try out.write(token.getBytes("UTF-8")) finally out.close()
+    try out.write(s"$token $base".getBytes("UTF-8")) finally out.close()
     val won = try !f.exists(markerPath(root, v)) &&
       f.rename(tmp, markerPath(root, v))
     catch { case _: java.io.IOException => false }
@@ -233,24 +175,18 @@ object StateStore {
     won
   }
 
-  /** Finish a claimed-but-unmaterialized commit: rename the staged
-    * artifact dirs named by marker v's token into their final
-    * homes. Idempotent (renames only missing targets); a no-op for
-    * legacy empty-body markers and already-finished commits. */
-  private def materializePending(spark: SparkSession, root: String, v: Long): Unit = {
+  /** Move the staged artifact dirs of claimed version `v` into their
+    * final homes — by the committing writer, or by a reader healing a
+    * writer that crashed after its claim. Idempotent: a finished
+    * version has no staging dir. */
+  private def materialize(spark: SparkSession, root: String, v: Long,
+                          token: String): Unit = {
     val f = fs(spark, root)
-    val mp = markerPath(root, v)
-    if (!f.exists(mp)) return
-    val in = f.open(mp)
-    val token = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    if (token.isEmpty) return // legacy single-writer marker
     val stage = new Path(stagingDir(root, token))
     if (!f.exists(stage)) return // already materialized
-    (Tables :+ "labels").foreach { t =>
-      val src = new Path(s"${stagingDir(root, token)}/$t")
-      val dst = new Path(
-        if (t == "labels") s"$root/labels/v=$v" else s"$root/$t/ingest=$v")
+    Artifacts.foreach { t =>
+      val src = new Path(stage, t)
+      val dst = partitionPath(root, t, v)
       if (f.exists(src)) {
         // src AND dst both present = a rename-as-copy crashed mid-copy
         // (a COMPLETED rename deletes its source, on any FS), so dst is
@@ -266,98 +202,136 @@ object StateStore {
     f.delete(stage, true)
   }
 
+  /** The one routine that writes a version: stage `artifacts` (table
+    * name -> rows) under a writer-private dir, claim `v` with `base`
+    * recorded in its marker, materialize, flip LATEST. A base version
+    * (`base == v`) then deletes the partitions below it. Returns false,
+    * with the staging discarded, when another writer claimed `v`
+    * first. */
+  private def commitStaged(spark: SparkSession, root: String, v: Long, base: Long,
+                           artifacts: Seq[(String, DataFrame)]): Boolean = {
+    val f = fs(spark, root)
+    val token = java.util.UUID.randomUUID().toString
+    val stage = stagingDir(root, token)
+    artifacts.foreach { case (t, df) =>
+      df.select(schemas(t).fieldNames.map(col): _*)
+        .write.mode("overwrite").parquet(s"$stage/$t")
+    }
+    if (!claim(spark, root, v, token, base)) {
+      f.delete(new Path(stage), true)
+      return false
+    }
+    materialize(spark, root, v, token)
+    writeLatest(spark, root, v)
+    if (base == v) Artifacts.foreach { t =>
+      val prefix = partitionKey(t) + "="
+      f.listStatus(new Path(s"$root/$t")).map(_.getPath)
+        .filter(p => p.getName.startsWith(prefix) && p.getName.drop(prefix.length).toLong < base)
+        .foreach(p => f.delete(p, true))
+    }
+    true
+  }
+
+  /** The base a delta on top of `cur` extends (0 on an empty root,
+    * where the delta is itself the base v0). */
+  private def baseOf(spark: SparkSession, root: String, cur: Option[Long]): Long =
+    cur.fold(0L)(marker(spark, root, _)._2)
+
+  private def deltaArtifacts(delta: IngestDelta): Seq[(String, DataFrame)] = Seq(
+    "hashes" -> delta.stateDelta.newHashes,
+    "sigs" -> delta.stateDelta.newSigs,
+    "shingles" -> delta.stateDelta.newShingles,
+    "manifest" -> delta.accepted,
+    "dead" -> delta.tombstones,
+    "labels" -> delta.state.labels)
+
+  /** Commit `st` in full as base version `v`; its dead set is already
+    * applied, so the base's `dead` partition is empty. */
+  private def commitBase(spark: SparkSession, root: String, v: Long,
+                         st: CorpusState): Long = {
+    val noDead = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemas("dead"))
+    val artifacts = Seq("hashes" -> st.hashes, "sigs" -> st.sigs,
+      "shingles" -> st.shingles, "manifest" -> st.manifest,
+      "dead" -> noDead, "labels" -> st.labels)
+    if (!commitStaged(spark, root, v, base = v, artifacts)) lostRace(root, v)
+    v
+  }
+
+  private def lostRace(root: String, v: Long): Nothing =
+    throw new java.util.ConcurrentModificationException(
+      s"version $v under $root was committed by another writer")
+
+  /** Commit one ingest's DELTA as version latest+1: the three witness
+    * deltas and the accepted manifest rows append as new `ingest`
+    * partitions, this ingest's tombstoned doc ids land in `dead`, and
+    * only `labels` (small) is written in full. Commit bytes are
+    * O(batch), independent of corpus size — StateCommitSpec measures
+    * exactly that. Fails if another writer commits first; use
+    * [[commitDeltaOptimistic]] to recompute instead. */
+  def commitDelta(spark: SparkSession, delta: IngestDelta, root: String): Long = {
+    val cur = latestVersion(spark, root)
+    val v = cur.fold(0L)(_ + 1L)
+    if (!commitStaged(spark, root, v, baseOf(spark, root, cur), deltaArtifacts(delta)))
+      lostRace(root, v)
+    v
+  }
+
   /** Optimistic conditional commit: compute the delta against the
-    * freshest state, stage its artifacts under a writer-private dir,
-    * then CLAIM latest+1 atomically — if another writer advanced the
-    * corpus first, the claim fails, the staging is discarded, and the
-    * delta is RECOMPUTED from the new state (`deltaOf` receives the
-    * freshly loaded state each attempt, None for an empty root). Lost
-    * updates are impossible by construction: a version number is
-    * committed by exactly one writer, and every retry re-reads the
-    * winner's state before recomputing. Returns the committed
-    * version; fails after `maxAttempts` lost races. */
+    * freshest state, then commit it as latest+1 — if another writer
+    * advanced the corpus first, the claim fails, the staging is
+    * discarded, and the delta is RECOMPUTED from the new state
+    * (`deltaOf` receives the freshly loaded state each attempt, None
+    * for an empty root). Lost updates are impossible by construction:
+    * a version number is committed by exactly one writer, and every
+    * retry re-reads the winner's state before recomputing. Returns the
+    * committed version; fails after `maxAttempts` lost races. */
   def commitDeltaOptimistic(spark: SparkSession, root: String,
                             maxAttempts: Int = 5)
                            (deltaOf: Option[CorpusState] => IngestDelta): Long = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    val f = fs(spark, root)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
       val cur = latestVersion(spark, root)
-      val target = cur.getOrElse(-1L) + 1L
+      val target = cur.fold(0L)(_ + 1L)
       val delta = deltaOf(cur.map(v => loadVersion(spark, root, v)))
-      val token = java.util.UUID.randomUUID().toString
-      val stage = stagingDir(root, token)
-      delta.stateDelta.newHashes.select(col("h"))
-        .write.mode("overwrite").parquet(s"$stage/hashes")
-      delta.stateDelta.newSigs.select(col("id"), col("hs"), col("sig"))
-        .write.mode("overwrite").parquet(s"$stage/sigs")
-      delta.stateDelta.newShingles.select(col("doc_id"), col("split"), col("h"))
-        .write.mode("overwrite").parquet(s"$stage/shingles")
-      delta.accepted
-        .select(col("split"), col("lang"), col("bin"), col("doc_id"), col("n_tokens"))
-        .write.mode("overwrite").parquet(s"$stage/manifest")
-      delta.tombstones.select(col("doc_id"))
-        .write.mode("overwrite").parquet(s"$stage/dead")
-      delta.state.labels.select(col("id"), col("comp"))
-        .write.mode("overwrite").parquet(s"$stage/labels")
-      if (claim(spark, root, target, token)) {
-        Tables.foreach(t => DirSwap.recover(f, s"$root/$t"))
-        materializePending(spark, root, target)
-        writeLatest(spark, root, target)
+      if (commitStaged(spark, root, target, baseOf(spark, root, cur), deltaArtifacts(delta)))
         return target
-      }
-      // lost the race: discard the staging, reload, recompute
-      f.delete(new Path(stage), true)
     }
     throw new java.util.ConcurrentModificationException(
       s"lost the commit race $maxAttempts times under $root")
   }
 
-  /** Commit a freshly bootstrapped corpus as the first version: the
-    * full state IS the delta of an initial ingest. */
-  def commitBootstrap(spark: SparkSession, state: CorpusState, root: String): Long = {
-    val v = latestVersion(spark, root).getOrElse(-1L) + 1L
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schemas("dead"))
-    commitVersion(spark, root, v,
-      hashes = state.hashes, sigs = state.sigs, shingles = state.shingles,
-      manifest = state.manifest, dead = empty, labels = state.labels)
-  }
+  /** Commit a freshly bootstrapped corpus as a base version (v0 on an
+    * empty root). */
+  def commitBootstrap(spark: SparkSession, state: CorpusState, root: String): Long =
+    commitBase(spark, root, latestVersion(spark, root).fold(0L)(_ + 1L), state)
 
   private def readTable(spark: SparkSession, root: String, table: String,
-                        v: Long): DataFrame = {
+                        base: Long, v: Long): DataFrame = {
     val schema = schemas(table).add(StructField("ingest", LongType))
     val p = s"$root/$table"
-    val f = fs(spark, root)
-    // a compact() crash inside DirSwap.swap leaves the table root
-    // moved aside — heal it HERE, on the read path, not only on the
-    // next compaction: treating a mid-swap root as an empty table
-    // would silently re-admit every shipped doc, and the next commit
-    // would recreate the root so a later recover() DELETES the
-    // moved-aside corpus state
-    DirSwap.recover(f, p)
-    require(f.exists(new Path(p)),
+    require(fs(spark, root).exists(new Path(p)),
       s"state table $p is missing for committed version $v — refusing to " +
         "read a damaged state root as an empty table")
     spark.read.schema(schema).parquet(p)
-      .filter(col("ingest") <= v) // partition-pruned: old deltas only
+      .filter(col("ingest").between(base, v)) // partition-pruned
       .drop("ingest")
   }
 
-  /** Reconstruct the state as of version `v` (time travel): pruned
-    * delta scans + one anti-join of the accumulated dead set onto
-    * shingles and manifest. */
+  /** Reconstruct the state as of version `v` (time travel back to the
+    * latest base): pruned delta scans + one anti-join of the
+    * accumulated dead set onto shingles and manifest. */
   def loadVersion(spark: SparkSession, root: String, v: Long): CorpusState = {
-    val dead = readTable(spark, root, "dead", v)
+    val base = marker(spark, root, v)._2
+    val dead = readTable(spark, root, "dead", base, v)
     CorpusState(
-      hashes = readTable(spark, root, "hashes", v),
-      sigs = readTable(spark, root, "sigs", v),
+      hashes = readTable(spark, root, "hashes", base, v),
+      sigs = readTable(spark, root, "sigs", base, v),
       labels = spark.read.schema(schemas("labels")).parquet(s"$root/labels/v=$v"),
-      shingles = readTable(spark, root, "shingles", v)
+      shingles = readTable(spark, root, "shingles", base, v)
         .join(dead, Seq("doc_id"), "left_anti"),
-      manifest = readTable(spark, root, "manifest", v)
+      manifest = readTable(spark, root, "manifest", base, v)
         .join(dead, Seq("doc_id"), "left_anti"))
   }
 
@@ -365,53 +339,25 @@ object StateStore {
   def load(spark: SparkSession, root: String): Option[CorpusState] =
     latestVersion(spark, root).map(v => loadVersion(spark, root, v))
 
-  /** Consolidate the accumulated delta partitions: rewrite each witness
-    * table's live rows (as of LATEST) into a single `ingest=<latest>`
-    * partition, apply `dead` physically, and drop superseded label
-    * versions. Reads at LATEST are unchanged; time travel BEFORE the
-    * compaction point is given up — the same trade a Delta VACUUM
-    * makes. Swaps are crash-safe ([[DirSwap]]). Returns the compacted
-    * version. */
+  /** Consolidate the accumulated delta partitions: commit the live
+    * state as of LATEST, with `dead` applied physically, as a new base
+    * version LATEST+1, which then deletes every partition and label
+    * version below it. Reads at the new LATEST see the same state;
+    * time travel before it is given up — the same trade a Delta VACUUM
+    * makes. Returns the version it committed. */
   def compact(spark: SparkSession, root: String): Long = {
     val v = latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"nothing committed under $root"))
-    val st = loadVersion(spark, root, v)
-    val f = fs(spark, root)
-    val rewrite: Seq[(String, DataFrame, Seq[String])] = Seq(
-      ("hashes", st.hashes, Seq("h")),
-      ("sigs", st.sigs, Seq("id", "hs", "sig")),
-      ("shingles", st.shingles, Seq("doc_id", "split", "h")),
-      ("manifest", st.manifest, Seq("split", "lang", "bin", "doc_id", "n_tokens")))
-    rewrite.foreach { case (table, df, cols) =>
-      val tableRoot = s"$root/$table"
-      DirSwap.recover(f, tableRoot)
-      df.select(cols.map(col): _*)
-        .write.mode("overwrite").parquet(s"${DirSwap.tmpDir(tableRoot)}/ingest=$v")
-      DirSwap.swap(f, tableRoot)
-    }
-    // dead is now applied physically; empty the table the same way
-    val deadRoot = s"$root/dead"
-    DirSwap.recover(f, deadRoot)
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemas("dead"))
-      .write.mode("overwrite").parquet(s"${DirSwap.tmpDir(deadRoot)}/ingest=$v")
-    DirSwap.swap(f, deadRoot)
-    // labels: drop superseded versions (markers stay — numbering continues)
-    val labelsDir = new Path(s"$root/labels")
-    f.listStatus(labelsDir).map(_.getPath)
-      .filter(p => p.getName.startsWith("v=") && p.getName.drop(2).toLong < v)
-      .foreach(p => f.delete(p, true))
-    v
+    commitBase(spark, root, v + 1L, loadVersion(spark, root, v))
   }
 
   /** Compact when the accumulated delta-partition count crosses
     * `maxDeltas` — the debt policy an ingest loop calls after each
     * commit. Debt is measured from one directory listing; no Spark
     * job. Returns Some(version) when compaction ran. */
-  def maybeCompact(spark: SparkSession, root: String,
-                   maxDeltas: Int = 16): Option[Long] = {
+  def maybeCompact(spark: SparkSession, root: String, maxDeltas: Int): Option[Long] = {
     val f = fs(spark, root)
     val hashesDir = new Path(s"$root/hashes")
-    DirSwap.recover(f, s"$root/hashes") // heal a mid-swap root before counting
     if (!f.exists(hashesDir)) None
     else {
       val deltas = f.listStatus(hashesDir).count(_.getPath.getName.startsWith("ingest="))

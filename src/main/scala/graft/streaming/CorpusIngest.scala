@@ -15,14 +15,18 @@ import graft.sources.{ShardStore, StateStore}
   * decontamination, packing — landing accepted rows and tombstones in
   * the [[ShardStore]] and committing the next state version.
   *
-  * State commits are VERSIONED DELTAS ([[StateStore]]): a batch appends
-  * its O(batch) witness deltas as new `ingest=<v>` partitions (never
-  * touching the partitions it is concurrently reading) and flips the
-  * `LATEST` pointer last — the manifest-pointer pattern, which also
-  * gives state time travel for free. Commit I/O is independent of how
-  * large the corpus has grown (StateCommitSpec measures it); a lost
-  * LATEST is recovered from the per-version commit markers instead of
-  * silently bootstrapping an empty corpus.
+  * Both stores keep every change as a version behind a pointer. A
+  * batch's state commit is a VERSIONED DELTA ([[StateStore]]): its
+  * O(batch) witness deltas are staged, the next version is claimed,
+  * the staged dirs become new `ingest=<v>` partitions (never touching
+  * the partitions it is concurrently reading) and the `LATEST` pointer
+  * flips last — which also gives state time travel for free. Commit
+  * I/O is independent of how large the corpus has grown
+  * (StateCommitSpec measures it); a lost LATEST is recovered from the
+  * per-version commit markers instead of silently bootstrapping an
+  * empty corpus. State compaction commits a new base version the same
+  * way; shard compaction flips `_current` to a rewritten `v<N>`
+  * ([[ShardStore]]).
   *
   * Failure semantics (bare parquet, no transactional format):
   * foreachBatch is at-least-once, and a REPLAYED batch whose commit
@@ -32,8 +36,7 @@ import graft.sources.{ShardStore, StateStore}
   * limit of bare parquet; with content addressing the STATE never
   * corrupts either way, because every replayed document is an exact
   * dup of itself and the pipeline drops it (`runIncremental` replays
-  * are structural no-ops, and a replayed state commit overwrites its
-  * own partition). At deployment scale the store graduates to
+  * are structural no-ops). At deployment scale the store graduates to
   * Delta/Iceberg and the window closes.
   */
 object CorpusIngest {

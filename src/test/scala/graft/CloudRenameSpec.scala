@@ -3,11 +3,11 @@ package graft
 import java.io.IOException
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TrainingPipeline
-import graft.sources.{DirSwap, StateStore}
+import graft.sources.StateStore
 
 /** An object-store-semantics FileSystem: rename is COPY-THEN-DELETE
   * (file at a time, the S3/GCS reality — no atomic directory rename
@@ -58,15 +58,15 @@ object ObjectStoreFs {
   * BOTH sides present, one partial. These tests prove the healing
   * paths against exactly that:
   *
-  *  - [[DirSwap.recover]]'s superset rule: copy-then-delete ordering
-  *    means the (relpath, length)-superset side is the complete one —
-  *    each crash window is constructed literally and recovery asserted;
-  *  - StateStore's materializePending: src-and-dst both present means
+  *  - StateStore's materialize step: src-and-dst both present means
   *    the dst is a partial copy (a completed rename deletes its
   *    source) — it is dropped and re-renamed, never skipped;
-  *  - the full optimistic-commit lifecycle and the classic interleaved
-  *    lost-update run end-to-end over the `graftoss:` scheme, parquet
-  *    committer renames included. */
+  *  - the full commit lifecycle (compaction included) and the classic
+  *    interleaved lost-update run end-to-end over the `graftoss:`
+  *    scheme, parquet committer renames included.
+  *
+  * StateCommitSpec runs the protocol's crash windows over `graftoss:`
+  * too. */
 class CloudRenameSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -86,72 +86,6 @@ class CloudRenameSpec extends AnyFunSuite {
     (1 to 3).map(i => (base + i, "en", filler(s"$tag$i")))
       .toDF("doc_id", "lang", "text")
 
-  // ---- DirSwap superset-rule recovery (crash states built literally) ----
-
-  private def mkFiles(f: FileSystem, dir: Path, files: Map[String, String]): Unit = {
-    f.mkdirs(dir)
-    files.foreach { case (n, body) =>
-      val out = f.create(new Path(dir, n), true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
-  }
-  private def names(f: FileSystem, dir: Path): Set[String] =
-    f.listStatus(dir).map(_.getPath.getName).toSet
-
-  private def swapState(rootFiles: Option[Map[String, String]],
-                        tmpFiles: Option[Map[String, String]],
-                        trashFiles: Option[Map[String, String]]): (FileSystem, String) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_dirswap").toString
-    val root = s"$base/table"
-    val f = new Path(root).getFileSystem(conf)
-    rootFiles.foreach(m => mkFiles(f, new Path(root), m))
-    tmpFiles.foreach(m => mkFiles(f, new Path(DirSwap.tmpDir(root)), m))
-    trashFiles.foreach(m => mkFiles(f, new Path(root + "__swap_trash"), m))
-    (f, root)
-  }
-
-  private val old3 = Map("a" -> "aaa", "b" -> "bb", "c" -> "c")
-  private val new2 = Map("x" -> "xxxx", "y" -> "yy")
-
-  test("recover: rename(root->trash) crashed mid-DELETE — trash is complete, restore it") {
-    val (f, root) = swapState(
-      rootFiles = Some(old3.view.filterKeys(_ == "a").toMap), // partial remains
-      tmpFiles = Some(new2), trashFiles = Some(old3))
-    DirSwap.recover(f, root)
-    assert(names(f, new Path(root)) == Set("a", "b", "c")) // old data intact
-    assert(!f.exists(new Path(DirSwap.tmpDir(root))))
-    assert(!f.exists(new Path(root + "__swap_trash")))
-  }
-
-  test("recover: rename(root->trash) crashed mid-COPY — root is complete, keep it") {
-    val (f, root) = swapState(
-      rootFiles = Some(old3),
-      tmpFiles = Some(new2),
-      trashFiles = Some(old3.view.filterKeys(_ == "a").toMap)) // partial copy
-    DirSwap.recover(f, root)
-    assert(names(f, new Path(root)) == Set("a", "b", "c"))
-    assert(!f.exists(new Path(DirSwap.tmpDir(root))))
-    assert(!f.exists(new Path(root + "__swap_trash")))
-  }
-
-  test("recover: rename(tmp->root) crashed mid-COPY — the swap committed forward, finish it") {
-    val (f, root) = swapState(
-      rootFiles = Some(new2.view.filterKeys(_ == "x").toMap), // partial new root
-      tmpFiles = Some(new2), trashFiles = Some(old3))
-    DirSwap.recover(f, root)
-    assert(names(f, new Path(root)) == Set("x", "y")) // rewrite promoted
-    assert(!f.exists(new Path(DirSwap.tmpDir(root))))
-    assert(!f.exists(new Path(root + "__swap_trash")))
-  }
-
-  test("recover: normal post-swap trash-delete window — new root kept, trash dropped") {
-    val (f, root) = swapState(
-      rootFiles = Some(new2), tmpFiles = None, trashFiles = Some(old3))
-    DirSwap.recover(f, root)
-    assert(names(f, new Path(root)) == Set("x", "y"))
-    assert(!f.exists(new Path(root + "__swap_trash")))
-  }
-
   // ---- the protocols end-to-end over copy-rename ----
 
   test("StateStore bootstrap/delta/load/compact lifecycle over graftoss: (rename-as-copy)") {
@@ -163,8 +97,8 @@ class CloudRenameSpec extends AnyFunSuite {
     val delta = TrainingPipeline.runIncremental(st.get, batchOf(100L, "bw"))
     val v1 = StateStore.commitDelta(spark, delta, root)
     assert(v1 == v0 + 1)
-    val vC = StateStore.compact(spark, root) // DirSwap over copy-rename
-    assert(vC == v1)
+    val vC = StateStore.compact(spark, root) // a new version over copy-rename
+    assert(vC == v1 + 1 && StateStore.latestVersion(spark, root).contains(vC))
     val live = StateStore.load(spark, root).get.manifest
       .select($"doc_id").as[Long].collect().toSet
     assert(live == ((1 to 12).map(_.toLong) ++ (1 to 3).map(100L + _)).toSet)
@@ -211,7 +145,7 @@ class CloudRenameSpec extends AnyFunSuite {
     FileUtil.copy(f, new Path(s"$root/labels/v=1"),
       f, new Path(s"$root/staging/$token/labels"), false, conf)
     val out = f.create(new Path(s"$root/commits/v2"), false)
-    out.write(token.getBytes("UTF-8")); out.close()
+    out.write(s"$token 0".getBytes("UTF-8")); out.close() // body: token, base
 
     // first healer crashes after ONE file copy: its current table dst
     // is left PARTIAL with the staged src still present

@@ -67,9 +67,9 @@ class SchemeAgnosticSpec extends AnyFunSuite {
       .select($"doc_id").as[Long].collect().toSet
     assert(live == ((1 to 24).map(_.toLong) ++ (1 to 4).map(100L + _)).toSet)
 
-    // compact rewrites live state in place (DirSwap) at the same LATEST
+    // compact commits the live state as the next version
     val vC = StateStore.compact(spark, root)
-    assert(vC == v1)
+    assert(vC == v1 + 1 && StateStore.latestVersion(spark, root).contains(vC))
     assert(StateStore.load(spark, root).get.manifest.count() == 28)
   }
 

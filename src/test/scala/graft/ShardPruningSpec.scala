@@ -17,10 +17,11 @@ class ShardPruningSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** Files whose [min(bin), max(bin)] range admits `bin = b` — exactly
-    * the row groups a stats-pruning reader must open. */
-  private def filesAdmitting(root: String, b: Long): (Long, Long) = {
-    val perFile = spark.read.parquet(ShardStore.dataDir(spark, root))
+  /** Files under data dir `dir` whose [min(bin), max(bin)] range admits
+    * `bin = b` — exactly the row groups a stats-pruning reader must
+    * open. */
+  private def filesAdmitting(dir: String, b: Long): (Long, Long) = {
+    val perFile = spark.read.parquet(dir)
       .filter($"split" === "train" && $"lang" === "en")
       .select($"bin", input_file_name().as("f"))
       .groupBy($"f").agg(min($"bin").as("lo"), max($"bin").as("hi"))
@@ -36,10 +37,10 @@ class ShardPruningSpec extends AnyFunSuite {
     val cfg = TrainingPipeline.Config(packCapacity = 256L)
     val manifest = TrainingPipeline.run(docs, cfg)
     val base = java.nio.file.Files.createTempDirectory("graft_prune").toString
-    val clustered = base + "/clustered"
-    val scrambled = base + "/scrambled"
+    val scrambled = base + "/scrambled" // a bare parquet dir, not a shard store
 
-    ShardStore.init(docs, manifest, clustered, maxRecordsPerFile = 8L)
+    ShardStore.init(docs, manifest, base + "/clustered", maxRecordsPerFile = 8L)
+    val clustered = ShardStore.dataDir(spark, base + "/clustered")
     // same rows, same file-size bound, clustering destroyed: every file
     // spans the full bin range, so min/max stats can exclude nothing.
     // The sort leads with the partition columns ON PURPOSE — it then
@@ -60,7 +61,7 @@ class ShardPruningSpec extends AnyFunSuite {
     // files' min/max too, proving nothing about clustering
     val probe = bins / 2
 
-    def q(root: String) = spark.read.parquet(ShardStore.dataDir(spark, root))
+    def q(dir: String) = spark.read.parquet(dir)
       .filter($"split" === "train" && $"lang" === "en" && $"bin" === probe)
 
     // identical answers from both layouts

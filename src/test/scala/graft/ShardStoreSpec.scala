@@ -135,35 +135,40 @@ class ShardStoreSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("not retained"))
   }
 
-  test("a damaged root (crash mid-move) is healed; no crash point loses the table") {
+  test("a root with no _current and no committed version fails loudly") {
     val docs = Seq((1L, "en", filler("ra")), (2L, "en", filler("rb")))
       .toDF("doc_id", "lang", "text")
     val st = TrainingPipeline.bootstrapState(docs)
-    val root = java.nio.file.Files.createTempDirectory("graft_rc").toString + "/shards"
-    ShardStore.init(docs, st.manifest, root)
-    val before = ShardStore.read(spark, root).select($"doc_id").as[Long].collect().sorted
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    val f = new org.apache.hadoop.fs.Path("/")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    def assertLoud(root: String): Unit = {
+      val r = intercept[IllegalArgumentException] { ShardStore.read(spark, root) }
+      assert(r.getMessage.contains("not a shard table"), r.getMessage)
+      val a = intercept[IllegalArgumentException] {
+        ShardStore.append(docs, st.manifest, root)
+      }
+      assert(a.getMessage.contains("not a shard table"), a.getMessage)
+    }
 
-    // crash window 1: staged rewrite complete, old root moved aside,
-    // process died before the rewrite was promoted — read() must roll
-    // the complete rewrite forward, not see a missing table
-    org.apache.hadoop.fs.FileUtil.copy(f, p(root), f, p(root + "__swap_tmp"), false, conf)
-    assert(f.rename(p(root), p(root + "__swap_trash")))
-    assert(!f.exists(p(root)), "simulated crash: root is gone")
-    val healed = ShardStore.read(spark, root).select($"doc_id").as[Long].collect().sorted
-    assert(healed.sameElements(before), "rolled-forward table differs")
-    assert(!f.exists(p(root + "__swap_tmp")) && !f.exists(p(root + "__swap_trash")),
-      "heal must clean up the swap artifacts")
+    // a table whose pointer and commit marker were both lost: its v0
+    // files are still there, but nothing says they are complete
+    val damaged = java.nio.file.Files.createTempDirectory("graft_rc").toString + "/shards"
+    ShardStore.init(docs, st.manifest, damaged)
+    assert(f.delete(p(s"$damaged/_current"), false))
+    assert(f.delete(p(s"$damaged/v0/_SUCCESS"), false))
+    assertLoud(damaged)
 
-    // crash window 2: died mid-rewrite (incomplete tmp, root intact) —
-    // the next compact drops the stale tmp and succeeds
-    f.mkdirs(p(root + "__swap_tmp/junk"))
-    ShardStore.compact(spark, root)
-    val after = ShardStore.read(spark, root).select($"doc_id").as[Long].collect().sorted
-    assert(after.sameElements(before))
-    assert(!f.exists(p(root + "__swap_tmp")))
+    // parquet files straight under the root: not this store's layout
+    val bare = java.nio.file.Files.createTempDirectory("graft_rc_bare").toString + "/shards"
+    st.manifest.write.parquet(bare)
+    assertLoud(bare)
+
+    // a root that does not exist yet is created by its first append
+    val fresh = java.nio.file.Files.createTempDirectory("graft_rc_new").toString + "/shards"
+    ShardStore.append(docs, st.manifest, fresh)
+    assert(ShardStore.versions(spark, fresh) == Seq(0L))
+    assert(ShardStore.read(spark, fresh).count() == 2)
   }
 
   test("counted maybeCompact runs zero Spark jobs below the debt threshold") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TrainingPipeline
@@ -114,7 +114,9 @@ class StateCommitSpec extends AnyFunSuite {
 
     assert(StateStore.maybeCompact(spark, root, maxDeltas = 16).isEmpty,
       "no compaction below the debt threshold")
-    assert(StateStore.maybeCompact(spark, root, maxDeltas = 2).isDefined)
+    val vC = StateStore.maybeCompact(spark, root, maxDeltas = 2)
+    assert(vC.contains(3L) && StateStore.latestVersion(spark, root) == vC,
+      "compaction commits the next version and LATEST names it")
     assert(deltaParts == 1, "compaction must consolidate the delta partitions")
     val after = StateStore.load(spark, root).get.manifest
       .select($"doc_id").as[Long].collect().sorted.toSeq
@@ -122,61 +124,133 @@ class StateCommitSpec extends AnyFunSuite {
     // versions keep counting past a compaction
     val d = TrainingPipeline.runIncremental(StateStore.load(spark, root).get,
       Seq((4001L, "en", filler("post"))).toDF("doc_id", "lang", "text"))
-    assert(StateStore.commitDelta(spark, d, root) == 3L)
+    assert(StateStore.commitDelta(spark, d, root) == 4L)
   }
 
-  test("a compact() crash mid-swap heals on the READ path, never an empty table") {
+  // ---- crash windows of the one commit protocol, built literally, over
+  // a local FS and over rename-as-copy (graftoss:, see CloudRenameSpec) ----
+
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fsOf(root: String) = new Path(root).getFileSystem(conf)
+  private val token = "deadbeef-dead-dead-dead-deaddeadbeef"
+
+  private def newRoot(scheme: String, name: String): String = {
+    conf.set("fs.graftoss.impl", classOf[ObjectStoreFs].getName)
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    (if (scheme == "file") dir else s"$scheme:$dir") + "/state"
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** The version-1 store every compaction window starts from: a
+    * bootstrap and one delta that tombstones doc 2. */
+  private def storeAtV1(root: String): Unit = {
+    val core = (1 to 30).map(i => s"core$i").mkString(" ")
+    def suffixed(tag: String) = core + " " + (1 to 15).map(i => s"$tag$i").mkString(" ")
+    val corpus = Seq((1L, "en", suffixed("alpha")), (2L, "en", suffixed("beta")),
+      (3L, "en", filler("pad"))).toDF("doc_id", "lang", "text")
+    StateStore.commitBootstrap(spark, TrainingPipeline.bootstrapState(corpus), root)
+    val d = TrainingPipeline.runIncremental(StateStore.load(spark, root).get,
+      Seq((10L, "en", core), (11L, "en", filler("new"))).toDF("doc_id", "lang", "text"))
+    assert(StateStore.commitDelta(spark, d, root) == 1L && d.tombstones.count() == 1)
+  }
+
+  /** Rows of every live table, sorted and with duplicates kept, so a
+    * doubled or half-copied partition shows. */
+  private def live(root: String): Seq[Seq[String]] = {
+    val st = StateStore.load(spark, root).get
+    Seq(rows(st.manifest.select("doc_id", "split", "lang", "bin", "n_tokens")),
+      rows(st.shingles.select("doc_id", "split", "h")), rows(st.hashes),
+      rows(st.sigs.select("id")), rows(st.labels))
+  }
+
+  for (scheme <- Seq("file", "graftoss")) {
+    test(s"crash (a) over $scheme: first commit dies while staging; replay commits v0") {
+      val root = newRoot(scheme, "graft_sc_a")
+      val st = TrainingPipeline.bootstrapState(corpusOf(3))
+      // a first commit's half-staged artifacts, never claimed
+      st.hashes.write.parquet(s"$root/staging/$token/hashes")
+      st.sigs.limit(1).write.parquet(s"$root/staging/$token/sigs")
+      if (scheme == "graftoss") { // and a real one, killed by a mid-rename crash
+        ObjectStoreFs.armCrash(afterFiles = 1)
+        try intercept[Exception] { StateStore.commitBootstrap(spark, st, root) }
+        finally ObjectStoreFs.disarm()
+      }
+      assert(StateStore.load(spark, root).isEmpty)
+      assert(StateStore.commitBootstrap(spark, st, root) == 0L)
+      assert(StateStore.load(spark, root).get.manifest
+        .select($"doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    }
+
+    test(s"crash (b) over $scheme: claimed compaction heals forward, state unchanged") {
+      val root = newRoot(scheme, "graft_sc_b")
+      storeAtV1(root)
+      val before = live(root)
+      // a compaction that claimed base v2 and died before materializing:
+      // the full live state staged, the marker names its token and base
+      val st = StateStore.loadVersion(spark, root, 1L)
+      val stage = s"$root/staging/$token"
+      st.hashes.write.parquet(s"$stage/hashes")
+      st.sigs.write.parquet(s"$stage/sigs")
+      st.shingles.write.parquet(s"$stage/shingles")
+      st.manifest.write.parquet(s"$stage/manifest")
+      st.manifest.select($"doc_id").limit(0).write.parquet(s"$stage/dead")
+      st.labels.write.parquet(s"$stage/labels")
+      val f = fsOf(root)
+      val out = f.create(new Path(s"$root/commits/v2"), false)
+      out.write(s"$token 2".getBytes("UTF-8")); out.close()
+      if (scheme == "graftoss") { // the first healer itself dies mid-copy
+        ObjectStoreFs.armCrash(afterFiles = 1)
+        try intercept[Exception] { StateStore.latestVersion(spark, root) }
+        finally ObjectStoreFs.disarm()
+        assert(f.exists(new Path(stage)), "the staged source survives the crash")
+      }
+      assert(StateStore.latestVersion(spark, root).contains(2L))
+      assert(!f.exists(new Path(stage)))
+      assert(live(root) == before, "healed compaction changed the live state")
+    }
+
+    test(s"crash (c) over $scheme: pre-base leftovers stay unread, then get dropped") {
+      val root = newRoot(scheme, "graft_sc_c")
+      storeAtV1(root)
+      val before = live(root)
+      val f = fsOf(root)
+      val tables = Seq("hashes", "sigs", "shingles", "manifest", "dead")
+      def parts(t: String) =
+        f.listStatus(new Path(s"$root/$t")).map(_.getPath.getName).sorted.toSeq
+      // keep copies of the pre-base partitions, compact, put them back:
+      // the flip landed, the deletion never ran
+      val saved = java.nio.file.Files.createTempDirectory("graft_sc_c_saved").toString
+      (tables :+ "labels").foreach(t => FileUtil.copy(f, new Path(s"$root/$t"),
+        fsOf(saved), new Path(s"$saved/$t"), false, conf))
+      assert(StateStore.compact(spark, root) == 2L)
+      (tables :+ "labels").foreach(t => fsOf(saved).listStatus(new Path(s"$saved/$t"))
+        .foreach(p => FileUtil.copy(fsOf(saved), p.getPath, f,
+          new Path(s"$root/$t/${p.getPath.getName}"), false, conf)))
+      assert(parts("manifest") == Seq("ingest=0", "ingest=1", "ingest=2"))
+      assert(live(root) == before, "pre-base partitions leaked into the live state")
+
+      assert(StateStore.compact(spark, root) == 3L)
+      tables.foreach(t => assert(parts(t) == Seq("ingest=3"), s"$t: ${parts(t)}"))
+      assert(parts("labels") == Seq("v=3"))
+      assert(live(root) == before)
+    }
+  }
+
+  test("a missing table root for a committed version fails loudly") {
     val root = java.nio.file.Files.createTempDirectory("graft_sc_heal").toString
     StateStore.commitBootstrap(spark, TrainingPipeline.bootstrapState(corpusOf(5)), root)
-    val before = StateStore.load(spark, root).get.shingles
-      .select($"doc_id").distinct().as[Long].collect().sorted.toSeq
-    assert(before.nonEmpty)
-
-    // simulated crash between DirSwap's two renames on the shingles
-    // table: staged rewrite complete, root moved aside, process died.
-    // Silently reading this as an EMPTY witness table would re-admit
-    // every shipped doc on the next ingest — the read path must roll
-    // the swap forward instead.
-    val conf = spark.sparkContext.hadoopConfiguration
     val f = new Path(root).getFileSystem(conf)
-    val t = s"$root/shingles"
-    org.apache.hadoop.fs.FileUtil.copy(f, new Path(t), f, new Path(t + "__swap_tmp"),
-      false, conf)
-    assert(f.rename(new Path(t), new Path(t + "__swap_trash")))
-    assert(!f.exists(new Path(t)), "simulated crash: shingles root is gone")
 
-    val healed = StateStore.load(spark, root).get.shingles
-      .select($"doc_id").distinct().as[Long].collect().sorted.toSeq
-    assert(healed == before, "healed shingle state differs")
-    assert(!f.exists(new Path(t + "__swap_tmp")) && !f.exists(new Path(t + "__swap_trash")))
-
-    // a table root that is GONE (no swap artifacts) for a committed
+    // a table root that is GONE for a committed
     // version is corruption and must fail loudly, not read as empty
     assert(f.delete(new Path(s"$root/manifest"), true))
     val e = intercept[Exception] { StateStore.load(spark, root).get.manifest.count() }
     assert(e.getMessage.contains("damaged state root"), e.getMessage)
   }
 
-  test("a crash during the FIRST commit is replayable, lost markers stay loud") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sc_first").toString
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = new Path(root).getFileSystem(conf)
-
-    // simulated first-commit crash: the .init sentinel and some
-    // artifacts landed, no marker yet — load() must see an untouched
-    // corpus so the at-least-once replay can run, NOT brick the root
-    // forever
-    f.mkdirs(new Path(s"$root/commits"))
-    f.create(new Path(s"$root/commits/.init"), true).close()
-    corpusOf(3).write.parquet(s"$root/hashes/ingest=0")
-    assert(StateStore.load(spark, root).isEmpty)
-    StateStore.commitBootstrap(spark, TrainingPipeline.bootstrapState(corpusOf(3)), root)
-    assert(StateStore.load(spark, root).isDefined)
-    // the sentinel may not outlive the commit it guarded — its
-    // survival would make the lost-marker damage below read as empty
-    assert(!f.exists(new Path(s"$root/commits/.init")),
-      ".init sentinel must be deleted once the version marker lands")
-
+  test("lost markers on a real corpus stay loud in every shape") {
     // lost markers on a REAL corpus (commits dir itself gone) remain
     // loud corruption
     val root2 = java.nio.file.Files.createTempDirectory("graft_sc_lost").toString
@@ -189,8 +263,7 @@ class StateCommitSpec extends AnyFunSuite {
 
     // the likeliest partial-damage shape: marker FILES (and LATEST)
     // lost while the commits/ directory itself survives — must stay
-    // loud too, not read as an empty corpus (the sentinel, not the
-    // directory, is what licenses the replay)
+    // loud too, not read as an empty corpus
     val root3 = java.nio.file.Files.createTempDirectory("graft_sc_lostm").toString
     StateStore.commitBootstrap(spark, TrainingPipeline.bootstrapState(corpusOf(3)), root3)
     val f3 = new Path(root3).getFileSystem(conf)
@@ -199,5 +272,16 @@ class StateCommitSpec extends AnyFunSuite {
     assert(f3.delete(new Path(s"$root3/LATEST"), false))
     val e3 = intercept[Exception] { StateStore.load(spark, root3) }
     assert(e3.getMessage.contains("no commit marker"), e3.getMessage)
+
+    // the NEWEST marker lost while LATEST survives: healing LATEST back
+    // to the newest surviving marker would silently drop a commit
+    val root4 = java.nio.file.Files.createTempDirectory("graft_sc_lostn").toString
+    StateStore.commitBootstrap(spark, TrainingPipeline.bootstrapState(corpusOf(3)), root4)
+    StateStore.commitDelta(spark,
+      TrainingPipeline.runIncremental(StateStore.load(spark, root4).get, batch), root4)
+    val f4 = new Path(root4).getFileSystem(conf)
+    assert(f4.delete(new Path(s"$root4/commits/v1"), false))
+    val e4 = intercept[Exception] { StateStore.load(spark, root4) }
+    assert(e4.getMessage.contains("refusing to roll the state back"), e4.getMessage)
   }
 }

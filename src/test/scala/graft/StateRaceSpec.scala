@@ -96,7 +96,7 @@ class StateRaceSpec extends AnyFunSuite {
     FileUtil.copy(f, new Path(s"$root/labels/v=1"),
       f, new Path(s"$root/staging/$token/labels"), false, conf)
     val out = f.create(new Path(s"$root/commits/v2"), false)
-    out.write(token.getBytes("UTF-8")); out.close()
+    out.write(s"$token 0".getBytes("UTF-8")); out.close() // body: token, base
 
     // the next reader heals: LATEST advances to 2, artifacts land
     assert(StateStore.latestVersion(spark, root).contains(2L))
