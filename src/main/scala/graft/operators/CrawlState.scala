@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.sources.Tables
+import graft.sources.{Tables, VersionLog}
 
 /** Incremental crawl-frontier state (SURVEY.md §2 row 262) — the
   * crawl family's entry into the "incremental everything" story
@@ -16,11 +17,14 @@ import graft.sources.Tables
   * (skip). This is the state a continuous crawler carries between
   * cycles; without it every cycle refetches the world.
   *
-  * Layout: `root/fetched/v=<n>` — the merged ledger per version
-  * (url_canon, host, last_fetch_day), advanced by
-  * [[commitFetched]]'s max-day merge. The merge is ONE map-side-
-  * combined groupBy on url_canon; the rewrite is bounded by the URL
-  * universe (the ranks posture — a delta layout via
+  * Layout: `root/fetched/v=<n>/<token>` — the merged ledger per
+  * version (url_canon, host, last_fetch_day), advanced by
+  * [[commitFetched]]'s max-day merge and committed through
+  * [[graft.sources.VersionLog]] as a whole version (written in place,
+  * then `commits/v<n>` claimed and `LATEST` flipped; readers resolve
+  * the newest marker and never write); every version is kept. The
+  * merge is ONE map-side-combined groupBy on url_canon; the rewrite is
+  * bounded by the URL universe (the ranks posture — a delta layout via
   * [[graft.sources.StateStore]] is the graduation if the universe
   * outgrows rewrites). [[frontier]] is one equi-join of discovery
   * against the ledger — no window, no driver state; day arithmetic
@@ -28,68 +32,45 @@ import graft.sources.Tables
 object CrawlState {
 
   private def fsOf(spark: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Only COMMITTED versions count: a version dir is committed once
-    * its `_SUCCESS` marker exists — a committer that died mid-write
-    * leaves a half dir readers never resolve. */
-  private def latestVersion(spark: SparkSession, root: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/fetched")
-    val fs = fsOf(spark, root)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(d => d.getName.startsWith("v=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-      .map(_.getName.drop(2).toLong).sorted.lastOption
-  }
+  private def home(root: String)(v: Long) = new Path(s"$root/fetched/v=$v")
 
   /** The ledger at the latest version (empty-schema frame for an
     * untouched root). */
   def ledger(spark: SparkSession, root: String): DataFrame =
-    latestVersion(spark, root) match {
-      case Some(v) => spark.read.parquet(s"$root/fetched/v=$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("url_canon",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("host",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("last_fetch_day",
-            org.apache.spark.sql.types.StringType))))
+    ledgerAt(spark, root, VersionLog.latest(fsOf(spark, root), root))
+
+  private def ledgerAt(spark: SparkSession, root: String, v: Option[Long]): DataFrame =
+    v match {
+      case Some(v) => spark.read.parquet(VersionLog.dir(fsOf(spark, root), root, v, home(root)))
+      case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(Seq("url_canon", "host", "last_fetch_day")
+          .map(StructField(_, StringType))))
     }
 
   /** Merge one cycle's fetch records (url_canon, host, day — ISO
     * strings) into the ledger as the next version: per URL the MAX
     * fetch day survives (re-fetches advance, replays are idempotent).
-    * Version numbers are FENCED (the ShardStore claim posture): the
-    * next version is claimed atomically before the merge is written,
-    * so two overlapping cycles cannot both overwrite `v=<n>` and
-    * silently drop one delta — the loser fails loudly and retries
-    * from the advanced ledger. */
+    * Two overlapping cycles cannot both land version `n` and silently
+    * drop one delta: the log lets exactly one claim it, and the loser
+    * discards its merge and fails loudly, to retry from the advanced
+    * ledger. A merge that throws leaves no claim behind. */
   def commitFetched(spark: SparkSession, fetched: DataFrame,
                     root: String): Long = {
-    val fs = fsOf(spark, root)
-    val v = latestVersion(spark, root).getOrElse(-1L) + 1L
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-    val claim = new org.apache.hadoop.fs.Path(s"$root/_claim_v$v")
-    val claimed = try { fs.create(claim, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    if (!claimed)
-      throw new java.util.ConcurrentModificationException(
-        s"ledger commit toward v$v is in flight under $root — retry " +
-          "after it completes (or delete its _claim file if the " +
-          "committer is known dead)")
-    val merged = ledger(spark, root)
-      .unionByName(fetched.select(col("url_canon"), col("host"),
-        col("day").as("last_fetch_day")))
-      .groupBy(col("url_canon"))
-      .agg(max(col("host")).as("host"),
-        max(col("last_fetch_day")).as("last_fetch_day"))
-    merged.select(col("url_canon"), col("host"), col("last_fetch_day"))
-      .write.mode("overwrite").parquet(s"$root/fetched/v=$v")
-    fs.delete(claim, false) // committed (_SUCCESS in place): claim is moot
+    val (v, won) = VersionLog.commitNext(fsOf(spark, root), root, home(root)) { (cur, dir) =>
+      ledgerAt(spark, root, cur)
+        .unionByName(fetched.select(col("url_canon"), col("host"),
+          col("day").as("last_fetch_day")))
+        .groupBy(col("url_canon"))
+        .agg(max(col("host")).as("host"),
+          max(col("last_fetch_day")).as("last_fetch_day"))
+        .select(col("url_canon"), col("host"), col("last_fetch_day"))
+        .write.parquet(dir)
+    }
+    if (!won) throw new java.util.ConcurrentModificationException(
+      s"ledger version $v under $root was committed by another writer — " +
+        "retry against the advanced ledger")
     v
   }
 

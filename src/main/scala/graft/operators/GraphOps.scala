@@ -413,11 +413,12 @@ object GraphOps {
     val p0 = pairs.select(col(idACol).cast(LongType).as("a"),
         col(idBCol).cast(LongType).as("b"))
       .filter(col("a") =!= col("b"))
-    // persist WITHOUT a finally-unpersist: everything here is lazy (the
-    // rounds are lazy checkpoints), so no action runs before return — an
-    // eager unpersist would drop the cache before the caller's first
-    // job and every round would replay the caller's pair derivation
-    // (the expensive part). This is a CALL-LIFETIME cache entry by
+    // persist WITHOUT a finally-unpersist: above the small-graph bound
+    // the rounds are lazy checkpoints that run only in the caller's
+    // jobs (the bound's count below is the one eager action), so an
+    // unpersist before return would drop the cache before the caller's
+    // first job and every round would replay the caller's pair
+    // derivation (the expensive part). This is a CALL-LIFETIME cache entry by
     // design (the minhashNearDups pattern): the CacheManager holds it
     // until the caller unpersists or clears the cache — Verify/Bench
     // clear between queries; a long-lived session that calls this

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.VersionLog
+
 /** Incremental graph state (SURVEY.md §2 row 139) — PageRank over a
   * link graph that GROWS by delta edge batches, without re-deriving
   * the corpus-scale edge list per refresh. The StateStore delta
@@ -16,12 +18,17 @@ import org.apache.spark.sql.types._
   *    Raw counts (not compressed weights) because raw counts are the
   *    ADDITIVE quantity: Σ batches == direct derivation, exactly.
   *    Each batch dir is overwritten on retry → idempotent appends.
-  *  - rank state is versioned `ranks/v=<n>` (Hadoop FileSystem API —
-  *    object-store-safe, FsContractSpec's scheme rule applies), read
-  *    back to warm-start the next refresh. A refresh therefore pays
-  *    (a) one aggregation over the accumulated edge state — node-pair
-  *    bounded, far below corpus scale — and (b) `iters` O(nodes)
-  *    PageRank iterations, instead of the full cold derivation+solve.
+  *  - rank state is versioned `ranks/v=<n>/<token>`, each refresh
+  *    committed through [[graft.sources.VersionLog]] as a whole
+  *    version (written in place, then `commits/v<n>` claimed and
+  *    `LATEST` flipped; every version is kept, and a refresh that dies
+  *    mid-write leaves nothing a reader resolves), read back to
+  *    warm-start the next refresh (Hadoop FileSystem API —
+  *    object-store-safe, FsContractSpec's scheme rule applies). A
+  *    refresh therefore pays (a) one aggregation over the
+  *    accumulated edge state — node-pair bounded, far below corpus
+  *    scale — and (b) `iters` O(nodes) PageRank iterations, instead of
+  *    the full cold derivation+solve.
   *
   * Warm-start exactness: the damped update is a pure integer function
   * of (ranks, edges, n), so persist-and-resume composes — k1 then k2
@@ -57,37 +64,39 @@ object GraphState {
     spark.read.parquet(s"$root/edges")
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
 
+  private def home(root: String)(v: Long) = new Path(s"$root/ranks/v=$v")
+
   /** Latest committed rank version, if any. */
-  def latestRankVersion(spark: SparkSession, root: String): Option[Long] = {
-    val dir = new Path(s"$root/ranks")
-    val f = fs(spark, root)
-    if (!f.exists(dir)) None
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong).maxOption
-  }
+  def latestRankVersion(spark: SparkSession, root: String): Option[Long] =
+    VersionLog.latest(fs(spark, root), root)
 
   /** Persisted ranks at the latest version. */
   def ranks(spark: SparkSession, root: String): Option[DataFrame] =
-    latestRankVersion(spark, root)
-      .map(v => spark.read.parquet(s"$root/ranks/v=$v"))
+    ranksAt(spark, root, latestRankVersion(spark, root))
+
+  private def ranksAt(spark: SparkSession, root: String, v: Option[Long]) =
+    v.map(v => spark.read.parquet(VersionLog.dir(fs(spark, root), root, v, home(root))))
 
   /** One refresh: solve `iters` iterations over the accumulated edge
     * state, warm-started from the persisted ranks (new nodes enter at
     * the uniform rank), and commit the result as the next version.
     * `compress` maps accumulated raw counts to bounded weights before
     * the solve (the q_pagerank 1+(w-1)/1024 posture — applied AFTER
-    * accumulation so additivity is never broken). */
+    * accumulation so additivity is never broken). A refresh that loses
+    * its version to a concurrent one discards its result and throws
+    * ConcurrentModificationException. */
   def refreshRanks(spark: SparkSession, root: String, iters: Int,
                    compress: org.apache.spark.sql.Column => org.apache.spark.sql.Column = identity,
                    scale: Long = 1000000000000L): DataFrame = {
     val e = edgesFromState(spark, root)
       .select(col("src"), col("dst"), compress(col("w")).as("w"))
-    val out = GraphOps.pageRank(e, "src", "dst", "w", iters, scale,
-      init = ranks(spark, root))
-    val v = latestRankVersion(spark, root).getOrElse(-1L) + 1L
-    out.write.mode("overwrite").parquet(s"$root/ranks/v=$v")
-    spark.read.parquet(s"$root/ranks/v=$v")
+    val (v, won) = VersionLog.commitNext(fs(spark, root), root, home(root)) { (cur, dir) =>
+      GraphOps.pageRank(e, "src", "dst", "w", iters, scale, init = ranksAt(spark, root, cur))
+        .write.parquet(dir)
+    }
+    if (!won) throw new java.util.ConcurrentModificationException(
+      s"rank version $v under $root was committed by another refresh")
+    ranksAt(spark, root, Some(v)).get
   }
 
   // ---- Registered query ----------------------------------------------------

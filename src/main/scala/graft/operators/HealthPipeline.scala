@@ -112,7 +112,7 @@ object HealthPipeline {
       StructField("day", StringType) +: sources.flatMap(s => Seq(
         StructField(s"${s.name}__n", LongType),
         StructField(s"${s.name}__total", DoubleType))))
-    val aligned = SchemaAlign.align(combined, target, failOnExtra = false)
+    val aligned = SchemaAlign.align(combined, target)
 
     // Watermark filter (the raw read above already windowed, but the
     // margin day could re-enter — filter exactly). A transient warehouse

@@ -21,12 +21,12 @@ object SchemaAlign {
     extends IllegalArgumentException(
       s"Fields present in the frame but missing from the target schema: ${extra.mkString(", ")}")
 
-  /** Align `df` to `target`: missing→NULL, extra→error (or drop), cast. */
-  def align(df: DataFrame, target: StructType, failOnExtra: Boolean = true): DataFrame = {
+  /** Align `df` to `target`: missing→NULL, extra→error, cast. */
+  def align(df: DataFrame, target: StructType): DataFrame = {
     val have = df.schema.fieldNames.toSet
     val want = target.fieldNames.toSet
     val extra = df.schema.fieldNames.filterNot(want.contains).toSeq
-    if (extra.nonEmpty && failOnExtra) throw ExtraFieldsException(extra)
+    if (extra.nonEmpty) throw ExtraFieldsException(extra)
     val cols: Seq[Column] = target.fields.toSeq.map { f =>
       if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)

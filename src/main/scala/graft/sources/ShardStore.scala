@@ -16,30 +16,34 @@ import org.apache.spark.sql.functions._
   * appends accumulate — the read path's anti-join cost and the
   * file-open cost both reset to zero.
   *
-  * Every change is a version behind a pointer — the model
-  * [[StateStore]] shares: data lives under `root/v<N>/`, a
-  * `root/_current` pointer file names the live version, appends and
-  * tombstones land file-atomically inside it, and [[compact]] writes
-  * `v<N+1>` IN FULL before flipping the pointer. A reader never sees a
-  * missing or half-written table: it resolves the pointer once
-  * ([[dataDir]]) and reads an immutable complete version dir. The PREVIOUS version is retained until the
-  * next compaction as a grace copy, so a reader that resolved the old
-  * pointer mid-compact finishes its scan against intact files; only
-  * versions two compactions old are deleted. (Disk high-water mark:
-  * 2× the table between compactions — the price of lock-free readers;
-  * a transactional format (Delta/Iceberg) with snapshot retention is
-  * the deployment-scale graduation and this object's surface maps 1:1
+  * Every change is a version: data lives under `root/v<N>/<token>/`,
+  * appends and tombstones land file-atomically inside the live
+  * version, and [[init]] and [[compact]] commit a whole table through
+  * [[VersionLog]], the protocol every versioned store shares: the
+  * table is written in its final home, then `commits/v<N>` is claimed
+  * (the marker names the token) and `LATEST` flips — nothing moves
+  * after the claim. A reader never sees a missing or half-written
+  * table: it resolves the live version once ([[dataDir]], read-only)
+  * and reads an immutable complete version dir. This store's
+  * retention: the PREVIOUS version is kept until the next compaction
+  * as a grace copy, so a reader that resolved the old version
+  * mid-compact finishes its scan against intact files; only versions
+  * two compactions old are deleted. (Disk high-water mark: 2× the
+  * table between compactions — the price of lock-free readers; a
+  * transactional format (Delta/Iceberg) with snapshot retention is the
+  * deployment-scale graduation and this object's surface maps 1:1
   * onto it: append = append, tombstone = delete, compact = OPTIMIZE.)
   *
   * [[init]] lands `v0`, and so does the first [[append]] to a root
-  * that does not exist yet. A root holding neither `_current` nor a
-  * committed `v<N>` is not a shard table: every reader and writer
-  * fails loudly on it.
+  * that does not exist yet. A root whose log holds no committed
+  * version is not a shard table: every reader and writer fails loudly
+  * on it.
   *
   * Concurrency contract: READERS are lock-free at any time (the
-  * pointer + grace copy above); WRITERS are single-threaded — one
-  * ingest loop owns append/addTombstones/compact (the
-  * [[graft.streaming.CorpusIngest]] shape). An append racing a
+  * version log + grace copy above); COMPACTORS may race — exactly one
+  * wins each version and the others report its outcome; APPENDS are
+  * single-threaded — one ingest loop owns append/addTombstones/compact
+  * (the [[graft.streaming.CorpusIngest]] shape). An append racing a
   * compact would land rows in the outgoing version after the rewrite
   * read them; a transactional format's optimistic commit protocol is
   * the graduation for multi-writer deployments.
@@ -51,56 +55,27 @@ object ShardStore {
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def currentPath(root: String) = new Path(s"$root/_current")
+  /** Version v's home; its committed table is `root/v<N>/<token>`. */
+  private def versionPath(root: String)(v: Long) = new Path(s"$root/v$v")
 
-  /** Version index of a data dir `root/v<N>`. */
-  private def versionOf(root: String, dir: String): Long =
-    dir.substring(root.length + 2).toLong
-
-  private def versionDirs(f: org.apache.hadoop.fs.FileSystem,
-                          root: String): Seq[(Long, Path)] =
-    f.globStatus(new Path(s"$root/v*")).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .map(s => s.getPath.getName.drop(1).toLong -> s.getPath)
-
-  /** Only COMMITTED version dirs count anywhere a reader resolves: a
-    * version is committed once its `_SUCCESS` marker exists (Spark's
-    * committer writes it at job completion; [[markCommitted]] creates
-    * it defensively in case the success-marker conf is off). An
-    * in-flight compact's half-written next dir, or a crash leftover,
-    * has no marker and is therefore never advertised, never resolved
-    * by the pointer fallback, and safely overwritten by the next
-    * compact. */
-  private def committedVersionDirs(f: org.apache.hadoop.fs.FileSystem,
-                                   root: String): Seq[(Long, Path)] =
-    versionDirs(f, root).filter { case (_, p) => f.exists(new Path(p, "_SUCCESS")) }
-
-  private def markCommitted(f: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val m = new Path(dir, "_SUCCESS")
-    if (!f.exists(m)) f.create(m, true).close()
+  /** The live version. A root whose log holds none is not a shard
+    * table: fail loudly rather than read or append to it as one. */
+  private def liveVersion(spark: SparkSession, root: String): Long = {
+    val v = VersionLog.latest(fs(spark, root), root)
+    require(v.nonEmpty, s"$root has no committed version — not a shard " +
+      "table (damaged or foreign root)")
+    v.get
   }
 
-  /** The LIVE data directory `root/<_current>`. Resolving the pointer
-    * is the reader's only coupling to maintenance — the dir it returns
-    * is complete and immutable-under-compaction (appends do land in
-    * it, file-atomically). If the pointer file is mid-flip (the
-    * delete→rename instant of [[Pointer.flip]]), the highest committed
-    * version dir IS the flip target and complete — fall back to it. A
-    * root with neither is not a shard table: fail loudly rather than
-    * read or append to it as one. */
-  def dataDir(spark: SparkSession, root: String): String = {
-    val f = fs(spark, root)
-    val name = Pointer.read(f, currentPath(root)).getOrElse {
-      val vs = committedVersionDirs(f, root)
-      require(vs.nonEmpty, s"$root has neither a _current pointer nor a " +
-        "committed v<N> dir — not a shard table (damaged or foreign root)")
-      s"v${vs.map(_._1).max}"
-    }
-    s"$root/$name"
-  }
+  private def versionDir(spark: SparkSession, root: String, v: Long): String =
+    VersionLog.dir(fs(spark, root), root, v, versionPath(root))
 
-  private def flipCurrent(spark: SparkSession, root: String, name: String): Unit =
-    Pointer.flip(fs(spark, root), currentPath(root), name)
+  /** The LIVE data directory. Resolving it is the reader's only
+    * coupling to maintenance — the dir it returns is complete and
+    * immutable-under-compaction (appends do land in it,
+    * file-atomically). */
+  def dataDir(spark: SparkSession, root: String): String =
+    versionDir(spark, root, liveVersion(spark, root))
 
   /** In-partition clustering strategies share one landing path so the
     * validation and writer contract cannot diverge between layouts.
@@ -139,16 +114,11 @@ object ShardStore {
   }
 
   /** Land the bootstrap manifest (replaces any prior table at the
-    * root) as version 0 of the versioned layout, then flip the
-    * pointer — the table is addressable only once fully written. */
+    * root) as committed version 0 — the table is addressable only once
+    * fully written. */
   def init(docs: DataFrame, manifest: DataFrame, root: String,
-           maxRecordsPerFile: Long = 0L): Unit = {
-    val f = fs(docs.sparkSession, root)
-    if (f.exists(new Path(root))) f.delete(new Path(root), true)
-    land(docs, manifest, s"$root/v0", "overwrite", maxRecordsPerFile)
-    markCommitted(f, s"$root/v0")
-    flipCurrent(docs.sparkSession, root, "v0")
-  }
+           maxRecordsPerFile: Long = 0L): Unit =
+    initWith(docs, manifest, root, maxRecordsPerFile, plainCluster)
 
   /** [[init]] with rows clustered by the quantile Z-VALUE of
     * (bin, n_tokens) instead of plain (bin, doc_id) order — each shard
@@ -165,12 +135,18 @@ object ShardStore {
     * Quantile (not uniform-width) ranks keep the cells row-balanced
     * under token-length skew ([[graft.operators.ZOrder]]). */
   def initZOrdered(docs: DataFrame, manifest: DataFrame, root: String,
-                   maxRecordsPerFile: Long = 0L): Unit = {
-    val f = fs(docs.sparkSession, root)
+                   maxRecordsPerFile: Long = 0L): Unit =
+    initWith(docs, manifest, root, maxRecordsPerFile, zCluster)
+
+  private def initWith(docs: DataFrame, manifest: DataFrame, root: String,
+                       maxRecordsPerFile: Long, cluster: DataFrame => DataFrame): Unit = {
+    val spark = docs.sparkSession
+    val f = fs(spark, root)
     if (f.exists(new Path(root))) f.delete(new Path(root), true)
-    land(docs, manifest, s"$root/v0", "overwrite", maxRecordsPerFile, zCluster)
-    markCommitted(f, s"$root/v0")
-    flipCurrent(docs.sparkSession, root, "v0")
+    val (_, won) = VersionLog.commitNext(f, root, versionPath(root)) { (_, dir) =>
+      land(docs, manifest, dir, "overwrite", maxRecordsPerFile, cluster)
+    }
+    require(won, s"another writer initialized $root concurrently")
   }
 
   /** Land one ingest's accepted rows (appends; bins were opened past
@@ -200,17 +176,20 @@ object ShardStore {
     * asking for a reclaimed or never-written version fails loudly.
     * `versions` lists what is readable right now. */
   def readVersion(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val f = fs(spark, root)
-    require(committedVersionDirs(f, root).exists(_._1 == version),
+    val readable = versions(spark, root)
+    require(readable.contains(version),
       s"version $version is not retained at $root — readable: " +
-        versions(spark, root).mkString("[", ", ", "]"))
-    readDir(spark, root, s"$root/v$version")
+        readable.mkString("[", ", ", "]"))
+    readDir(spark, root, versionDir(spark, root, version))
   }
 
-  /** Version indexes currently on disk, ascending (at most two: the
+  /** Version indexes currently readable, ascending (at most two: the
     * grace copy and the live version; one before the first compact). */
-  def versions(spark: SparkSession, root: String): Seq[Long] =
-    committedVersionDirs(fs(spark, root), root).map(_._1).sorted
+  def versions(spark: SparkSession, root: String): Seq[Long] = {
+    val live = liveVersion(spark, root)
+    val f = fs(spark, root)
+    Seq(live - 1L, live).filter(v => v >= 0 && f.exists(new Path(versionDir(spark, root, v))))
+  }
 
   private def readDir(spark: SparkSession, root: String, dir: String): DataFrame = {
     val all = spark.read.parquet(dir)
@@ -270,76 +249,29 @@ object ShardStore {
       maxFilesPerPartition, maxTombstoneFrac, maxRecordsPerFile)
   }
 
-  /** Claim file fencing version `v` against a CONCURRENT compactor:
-    * created atomically (create-if-absent) OUTSIDE the version dir —
-    * the rewrite's overwrite would delete an in-dir sentinel. Deleted
-    * after the pointer flips (a flipped pointer makes the claim
-    * moot: the next compaction targets v+1). */
-  private def claimPath(root: String, v: Long) = new Path(s"$root/_claim_v$v")
-
   /** Physically apply tombstones and merge accumulated small files:
-    * rewrite the live rows fully re-clustered into the NEXT version
-    * dir, flip the `_current` pointer, and drop versions two
-    * compactions old (the immediately previous version is retained as
-    * the in-flight readers' grace copy — see the class doc). The
-    * tombstone table lives inside the version dir, so the new version
-    * starts with zero tombstone debt by construction. A crash before
-    * the flip leaves a complete-but-unreferenced next dir that the
-    * following compact simply overwrites; no crash point ever leaves
-    * the pointer naming an incomplete dir. Returns the data file
-    * count of the new version. */
+    * rewrite the live rows fully re-clustered and commit them as the
+    * NEXT version, then drop versions two compactions old (the
+    * immediately previous version is retained as the in-flight
+    * readers' grace copy — see the class doc). The tombstone table
+    * lives inside the version dir, so the new version starts with zero
+    * tombstone debt by construction. A compaction that fails or dies
+    * before its claim leaves the live version untouched and fences
+    * nothing; one that loses the claim to a concurrent compactor
+    * converges on the winner's version. Returns the data file count of
+    * the version live afterwards. */
   def compact(spark: SparkSession, root: String,
               maxRecordsPerFile: Long = 0L): Int = {
     val f = fs(spark, root)
-    val cur = dataDir(spark, root)
-    val curVer = versionOf(root, cur)
-    val next = s"$root/v${curVer + 1}"
-    // conditional commit: claim v<N+1> atomically; exactly one
-    // compactor may rewrite toward a version number. A lost claim
-    // either converged already (the pointer advanced — return the
-    // winner's outcome) or is IN FLIGHT (fail loudly; callers retry
-    // after the winner finishes — ShardRaceSpec pins both paths). A
-    // claim whose version dir is complete (_SUCCESS) but whose writer
-    // died before the flip is healed by finishing the flip here.
-    val claimed = try {
-      f.create(claimPath(root, curVer + 1), false).close(); true
-    } catch { case _: java.io.IOException => false }
-    if (claimed &&
-        versionOf(root, dataDir(spark, root)) != curVer) {
-      // stale claimant: another compactor flipped (and released its
-      // claim) between our curVer read and our claim — rewriting
-      // toward curVer+1 would overwrite the LIVE version dir. Release
-      // and converge on the winner's outcome.
-      f.delete(claimPath(root, curVer + 1), false)
-      return spark.read.parquet(dataDir(spark, root)).inputFiles.length
+    val (v, won) = VersionLog.commitNext(f, root, versionPath(root)) { (cur, dir) =>
+      require(cur.nonEmpty, s"$root has no committed version to compact")
+      plainCluster(readDir(spark, root, versionDir(spark, root, cur.get)))
+        .write.option("maxRecordsPerFile", maxRecordsPerFile)
+        .partitionBy("split", "lang").parquet(dir)
     }
-    if (!claimed) {
-      val advanced = versionOf(root, dataDir(spark, root)) > curVer
-      if (advanced)
-        return spark.read.parquet(dataDir(spark, root)).inputFiles.length
-      if (f.exists(new Path(s"$next/_SUCCESS"))) { // dead winner: heal the flip
-        flipCurrent(spark, root, s"v${curVer + 1}")
-        f.delete(claimPath(root, curVer + 1), false)
-        return spark.read.parquet(next).inputFiles.length
-      }
-      throw new java.util.ConcurrentModificationException(
-        s"compaction toward v${curVer + 1} is in flight under $root — " +
-          "retry after it completes (or delete its _claim file if the " +
-          "compactor is known dead)")
-    }
-    // read() is lazy — the rewrite job below is the only
-    // materialization, and it completes before the pointer moves
-    read(spark, root)
-      .repartition(col("split"), col("lang"))
-      .sortWithinPartitions(col("split"), col("lang"), col("bin"), col("doc_id"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("split", "lang").parquet(next)
-    markCommitted(f, next)
-    flipCurrent(spark, root, s"v${curVer + 1}")
-    f.delete(claimPath(root, curVer + 1), false) // flipped: the claim is moot
-    versionDirs(f, root).filter(_._1 < curVer)
-      .foreach { case (_, p) => f.delete(p, true) }
-    spark.read.parquet(next).inputFiles.length
+    if (won) f.globStatus(new Path(s"$root/v*")).map(_.getPath)
+      .filter(p => p.getName.matches("v\\d+") && p.getName.drop(1).toLong < v - 1L)
+      .foreach(f.delete(_, true))
+    spark.read.parquet(dataDir(spark, root)).inputFiles.length
   }
 }

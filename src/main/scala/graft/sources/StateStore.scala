@@ -27,41 +27,34 @@ import graft.operators.TrainingPipeline.{CorpusState, IngestDelta}
   *                          MUTATE on merge, so they are not
   *                          append-shaped; they are also the smallest
   *                          table (non-singleton nodes only)
-  *   staging/<token>/<t>/   one writer's artifacts, before its claim
-  *   commits/v<v>           "<token> <base>": version v is claimed
-  *   LATEST                 pointer file, flipped last
+  *   staging/, commits/, LATEST   the version log ([[VersionLog]])
   * }}}
   *
-  * Every version is written by ONE routine ([[commitStaged]]): stage
-  * the artifacts under a writer-private `staging/<token>/`, claim
-  * `commits/v<v>` (exactly one writer wins a version number), move the
-  * staged dirs into place, flip LATEST. A delta version stages one
-  * ingest's increment; a BASE version ([[commitBootstrap]],
-  * [[compact]]) stages the full live state. Each marker names its
-  * version's base, so [[loadVersion]] reconstructs state-at-v from the
-  * partitions `base <= ingest <= v` plus ONE anti-join of the
-  * accumulated dead set onto shingles and manifest — exactly the
-  * logical state `runIncremental` maintains in memory, because doc ids
-  * are globally unique and a doc is never re-admitted after a
-  * tombstone (both are existing contract). Versions back to the latest
-  * base stay readable (state time travel); a base deletes the
-  * partitions below it once LATEST names it — the Delta VACUUM trade.
+  * Every version commits through [[VersionLog]], the protocol all
+  * versioned stores share, in its delta shape: the artifacts are
+  * staged, `commits/v<v>` is claimed (exactly one writer wins a
+  * version number), the staged dirs move to their
+  * `ingest=<v>`/`v=<v>` partitions, LATEST flips. A
+  * delta version stages one ingest's increment; a BASE version
+  * ([[commitBootstrap]], [[compact]]) stages the full live state. Each
+  * marker names its version's base, so [[loadVersion]] reconstructs
+  * state-at-v from the partitions `base <= ingest <= v` plus ONE
+  * anti-join of the accumulated dead set onto shingles and manifest —
+  * exactly the logical state `runIncremental` maintains in memory,
+  * because doc ids are globally unique and a doc is never re-admitted
+  * after a tombstone (both are existing contract). Versions back to
+  * the latest base stay readable (state time travel); this store's
+  * retention: a base deletes the partitions below it once LATEST names
+  * it — the Delta VACUUM trade.
   *
-  * Crash/replay semantics: table dirs receive files only from a
-  * claimed marker, so
-  *   - a crash while staging leaves an unclaimed staging dir and
-  *     nothing else; a replay commits the version afresh;
-  *   - a crash between claim and flip is healed forward by the next
-  *     [[latestVersion]], which finishes moving the staged dirs;
-  *   - a crash after a base's flip leaves pre-base partitions that no
-  *     read touches; the next compaction deletes them.
-  * A lost LATEST is RECOVERED from the markers (max committed v)
-  * instead of silently bootstrapping an empty corpus — the failure
-  * that would re-admit every previously shipped doc. State tables with
-  * NO markers fail loudly as corruption. Orphaned staging dirs are not
-  * swept: a concurrent writer's in-flight stage looks the same as a
-  * crashed writer's, and deleting it would let that writer's claim
-  * materialize nothing.
+  * Crash/replay semantics are the log's (a crash while staging leaves
+  * nothing a reader sees; a crash between claim and flip is healed
+  * forward by the next [[latestVersion]]), plus: a crash after a
+  * base's flip leaves pre-base partitions that no read touches; the
+  * next compaction deletes them. State tables with NO markers fail
+  * loudly as corruption instead of silently bootstrapping an empty
+  * corpus — the failure that would re-admit every previously shipped
+  * doc.
   */
 object StateStore {
 
@@ -93,149 +86,57 @@ object StateStore {
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def latestPath(root: String) = new Path(s"$root/LATEST")
-  private def markerPath(root: String, v: Long) = new Path(s"$root/commits/v$v")
-  private def stagingDir(root: String, token: String) = s"$root/staging/$token"
-
   /** Partition column of table `t`: labels are whole per version. */
   private def partitionKey(t: String) = if (t == "labels") "v" else "ingest"
   private def partitionPath(root: String, t: String, v: Long) =
     new Path(s"$root/$t/${partitionKey(t)}=$v")
 
-  /** (staging token, base version) from the body of marker `v`. */
-  private def marker(spark: SparkSession, root: String, v: Long): (String, Long) = {
-    val body = Pointer.read(fs(spark, root), markerPath(root, v)).getOrElse(
-      throw new IllegalStateException(s"commit marker v$v is missing under $root"))
-    body.split(" ") match {
-      case Array(token, base) => (token, base.toLong)
-      case _ => throw new IllegalStateException(
-        s"malformed commit marker $root/commits/v$v: '$body'")
-    }
-  }
+  private def layout(root: String): VersionLog.Layout =
+    v => Artifacts.map(t => t -> partitionPath(root, t, v))
 
-  /** Latest committed version — the COMMIT MARKERS are the truth,
-    * LATEST is a healed-forward cache. A missing LATEST with markers
-    * present is recovered; a LATEST behind a newer marker (a commit
-    * that crashed between claim and pointer flip) is healed forward
-    * after materializing that version's staged artifacts; state tables
-    * with no markers at all fail loudly — silently treating a damaged
-    * root as an empty corpus would re-admit every shipped doc
-    * downstream. */
+  /** Latest committed version ([[VersionLog.healForward]]: the commit
+    * markers are the truth, a LATEST behind them is healed forward).
+    * State tables with no markers at all fail loudly — silently
+    * treating a damaged root as an empty corpus would re-admit every
+    * shipped doc downstream. */
   def latestVersion(spark: SparkSession, root: String): Option[Long] = {
     val f = fs(spark, root)
-    val commitsDir = new Path(s"$root/commits")
-    val maxMarker =
-      if (!f.exists(commitsDir)) None
-      else f.listStatus(commitsDir).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v"))
-        .map(_.drop(1).toLong).sorted.lastOption
-    maxMarker match {
-      case None =>
-        // table dirs receive files only after a claim, so tables
-        // without any marker mean the markers of a real corpus were
-        // lost; a first commit that died while staging left none
-        require(Tables.forall(t => !f.exists(new Path(s"$root/$t"))),
-          s"state tables exist under $root but no commit marker does — " +
-            "refusing to treat a damaged state root as an empty corpus")
-        None
-      case Some(m) =>
-        val latest = Pointer.read(f, latestPath(root)).map(_.toLong)
-        require(latest.forall(_ <= m), s"LATEST names v${latest.get} under $root " +
-          s"but the newest commit marker is v$m — refusing to roll the state back")
-        if (!latest.contains(m)) { // claimed but the flip crashed: heal forward
-          (latest.fold(0L)(_ + 1L) to m)
-            .foreach(v => materialize(spark, root, v, marker(spark, root, v)._1))
-          writeLatest(spark, root, m)
-        }
-        Some(m)
-    }
+    val v = VersionLog.healForward(f, root, layout(root))
+    // table dirs receive files only after a claim, so tables without
+    // any marker mean the markers of a real corpus were lost; a first
+    // commit that died while staging left none
+    require(v.nonEmpty || Tables.forall(t => !f.exists(new Path(s"$root/$t"))),
+      s"state tables exist under $root but no commit marker does — " +
+        "refusing to treat a damaged state root as an empty corpus")
+    v
   }
 
-  private def writeLatest(spark: SparkSession, root: String, v: Long): Unit =
-    Pointer.flip(fs(spark, root), latestPath(root), v.toString)
-
-  /** Atomically claim version `v`: the marker body (staging token and
-    * base) goes to a writer-private tmp, then is RENAMED into place —
-    * the marker becomes visible with its body complete, and Hadoop
-    * rename refuses an existing destination, so the rename is the
-    * fence: exactly one writer wins a version number (atomic on HDFS
-    * and precondition-capable object stores; on a raw local FS the
-    * strongest primitive available). */
-  private def claim(spark: SparkSession, root: String, v: Long,
-                    token: String, base: Long): Boolean = {
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/commits"))
-    val tmp = new Path(s"$root/commits/.claim.$token")
-    val out = f.create(tmp, true)
-    try out.write(s"$token $base".getBytes("UTF-8")) finally out.close()
-    val won = try !f.exists(markerPath(root, v)) &&
-      f.rename(tmp, markerPath(root, v))
-    catch { case _: java.io.IOException => false }
-    if (!won) f.delete(tmp, false)
-    won
-  }
-
-  /** Move the staged artifact dirs of claimed version `v` into their
-    * final homes — by the committing writer, or by a reader healing a
-    * writer that crashed after its claim. Idempotent: a finished
-    * version has no staging dir. */
-  private def materialize(spark: SparkSession, root: String, v: Long,
-                          token: String): Unit = {
-    val f = fs(spark, root)
-    val stage = new Path(stagingDir(root, token))
-    if (!f.exists(stage)) return // already materialized
-    Artifacts.foreach { t =>
-      val src = new Path(stage, t)
-      val dst = partitionPath(root, t, v)
-      if (f.exists(src)) {
-        // src AND dst both present = a rename-as-copy crashed mid-copy
-        // (a COMPLETED rename deletes its source, on any FS), so dst is
-        // partial — drop it and redo; skipping it because "dst exists"
-        // would commit a half-copied table. On atomic-rename FSs the
-        // both-exist state never arises and this stays the plain
-        // missing-target rename.
-        if (f.exists(dst)) f.delete(dst, true)
-        f.mkdirs(dst.getParent)
-        require(f.rename(src, dst), s"could not materialize $src -> $dst")
-      }
-    }
-    f.delete(stage, true)
-  }
-
-  /** The one routine that writes a version: stage `artifacts` (table
-    * name -> rows) under a writer-private dir, claim `v` with `base`
-    * recorded in its marker, materialize, flip LATEST. A base version
-    * (`base == v`) then deletes the partitions below it. Returns false,
-    * with the staging discarded, when another writer claimed `v`
-    * first. */
+  /** Commit version `v` on `base` through the log: `artifacts` (table
+    * name -> rows) are staged, then claimed and moved into place. A
+    * base version (`base == v`) then deletes the partitions below it.
+    * Returns false, with the staging discarded, when another writer
+    * claimed `v` first. */
   private def commitStaged(spark: SparkSession, root: String, v: Long, base: Long,
                            artifacts: Seq[(String, DataFrame)]): Boolean = {
     val f = fs(spark, root)
-    val token = java.util.UUID.randomUUID().toString
-    val stage = stagingDir(root, token)
-    artifacts.foreach { case (t, df) =>
-      df.select(schemas(t).fieldNames.map(col): _*)
-        .write.mode("overwrite").parquet(s"$stage/$t")
+    val won = VersionLog.commit(f, root, v, base, layout(root)) { stage =>
+      artifacts.foreach { case (t, df) =>
+        df.select(schemas(t).fieldNames.toSeq.map(col): _*).write.parquet(s"$stage/$t")
+      }
     }
-    if (!claim(spark, root, v, token, base)) {
-      f.delete(new Path(stage), true)
-      return false
-    }
-    materialize(spark, root, v, token)
-    writeLatest(spark, root, v)
-    if (base == v) Artifacts.foreach { t =>
+    if (won && base == v) Artifacts.foreach { t =>
       val prefix = partitionKey(t) + "="
       f.listStatus(new Path(s"$root/$t")).map(_.getPath)
         .filter(p => p.getName.startsWith(prefix) && p.getName.drop(prefix.length).toLong < base)
         .foreach(p => f.delete(p, true))
     }
-    true
+    won
   }
 
   /** The base a delta on top of `cur` extends (0 on an empty root,
     * where the delta is itself the base v0). */
   private def baseOf(spark: SparkSession, root: String, cur: Option[Long]): Long =
-    cur.fold(0L)(marker(spark, root, _)._2)
+    cur.fold(0L)(VersionLog.base(fs(spark, root), root, _))
 
   private def deltaArtifacts(delta: IngestDelta): Seq[(String, DataFrame)] = Seq(
     "hashes" -> delta.stateDelta.newHashes,
@@ -323,7 +224,7 @@ object StateStore {
     * latest base): pruned delta scans + one anti-join of the
     * accumulated dead set onto shingles and manifest. */
   def loadVersion(spark: SparkSession, root: String, v: Long): CorpusState = {
-    val base = marker(spark, root, v)._2
+    val base = VersionLog.base(fs(spark, root), root, v)
     val dead = readTable(spark, root, "dead", base, v)
     CorpusState(
       hashes = readTable(spark, root, "hashes", base, v),

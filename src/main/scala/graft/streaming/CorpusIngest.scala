@@ -15,18 +15,19 @@ import graft.sources.{ShardStore, StateStore}
   * decontamination, packing — landing accepted rows and tombstones in
   * the [[ShardStore]] and committing the next state version.
   *
-  * Both stores keep every change as a version behind a pointer. A
-  * batch's state commit is a VERSIONED DELTA ([[StateStore]]): its
-  * O(batch) witness deltas are staged, the next version is claimed,
-  * the staged dirs become new `ingest=<v>` partitions (never touching
-  * the partitions it is concurrently reading) and the `LATEST` pointer
-  * flips last — which also gives state time travel for free. Commit
-  * I/O is independent of how large the corpus has grown
+  * Both stores commit every version through the one version log
+  * ([[graft.sources.VersionLog]]: stage, claim `commits/v<N>`, flip
+  * `LATEST`; state deltas move into their partitions after the
+  * claim, whole shard versions are written in place). A batch's state
+  * commit is a VERSIONED DELTA ([[StateStore]]): its O(batch) witness
+  * deltas become new `ingest=<v>` partitions (never touching the
+  * partitions it is concurrently reading) — which also gives state
+  * time travel for free. Commit I/O is independent of how large the corpus has grown
   * (StateCommitSpec measures it); a lost LATEST is recovered from the
   * per-version commit markers instead of silently bootstrapping an
-  * empty corpus. State compaction commits a new base version the same
-  * way; shard compaction flips `_current` to a rewritten `v<N>`
-  * ([[ShardStore]]).
+  * empty corpus. State compaction commits a new base version; shard
+  * compaction commits a rewritten `v<N>` table dir ([[ShardStore]]);
+  * shard appends and tombstones land inside the live version.
   *
   * Failure semantics (bare parquet, no transactional format):
   * foreachBatch is at-least-once, and a REPLAYED batch whose commit
@@ -43,9 +44,6 @@ object CorpusIngest {
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def latestVersion(spark: SparkSession, root: String): Option[Long] =
-    StateStore.latestVersion(spark, root)
 
   /** Commit one ingest's delta as the next state version (O(batch)
     * write volume — see [[StateStore.commitDelta]]). */

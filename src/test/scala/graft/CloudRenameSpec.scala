@@ -13,11 +13,20 @@ import graft.sources.StateStore
   * (file at a time, the S3/GCS reality — no atomic directory rename
   * exists), refusing an existing destination. A crash budget can be
   * armed so the Nth file copy inside a rename throws — the mid-rename
-  * crash the commit protocols must survive. Must be top-level with a
-  * no-arg ctor (Hadoop reflection). */
+  * crash the commit protocols must survive — and `exists` and `open` run the
+  * [[StoreFixtures.raceFor]] hook. Must be top-level with a no-arg
+  * ctor (Hadoop reflection). */
 class ObjectStoreFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftoss:///")
   override def getScheme: String = "graftoss"
+  override def exists(p: Path): Boolean = {
+    StoreFixtures.beforeLookup(p)
+    super.exists(p)
+  }
+  override def open(p: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    StoreFixtures.beforeLookup(p)
+    super.open(p, bufferSize)
+  }
 
   override def rename(src: Path, dst: Path): Boolean = {
     if (!exists(src) || exists(dst)) false

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TrainingPipeline
-import graft.sources.ShardStore
+import graft.sources.{ShardStore, StateStore}
 import graft.streaming.CorpusIngest
 
 /** Streaming corpus ingestion == the same batches ingested sequentially
@@ -56,7 +56,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(landed.sameElements(streamed.map(_.getLong(0)).sorted))
 
     // two committed versions + time travel to v0
-    assert(CorpusIngest.latestVersion(spark, s"$base/state").contains(1L))
+    assert(StateStore.latestVersion(spark, s"$base/state").contains(1L))
     val v0 = graft.sources.StateStore.loadVersion(spark, s"$base/state", 0L).manifest
     assert(v0.select($"doc_id").as[Long].collect().toSet == Set(1L, 2L))
 
@@ -66,7 +66,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     val f = new org.apache.hadoop.fs.Path(s"$base/state/LATEST")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.delete(new org.apache.hadoop.fs.Path(s"$base/state/LATEST"), false)
-    assert(CorpusIngest.latestVersion(spark, s"$base/state").contains(1L),
+    assert(StateStore.latestVersion(spark, s"$base/state").contains(1L),
       "LATEST not recovered from commit markers")
     val recovered = CorpusIngest.load(spark, s"$base/state").manifest
       .select($"doc_id", $"split", $"lang", $"bin", $"n_tokens").orderBy($"doc_id").collect()
@@ -106,7 +106,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     CorpusIngest.ingestBatch(df, 0L, s"$base/state", s"$base/shards")
     assert(spark.read.parquet(ShardStore.dataDir(spark, s"$base/shards")).count() == before,
       "replay appended rows")
-    assert(CorpusIngest.latestVersion(spark, s"$base/state").contains(0L),
+    assert(StateStore.latestVersion(spark, s"$base/state").contains(0L),
       "replay must not advance the state version")
   }
 }

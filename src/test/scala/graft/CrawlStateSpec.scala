@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.sql.functions.{lit, raise_error}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.CrawlState
 
 /** Crawl-frontier state (SURVEY.md §2 row 262): max-day merge
   * semantics, replay idempotence, version advance, the three
-  * frontier verdicts, and horizon boundary exactness. */
+  * frontier verdicts, horizon boundary exactness, and the ledger's
+  * commits through the version log (no fence survives a failed
+  * write, a claimed version is read at once and reads never write,
+  * racing commits). */
 class CrawlStateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -77,23 +81,87 @@ class CrawlStateSpec extends AnyFunSuite {
     assert(got == Seq(("h", "u1", "", "new", true)))
   }
 
-  test("a live claim fences concurrent commits; half-written versions stay invisible") {
+  // ---- the version log, over a local FS and over rename-as-copy
+  // (graftoss:, see CloudRenameSpec); the race over graftfs: and
+  // graftoss:, whose lookups the race hook sees ----
+
+  private def urls(root: String): Map[String, String] =
+    CrawlState.ledger(spark, root).as[(String, String, String)].collect()
+      .map { case (u, _, d) => u -> d }.toMap
+
+  for (scheme <- Seq("file", "graftoss")) {
+    test(s"a merge write that throws fences nothing over $scheme") {
+      val root = StoreFixtures.newRoot(scheme, "graft_cs_fail")
+      CrawlState.commitFetched(spark, fetched(("u1", "h", "2025-01-10")), root)
+      val bad = fetched(("u2", "h", "2025-01-11"))
+        .withColumn("day", raise_error(lit("fetch record rejected")))
+      intercept[Exception] { CrawlState.commitFetched(spark, bad, root) }
+      if (scheme == "graftoss") { // and a commit killed mid-rename
+        ObjectStoreFs.armCrash(afterFiles = 0)
+        try intercept[Exception] {
+          CrawlState.commitFetched(spark, fetched(("u2", "h", "2025-01-11")), root)
+        } finally ObjectStoreFs.disarm()
+      }
+      assert(StoreFixtures.children(s"$root/fetched/v=1").isEmpty, "a failed merge leaves no dir")
+      // a dir a dead writer left where v=1 lives is never resolved
+      StoreFixtures.fsOf(root).mkdirs(new org.apache.hadoop.fs.Path(s"$root/fetched/v=1/_temporary"))
+      assert(urls(root) == Map("u1" -> "2025-01-10"))
+
+      assert(CrawlState.commitFetched(spark,
+        fetched(("u2", "h", "2025-01-11")), root) == 1L)
+      assert(urls(root) == Map("u1" -> "2025-01-10", "u2" -> "2025-01-11"))
+    }
+
+    test(s"a claimed but unflipped version is read at once, and reads never write, over $scheme") {
+      val root = StoreFixtures.newRoot(scheme, "graft_cs_claimed")
+      CrawlState.commitFetched(spark, fetched(("u1", "h", "2025-01-10")), root)
+      // a committer wrote v1's merged ledger, claimed it, and died
+      // before flipping LATEST
+      val token = "deadbeef-dead-dead-dead-deaddeadbeef"
+      Seq(("u1", "h", "2025-01-10"), ("u2", "h", "2025-01-12"))
+        .toDF("url_canon", "host", "last_fetch_day")
+        .write.parquet(s"$root/fetched/v=1/$token")
+      StoreFixtures.claimed(root, 1L, token)
+      val before = StoreFixtures.files(root)
+      assert(urls(root) == Map("u1" -> "2025-01-10", "u2" -> "2025-01-12"))
+      assert(StoreFixtures.files(root) == before, "a read wrote to the store")
+      assert(CrawlState.commitFetched(spark,
+        fetched(("u3", "h", "2025-01-13")), root) == 2L)
+      assert(urls(root).keySet == Set("u1", "u2", "u3"))
+    }
+  }
+
+  for (scheme <- Seq("graftfs", "graftoss"))
+    test(s"two commits racing for one version over $scheme: one wins, the loser throws") {
+      val root = StoreFixtures.newRoot(scheme, "graft_cs_race")
+      CrawlState.commitFetched(spark, fetched(("u1", "h", "2025-01-10")), root)
+      // the winner commits between the loser's merge and its claim
+      StoreFixtures.raceFor(new org.apache.hadoop.fs.Path(s"$root/commits/v1")) {
+        assert(CrawlState.commitFetched(spark,
+          fetched(("w", "h", "2025-01-11")), root) == 1L)
+      }
+      intercept[java.util.ConcurrentModificationException] {
+        CrawlState.commitFetched(spark, fetched(("l", "h", "2025-01-12")), root)
+      }
+      assert(StoreFixtures.children(s"$root/fetched/v=1").size == 1, "the loser discards its dir")
+      assert(urls(root) == Map("u1" -> "2025-01-10", "w" -> "2025-01-11"))
+      // the loser's retry merges into the winner's ledger: nothing lost
+      assert(CrawlState.commitFetched(spark,
+        fetched(("l", "h", "2025-01-12")), root) == 2L)
+      assert(urls(root) ==
+        Map("u1" -> "2025-01-10", "w" -> "2025-01-11", "l" -> "2025-01-12"))
+    }
+
+  test("a ledger whose commit markers are lost fails loudly") {
     val root = newRoot()
     CrawlState.commitFetched(spark, fetched(("u1", "h", "2025-01-10")), root)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(s"$root/_claim_v1"), false).close()
-    intercept[java.util.ConcurrentModificationException] {
-      CrawlState.commitFetched(spark, fetched(("u2", "h", "2025-01-11")), root)
+    val f = StoreFixtures.fsOf(root)
+    assert(f.delete(new org.apache.hadoop.fs.Path(s"$root/commits"), true))
+    for (op <- Seq[() => Any](() => CrawlState.ledger(spark, root),
+        () => CrawlState.commitFetched(spark, fetched(("u2", "h", "2025-01-11")), root))) {
+      val e = intercept[IllegalArgumentException] { op() }
+      assert(e.getMessage.contains("refusing to roll the state back"), e.getMessage)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/_claim_v1"), false)
-    // a version dir without _SUCCESS (a died committer) never resolves
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/fetched/v=1"))
-    assert(CrawlState.ledger(spark, root).count() == 1L) // still v=0
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/fetched/v=1"), true)
-    assert(CrawlState.commitFetched(spark,
-      fetched(("u2", "h", "2025-01-11")), root) == 1L)
-    assert(CrawlState.ledger(spark, root).count() == 2L)
   }
 
   test("frontier passes discovery columns through for the scheduler") {

@@ -49,8 +49,6 @@ class OperatorSpec extends AnyFunSuite {
     assertThrows[SchemaAlign.ExtraFieldsException] {
       SchemaAlign.align(df, narrow)
     }
-    // failOnExtra=false drops instead
-    assert(SchemaAlign.align(df, narrow, failOnExtra = false).columns.toSeq == Seq("id"))
   }
 
   test("Incremental.newerThanWatermark filters past the max landed key") {

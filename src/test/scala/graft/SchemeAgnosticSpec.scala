@@ -10,11 +10,20 @@ import graft.sources.{ShardStore, StateStore, Writer}
   * the honest sandbox stand-in for a cloud connector: registered by
   * class name through `fs.<scheme>.impl` (exactly how `gs://`/
   * `s3a://` register), with its own URI so Hadoop's checkPath
-  * enforces that every internal path stays on the foreign scheme.
-  * Must be top-level with a no-arg ctor (Hadoop reflection). */
+  * enforces that every internal path stays on the foreign scheme;
+  * `exists` and `open` run the [[StoreFixtures.raceFor]] hook. Must be top-level
+  * with a no-arg ctor (Hadoop reflection). */
 class GraftFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
   override def getScheme: String = "graftfs"
+  override def exists(p: Path): Boolean = {
+    StoreFixtures.beforeLookup(p)
+    super.exists(p)
+  }
+  override def open(p: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    StoreFixtures.beforeLookup(p)
+    super.open(p, bufferSize)
+  }
 }
 
 /** Scheme-agnostic warehouse roots (SURVEY.md §2 row 234): every

@@ -120,7 +120,7 @@ class ShardStoreSpec extends AnyFunSuite {
     assert(f.exists(p(d1)), "the immediately previous version is retained")
     // the root path itself was resolvable throughout — no missing-root
     // window exists in the pointer design
-    assert(f.exists(p(root)) && f.exists(p(s"$root/_current")))
+    assert(f.exists(p(root)) && f.exists(p(s"$root/LATEST")))
 
     // time travel over the retained window: both readable versions list,
     // resolve, and carry the same live rows (no tombstones in between);
@@ -135,7 +135,7 @@ class ShardStoreSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("not retained"))
   }
 
-  test("a root with no _current and no committed version fails loudly") {
+  test("a root with no pointer and no committed version fails loudly") {
     val docs = Seq((1L, "en", filler("ra")), (2L, "en", filler("rb")))
       .toDF("doc_id", "lang", "text")
     val st = TrainingPipeline.bootstrapState(docs)
@@ -155,8 +155,8 @@ class ShardStoreSpec extends AnyFunSuite {
     // files are still there, but nothing says they are complete
     val damaged = java.nio.file.Files.createTempDirectory("graft_rc").toString + "/shards"
     ShardStore.init(docs, st.manifest, damaged)
-    assert(f.delete(p(s"$damaged/_current"), false))
-    assert(f.delete(p(s"$damaged/v0/_SUCCESS"), false))
+    assert(f.delete(p(s"$damaged/LATEST"), false))
+    assert(f.delete(p(s"$damaged/commits/v0"), false))
     assertLoud(damaged)
 
     // parquet files straight under the root: not this store's layout
@@ -200,5 +200,57 @@ class ShardStoreSpec extends AnyFunSuite {
       assert(jobs.get() == 0,
         s"debt check ran ${jobs.get()} Spark job(s) — it must be listing-only")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  // ---- the version log under compaction, over a local FS and over
+  // rename-as-copy (graftoss:, see CloudRenameSpec) ----
+
+  private def ids(root: String): Seq[Long] =
+    ShardStore.read(spark, root).select($"doc_id").as[Long].collect().sorted.toSeq
+
+  for (scheme <- Seq("file", "graftoss")) {
+    test(s"a compaction whose rewrite fails fences nothing over $scheme") {
+      val docs = Seq((1L, "en", filler("wa")), (2L, "en", filler("wb")))
+        .toDF("doc_id", "lang", "text")
+      val root = StoreFixtures.newRoot(scheme, "graft_shard_fail") + "/shards"
+      ShardStore.init(docs, TrainingPipeline.bootstrapState(docs).manifest, root)
+      val before = ids(root)
+      val f = StoreFixtures.fsOf(root)
+      val live = new org.apache.hadoop.fs.Path(ShardStore.dataDir(spark, root))
+      // file: a corrupt data file the rewrite trips on; graftoss: a
+      // crash in the rewrite's own output renames
+      val corrupt = new org.apache.hadoop.fs.Path(live, "split=train/lang=en/corrupt.parquet")
+      if (scheme == "file") StoreFixtures.write(f, corrupt, "not parquet")
+      else ObjectStoreFs.armCrash(afterFiles = 0)
+      try intercept[Exception] { ShardStore.compact(spark, root) }
+      finally ObjectStoreFs.disarm()
+      f.delete(corrupt, false)
+      assert(StoreFixtures.children(s"$root/v1").isEmpty, "a failed rewrite leaves no dir")
+
+      ShardStore.compact(spark, root) // no fence left behind
+      assert(ShardStore.versions(spark, root) == Seq(0L, 1L))
+      assert(ids(root) == before)
+    }
+
+    test(s"a claimed but unflipped compaction is read at once, and reads never write, over $scheme") {
+      val docs = Seq((1L, "en", filler("ha")), (2L, "en", filler("hb")))
+        .toDF("doc_id", "lang", "text")
+      val root = StoreFixtures.newRoot(scheme, "graft_shard_claimed") + "/shards"
+      ShardStore.init(docs, TrainingPipeline.bootstrapState(docs).manifest, root)
+      val before = ids(root)
+      // a compactor wrote v1 (a copy of v0 is a valid rewrite), claimed
+      // it, and died before flipping LATEST
+      val f = StoreFixtures.fsOf(root)
+      val token = "deadbeef-dead-dead-dead-deaddeadbeef"
+      org.apache.hadoop.fs.FileUtil.copy(f, new org.apache.hadoop.fs.Path(ShardStore.dataDir(spark, root)),
+        f, new org.apache.hadoop.fs.Path(s"$root/v1/$token"), false,
+        spark.sparkContext.hadoopConfiguration)
+      StoreFixtures.claimed(root, 1L, token)
+      val files = StoreFixtures.files(root)
+      assert(ids(root) == before)
+      assert(ShardStore.dataDir(spark, root) == s"$root/v1/$token")
+      assert(ShardStore.versions(spark, root) == Seq(0L, 1L))
+      assert(StoreFixtures.files(root) == files, "a read wrote to the store")
+    }
   }
 }

@@ -9,9 +9,11 @@ import graft.sources.{ShardStore, StateStore}
 /** Optimistic-concurrency commits (the rows-90/93 Delta-story close):
   * a lost claim means RECOMPUTE against the winner's state — never a
   * lost update; version numbers commit exactly once; a crash between
-  * claim and pointer flip is healed forward by the next reader; the
-  * protocol holds over the non-file `graftfs:` scheme; ShardStore's
-  * compaction claim fences concurrent compactors. */
+  * claim and pointer flip is healed forward by the next reader, and a
+  * reader healing a live commit does not undo it; the protocol holds
+  * over the non-file `graftfs:` scheme; racing ShardStore compactions
+  * converge on one winner, and a shard reader racing a compaction
+  * reads a whole version without writing. */
 class StateRaceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -127,30 +129,79 @@ class StateRaceSpec extends AnyFunSuite {
     assert(Set(2001L, 3001L).subsetOf(ids))
   }
 
-  test("shard compaction: a live claim fails loudly, a dead winner's flip heals") {
-    val corpus = corpusOf(4)
-    val root = java.nio.file.Files.createTempDirectory("graft_race4").toString + "/shards"
-    val st0 = TrainingPipeline.bootstrapState(corpus)
-    ShardStore.init(corpus, st0.manifest, root)
-    val f = fsOf(root)
-
-    // a claim with no completed dir and no advanced pointer = in flight
-    f.create(new Path(s"$root/_claim_v1"), false).close()
-    intercept[java.util.ConcurrentModificationException] {
-      ShardStore.compact(spark, root)
+  test("a reader healing a delta commit mid-move over graftfs: leaves it whole") {
+    val root = StoreFixtures.newRoot("graftfs", "graft_race7")
+    StateStore.commitBootstrap(spark,
+      TrainingPipeline.bootstrapState(corpusOf(3)), root)
+    // the committer of v1, past its claim, looks up its first
+    // destination: a reader heals v1 forward right then, and the
+    // committer must not undo the move the reader made
+    var seen = Set.empty[Long]
+    StoreFixtures.raceFor(new Path(s"$root/hashes/ingest=1")) { seen = manifestIds(root) }
+    val v1 = StateStore.commitDeltaOptimistic(spark, root) { st =>
+      TrainingPipeline.runIncremental(st.get, batchOf(2000L, "aa"))
     }
-    f.delete(new Path(s"$root/_claim_v1"), false)
-
-    // normal compact proceeds once the claim is gone
-    ShardStore.compact(spark, root)
-    assert(ShardStore.versions(spark, root).contains(1L))
-
-    // dead winner: v2 fully written (_SUCCESS) + claim, pointer at v1
-    val conf = spark.sparkContext.hadoopConfiguration
-    FileUtil.copy(f, new Path(s"$root/v1"), f, new Path(s"$root/v2"), false, conf)
-    f.create(new Path(s"$root/_claim_v2"), false).close()
-    ShardStore.compact(spark, root) // heals the flip instead of throwing
-    assert(ShardStore.read(spark, root).count() == corpus.count())
-    assert(!f.exists(new Path(s"$root/_claim_v2")))
+    assert(v1 == 1L)
+    assert(Set(2001L, 2002L, 2003L).subsetOf(seen))
+    assert(manifestIds(root) == seen)
+    assert(fsOf(root).exists(new Path(s"$root/hashes/ingest=1")))
   }
+
+  for (scheme <- Seq("graftfs", "graftoss"))
+    test(s"racing shard compactions over $scheme: one wins, the loser reports its file count") {
+      val corpus = corpusOf(4)
+      val root = StoreFixtures.newRoot(scheme, "graft_race4") + "/shards"
+      ShardStore.init(corpus, TrainingPipeline.bootstrapState(corpus).manifest, root)
+      def ids = ShardStore.read(spark, root).select($"doc_id").as[Long].collect().sorted.toSeq
+      val before = ids
+
+      // the winner compacts between the loser's rewrite and its claim
+      var winnerFiles = -1
+      StoreFixtures.raceFor(new Path(s"$root/commits/v1")) {
+        winnerFiles = ShardStore.compact(spark, root, maxRecordsPerFile = 1L)
+      }
+      val loserFiles = ShardStore.compact(spark, root)
+      assert(winnerFiles == corpus.count() && loserFiles == winnerFiles,
+        s"winner $winnerFiles, loser $loserFiles")
+      assert(ShardStore.versions(spark, root) == Seq(0L, 1L))
+      assert(StoreFixtures.children(s"$root/v1").size == 1, "the loser discards its dir")
+      assert(ids == before)
+    }
+
+  for (scheme <- Seq("graftfs", "graftoss"))
+    test(s"a reader racing a compaction over $scheme reads a whole version and writes nothing") {
+      val corpus = corpusOf(4)
+      val root = StoreFixtures.newRoot(scheme, "graft_race5") + "/shards"
+      ShardStore.init(corpus, TrainingPipeline.bootstrapState(corpus).manifest, root)
+      def ids = ShardStore.read(spark, root).select($"doc_id").as[Long].collect().sorted.toSeq
+      val before = ids
+      // a reader resolves the table while the compactor, its rewrite
+      // fully written, is about to claim v1: it reads v0, whole, and
+      // leaves the store as it found it
+      var seen = Seq.empty[Long]
+      var untouched = false
+      StoreFixtures.raceFor(new Path(s"$root/commits/v1")) {
+        val files = StoreFixtures.files(root)
+        seen = ids
+        untouched = StoreFixtures.files(root) == files
+      }
+      ShardStore.compact(spark, root)
+      assert(seen == before && untouched)
+      assert(ids == before)
+      assert(ShardStore.versions(spark, root) == Seq(0L, 1L))
+    }
+
+  for (scheme <- Seq("graftfs", "graftoss"))
+    test(s"a compaction landing between a reader's pointer and marker lookups over $scheme is read, not refused") {
+      val corpus = corpusOf(4)
+      val root = StoreFixtures.newRoot(scheme, "graft_race6") + "/shards"
+      ShardStore.init(corpus, TrainingPipeline.bootstrapState(corpus).manifest, root)
+      def ids = ShardStore.read(spark, root).select($"doc_id").as[Long].collect().sorted.toSeq
+      val before = ids
+      // a whole compaction (claim AND flip) lands as the reader opens
+      // LATEST: the markers the reader lists afterwards must cover it
+      StoreFixtures.raceFor(new Path(s"$root/LATEST")) { ShardStore.compact(spark, root) }
+      assert(ids == before)
+      assert(ShardStore.versions(spark, root) == Seq(0L, 1L))
+    }
 }
