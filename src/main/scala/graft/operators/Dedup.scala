@@ -279,87 +279,58 @@ object Dedup {
     * different edge multisets, ~2^-64 per check). Superseded iteration
     * blocks are reclaimed by the ContextCleaner once unreferenced.
     *
-    * Fault tolerance at cluster scale: `localCheckpoint` blocks die
-    * with their executor, so by default a lost executor mid-run fails
-    * the job (locally: never happens). With `durable = true` each
-    * iteration writes a reliable checkpoint instead (requires
-    * `sparkContext.setCheckpointDir` to a cluster-visible path) — the
-    * 100 TB / 1000-executor setting where a lost block must not
-    * restart a 20-iteration job from zero.
-    *
-    * Throws `IllegalArgumentException` if `maxIter` rounds pass without
-    * the fingerprint stabilizing — fail-fast is deliberate (best-effort
+    * Throws `IllegalArgumentException` if 20 rounds pass without the
+    * fingerprint stabilizing — fail-fast is deliberate (best-effort
     * labels would be silently WRONG group ids downstream); O(log² n)
-    * rounds makes the default 20 ample, and the error names the
-    * iteration budget so callers know which knob to raise. Convergence
+    * rounds makes 20 ample, and the error names the budget. Convergence
     * is declared on an unchanged fingerprint of the COMPOSED
     * smallStar∘largeStar pass; the Kiveris proof is stated per-pass, so
     * a star-graph post-condition is re-checked explicitly before
     * returning (no node may appear on both sides of the final edge
     * set) rather than trusting composition-fixpoint = star.
     *
-    * Graphs at or below `smallGraphMax` DISTINCT edges skip the
-    * distributed iteration entirely: the edge list is collected and
-    * labeled by driver-side union-find — the bounded-driver-model
-    * posture of the IVF sample and z-order boundaries. The bound is
-    * checked on the materialized distinct edge count (one job the
-    * iteration would have paid anyway), ≤ 16 bytes/edge collected, and
-    * the common case it serves is the DAILY-INGEST graph: near-dup
-    * pairs are O(batch), so a typical delta graph is thousands of
-    * edges, where each distributed round instead costs a full
-    * plan+shuffle cycle. Labels are identical by construction (union
-    * by MIN root preserves the component-min invariant);
+    * A graph that fits the driver ([[DriverGraph]]) skips the
+    * distributed iteration: driver-side union-find labels it. The
+    * common case is the DAILY-INGEST graph — near-dup pairs are
+    * O(batch), thousands of edges, where each distributed round costs
+    * a full plan+shuffle cycle. Labels are identical by construction
+    * (union by MIN root preserves the component-min invariant);
     * PipelineOpsSpec pins both paths on the same graphs.
-    * `smallGraphMax = 0` forces the distributed path. */
+    * `smallGraphMax` caps the fast path's distinct edges; 0 forces the
+    * distributed path. */
   def connectedComponents(pairs: DataFrame, idACol: String, idBCol: String,
-                          maxIter: Int = 20, durable: Boolean = false,
-                          smallGraphMax: Long = 100000L): DataFrame = {
+                          smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-
-    def truncate(df: DataFrame): DataFrame =
-      if (durable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
+    val maxIter = 20
 
     val p0 = pairs.select(col(idACol).cast(LongType).as("x"),
         col(idBCol).cast(LongType).as("y"))
       .filter(col("x") =!= col("y"))
-    val edges0 = truncate(p0.select(greatest(col("x"), col("y")).as("hi"),
+    val edges0 = p0.select(greatest(col("x"), col("y")).as("hi"),
         least(col("x"), col("y")).as("lo"))
-      .distinct())
-    // Empty/small-graph fast paths: the count materializes edges0's
-    // checkpoint, which the first iteration needed anyway, so the
-    // probe costs nothing extra. A pair-free input (the common case
-    // for a clean daily ingest) otherwise pays two confirmation
-    // iterations plus the star check — ~6 jobs for a foregone
-    // conclusion; a small graph pays plan+shuffle cycles per round for
-    // work a driver union-find does in microseconds.
-    val edgeCount = edges0.count()
-    if (edgeCount == 0L) {
-      return edges0.select(col("hi").as("id"), col("lo").as("comp"))
-    }
-    if (edgeCount <= smallGraphMax) {
-      val es = edges0.select(col("hi"), col("lo")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      // union-find, union by MIN root: the surviving root of every
-      // merge is the smaller id, so find(x) = component min — the same
-      // label the distributed star fixpoint yields.
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
+      .distinct().localCheckpoint(eager = false)
+    // the budget's count materializes edges0's checkpoint, which the
+    // first distributed iteration needs anyway
+    val fast = DriverGraph.graph(edges0, nodeWords = 2, maxEdges = smallGraphMax)
+    if (fast.isDefined) {
+      // union-find, union by MIN root: the surviving root of every merge
+      // is the smaller index, i.e. the smaller id, so find(x) = component
+      // min — the label the distributed star fixpoint yields
+      val g = fast.get
+      val parent = Array.range(0, g.n)
+      def find(x: Int): Int = {
         var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
+        while (parent(r) != r) r = parent(r)
         var c = x // path compression
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      g.src.indices.foreach { i =>
+        val (ra, rb) = (find(g.src(i)), find(g.dst(i)))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      return es.iterator.flatMap { case (a, b) => Iterator(a, b) }
-        .toSeq.distinct.map(id => (id, find(id)))
-        .toDF("id", "comp")
+      return DriverGraph.frame(pairs.sparkSession,
+        Seq("id" -> g.ids, "comp" -> Array.tabulate(g.n)(v => g.ids(find(v)))))
     }
     // every node of the input graph, for the final label join — derived
     // from the materialized edge set, NOT from `pairs`, so an expensive
@@ -394,7 +365,7 @@ object Dedup {
     var converged = false
     var prevStats: (Long, Long) = null
     while (!converged && i < maxIter) {
-      val next = truncate(smallStar(largeStar(edges)))
+      val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
       // the ONE action: materializes the checkpoint and yields the
       // convergence fingerprint from the same job.
       // bit_xor, not sum: order-independent, and cannot overflow under
@@ -409,7 +380,7 @@ object Dedup {
     require(converged,
       s"connectedComponents did not converge in $maxIter iterations " +
         s"(edge-set fingerprint still changing after iteration $i; " +
-        "expected O(log^2 n) rounds — raise maxIter)")
+        "expected O(log^2 n) rounds)")
     // The convergence check above detects a fixpoint of the COMPOSED
     // pass; the correctness claim needs that fixpoint to be a STAR
     // (every non-root pointing directly at its component min). Verify

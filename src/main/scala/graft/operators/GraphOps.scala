@@ -58,7 +58,7 @@ object GraphOps {
                iters: Int, scale: Long = 1000000000000L,
                dampNum: Long = 85L, dampDen: Long = 100L,
                init: Option[DataFrame] = None,
-               smallGraphMax: Long = PeelSmallGraphMax): DataFrame = {
+               smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum > 0 && dampNum < dampDen, s"need 0 < dampNum < dampDen")
     val w = col(wCol).cast(LongType)
@@ -72,61 +72,27 @@ object GraphOps {
       when(w > 0, w).otherwise(raise_error(
         lit("pageRank: edge weights must be positive"))).as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Small-graph fast path (the connectedComponents discipline, bound
-    // CHECKED on the materialized count): the registered queries run
-    // this kernel over AGGREGATED graphs (nation→nation: ≤ 625 edges)
-    // whose derivation is the real distributed work — iterating over
-    // them then costs ~5 driver-scheduled jobs per round (contribution
-    // shuffle + dangling broadcast + checkpoint; measured 49 jobs at
-    // sf0.1). Under the bound, collect the validated edge frame once
-    // (the raise_error weight guard fires on collect exactly as it
-    // would distributed) and replay the SAME floor-div integer
-    // iteration in the driver — Math.floorDiv(a, b) == fdiv(a, b) for
-    // b > 0 by construction — so ranks are bit-identical; above the
-    // bound the distributed loop below is unchanged. `init` is
-    // O(prior nodes) — bounded whenever the graph is.
-    if (e.count() <= smallGraphMax) {
-      try {
-        val rows = e.collect()
-        val ow = new scala.collection.mutable.HashMap[Long, Long]()
-        rows.foreach(r => ow(r.getLong(0)) = ow.getOrElse(r.getLong(0), 0L) + r.getLong(2))
-        val nodeIds = (rows.map(_.getLong(0)) ++ rows.map(_.getLong(1))).distinct
-        val n = nodeIds.length.toLong
-        require(n > 0, "pageRank: empty edge set")
-        val teleport = Math.floorDiv((dampDen - dampNum) * scale, dampDen * n)
-        val uniform = Math.floorDiv(scale, n)
-        var rank = new scala.collection.mutable.HashMap[Long, Long]()
-        init match {
-          case None => nodeIds.foreach(rank(_) = uniform)
-          case Some(prev) =>
-            val pr = prev.select(col("node").cast(LongType), col("rank").cast(LongType))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-            nodeIds.foreach(nd => rank(nd) = pr.getOrElse(nd, uniform))
-        }
-        (1 to iters).foreach { _ =>
-          val inc = new scala.collection.mutable.HashMap[Long, Long]()
-          rows.foreach { r =>
-            val (s, d, wv) = (r.getLong(0), r.getLong(1), r.getLong(2))
-            inc(d) = inc.getOrElse(d, 0L) + Math.floorDiv(rank(s) * wv, ow(s))
-          }
-          val dm = nodeIds.iterator.filterNot(ow.contains).map(rank).sum
-          val dmn = Math.floorDiv(dm, n)
-          val next = new scala.collection.mutable.HashMap[Long, Long]()
-          nodeIds.foreach { nd =>
-            next(nd) = teleport + Math.floorDiv(
-              dampNum * (inc.getOrElse(nd, 0L) + dmn), dampDen)
-          }
-          rank = next
-        }
-        val spark = edges.sparkSession
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            nodeIds.toSeq.map(nd => org.apache.spark.sql.Row(nd, rank(nd))), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("rank", LongType, nullable = false))))
-      } finally { e.unpersist(); () }
-    }
+    // Small-graph fast path ([[DriverGraph]]): the registered queries
+    // run this kernel over AGGREGATED graphs (nation→nation: ≤ 625
+    // edges) where each distributed round costs ~5 driver-scheduled
+    // jobs (measured 49 jobs at sf0.1). The replay runs the SAME
+    // floor-div iteration — Math.floorDiv(a, b) == fdiv(a, b) for
+    // b > 0 — so ranks are bit-identical; the raise_error weight guard
+    // fires in the budget's count exactly as it would distributed.
+    val fast = DriverGraph.graph(e, nodeWords = 4, maxEdges = smallGraphMax)
+    val prior = fast.flatMap(g => init match {
+      case None => Some(Array(Array.emptyLongArray, Array.emptyLongArray))
+      case Some(prev) => DriverGraph.collect(prev.select(col("node").cast(LongType).as("node"),
+        col("rank").cast(LongType).as("rank")), rowBytes = 32L, budget = g.spareBytes)
+    })
+    if (prior.isDefined) try {
+      val (g, Array(pn, pr)) = (fast.get, prior.get)
+      require(g.n > 0, "pageRank: empty edge set")
+      val start = Array.fill(g.n)(Math.floorDiv(scale, g.n.toLong))
+      pn.indices.foreach { i => val v = g.indexOf(pn(i)); if (v >= 0) start(v) = pr(i) }
+      return DriverGraph.frame(edges.sparkSession, Seq("node" -> g.ids, "rank" ->
+        replayRanks(g, Array.fill(g.n)(true), start, iters, scale, dampNum, dampDen)))
+    } finally { e.unpersist(); () }
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -172,6 +138,28 @@ object GraphOps {
       }
       last
     } finally { ew.unpersist(); outw.unpersist(); nodes.unpersist(); e.unpersist(); () }
+  }
+
+  /** The driver replay of the floor-div rank iteration pageRank and
+    * personalizedPageRank share (edge weights in `g.cols(2)`): teleport
+    * and dangling mass return to the `seeded` nodes only — every node,
+    * for pageRank. */
+  private def replayRanks(g: DriverGraph.Graph, seeded: Array[Boolean], start: Array[Long],
+                          iters: Int, scale: Long, dampNum: Long, dampDen: Long): Array[Long] = {
+    val (w, ns) = (g.cols(2), seeded.count(identity).toLong)
+    val teleport = Math.floorDiv((dampDen - dampNum) * scale, dampDen * ns)
+    val ow = new Array[Long](g.n)
+    w.indices.foreach(i => ow(g.src(i)) += w(i))
+    (1 to iters).foldLeft(start) { (rank, _) =>
+      val inc = new Array[Long](g.n)
+      w.indices.foreach(i => inc(g.dst(i)) += Math.floorDiv(rank(g.src(i)) * w(i), ow(g.src(i))))
+      var dm = 0L // dangling mass: weights are positive, so ow == 0 iff no out-edge
+      rank.indices.foreach(v => if (ow(v) == 0L) dm += rank(v))
+      val dmn = Math.floorDiv(dm, ns)
+      Array.tabulate(g.n)(v =>
+        if (seeded(v)) teleport + Math.floorDiv(dampNum * (inc(v) + dmn), dampDen)
+        else Math.floorDiv(dampNum * inc(v), dampDen))
+    }
   }
 
   /** The registered query's edge graph: nation-to-nation trade flows —
@@ -224,7 +212,7 @@ object GraphOps {
                            wCol: String, seeds: DataFrame, seedCol: String,
                            iters: Int, scale: Long = 1000000000000L,
                            dampNum: Long = 85L, dampDen: Long = 100L,
-                           smallGraphMax: Long = PeelSmallGraphMax): DataFrame = {
+                           smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum > 0 && dampNum < dampDen, s"need 0 < dampNum < dampDen")
     val w = col(wCol).cast(LongType)
@@ -235,49 +223,21 @@ object GraphOps {
       when(w > 0, w).otherwise(raise_error(
         lit("personalizedPageRank: edge weights must be positive"))).as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Small-graph fast path — the pageRank replay with seed-directed
-    // teleport/dangling return; see pageRank for the bound and
-    // exactness argument. Seeds are node-bounded by the same check.
-    if (e.count() <= smallGraphMax) {
-      try {
-        val rows = e.collect()
-        val ow = new scala.collection.mutable.HashMap[Long, Long]()
-        rows.foreach(r => ow(r.getLong(0)) = ow.getOrElse(r.getLong(0), 0L) + r.getLong(2))
-        val nodeIds = (rows.map(_.getLong(0)) ++ rows.map(_.getLong(1))).distinct
-        val nodeSet = nodeIds.toSet
-        val seedSet = seeds.select(col(seedCol).cast(LongType).as("node")).distinct()
-          .collect().map(_.getLong(0)).filter(nodeSet.contains).toSet
-        val ns = seedSet.size.toLong
-        require(ns > 0, "personalizedPageRank: no seed is a graph node")
-        val teleport = Math.floorDiv((dampDen - dampNum) * scale, dampDen * ns)
-        var rank = new scala.collection.mutable.HashMap[Long, Long]()
-        nodeIds.foreach(nd =>
-          rank(nd) = if (seedSet.contains(nd)) Math.floorDiv(scale, ns) else 0L)
-        (1 to iters).foreach { _ =>
-          val inc = new scala.collection.mutable.HashMap[Long, Long]()
-          rows.foreach { r =>
-            val (s, d, wv) = (r.getLong(0), r.getLong(1), r.getLong(2))
-            inc(d) = inc.getOrElse(d, 0L) + Math.floorDiv(rank(s) * wv, ow(s))
-          }
-          val dm = nodeIds.iterator.filterNot(ow.contains).map(rank).sum
-          val dmn = Math.floorDiv(dm, ns)
-          val next = new scala.collection.mutable.HashMap[Long, Long]()
-          nodeIds.foreach { nd =>
-            val seeded = seedSet.contains(nd)
-            next(nd) = (if (seeded) teleport else 0L) + Math.floorDiv(
-              dampNum * (inc.getOrElse(nd, 0L) + (if (seeded) dmn else 0L)), dampDen)
-          }
-          rank = next
-        }
-        val spark = edges.sparkSession
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            nodeIds.toSeq.map(nd => org.apache.spark.sql.Row(nd, rank(nd))), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("rank", LongType, nullable = false))))
-      } finally { e.unpersist(); () }
-    }
+    // Small-graph fast path ([[DriverGraph]]): the pageRank replay with
+    // teleport and dangling mass returned to the seeds.
+    val fast = DriverGraph.graph(e, nodeWords = 5, maxEdges = smallGraphMax)
+    val seedIds = fast.flatMap(g => DriverGraph.collect(
+      seeds.select(col(seedCol).cast(LongType).as(seedCol)), rowBytes = 16L, budget = g.spareBytes))
+    if (seedIds.isDefined) try {
+      val g = fast.get
+      val seeded = new Array[Boolean](g.n) // seeds outside the graph carry no mass
+      seedIds.get(0).map(g.indexOf).filter(_ >= 0).foreach(seeded(_) = true)
+      val ns = seeded.count(identity).toLong
+      require(ns > 0, "personalizedPageRank: no seed is a graph node")
+      val start = seeded.map(sv => if (sv) Math.floorDiv(scale, ns) else 0L)
+      return DriverGraph.frame(edges.sparkSession, Seq("node" -> g.ids,
+        "rank" -> replayRanks(g, seeded, start, iters, scale, dampNum, dampDen)))
+    } finally { e.unpersist(); () }
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -408,69 +368,38 @@ object GraphOps {
     * up front, persisted across rounds. */
   def labelPropagation(pairs: DataFrame, idACol: String, idBCol: String,
                        iters: Int = 4,
-                       smallGraphMax: Long = PeelSmallGraphMax): DataFrame = {
+                       smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val p0 = pairs.select(col(idACol).cast(LongType).as("a"),
         col(idBCol).cast(LongType).as("b"))
       .filter(col("a") =!= col("b"))
-    // persist WITHOUT a finally-unpersist: above the small-graph bound
-    // the rounds are lazy checkpoints that run only in the caller's
-    // jobs (the bound's count below is the one eager action), so an
-    // unpersist before return would drop the cache before the caller's
-    // first job and every round would replay the caller's pair
-    // derivation (the expensive part). This is a CALL-LIFETIME cache entry by
-    // design (the minhashNearDups pattern): the CacheManager holds it
-    // until the caller unpersists or clears the cache — Verify/Bench
-    // clear between queries; a long-lived session that calls this
-    // repeatedly should do the same after consuming the result.
+    // Checkpointed lazily, not persisted: the budget's count fills the
+    // checkpoint the distributed rounds read, and no CacheManager entry
+    // outlives the call.
     val edges = p0.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(p0.select(col("b").as("src"), col("a").as("dst")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    // Small-graph fast path (the seedDistance/kCorePeel discipline,
-    // bound CHECKED on the materialized count; this makes the operator
-    // eager under the bound — the count doubles as the persist fill).
-    // The driver replay runs the SAME synchronous rounds with the same
-    // total tie order (count DESC, label ASC), so communities are
-    // row-identical; above the bound the lazy distributed loop below
-    // is unchanged.
-    if (edges.count() <= smallGraphMax) {
-      try {
-        val rows = edges.collect()
-        val nE = rows.length
-        val srcA = new Array[Long](nE); val dstA = new Array[Long](nE)
-        var i = 0
-        while (i < nE) { srcA(i) = rows(i).getLong(0); dstA(i) = rows(i).getLong(1); i += 1 }
-        val nodeIds = dstA.distinct
-        var comm = new scala.collection.mutable.HashMap[Long, Long]()
-        nodeIds.foreach(nd => comm(nd) = nd)
-        (1 to iters).foreach { _ =>
-          // (dst, neighbour community) -> count over the PREVIOUS round
-          val cnt = new scala.collection.mutable.HashMap[(Long, Long), Long]()
-          i = 0
-          while (i < nE) {
-            val key = (dstA(i), comm(srcA(i)))
-            cnt(key) = cnt.getOrElse(key, 0L) + 1L
-            i += 1
+      .distinct().localCheckpoint(eager = false)
+    // Small-graph fast path ([[DriverGraph]]): the replay runs the SAME
+    // synchronous rounds with the same total tie order (count DESC,
+    // label ASC), so communities are row-identical.
+    val fast = DriverGraph.graph(edges, nodeWords = 3, maxEdges = smallGraphMax)
+    if (fast.isDefined) {
+      val g = fast.get
+      // symmetrized: a node's in-neighbours are its out-neighbours; the
+      // longest run of one sorted neighbour label wins, so the least
+      // label wins ties
+      val comm = (1 to iters).foldLeft(g.ids) { (prev, _) =>
+        Array.tabulate(g.n) { v =>
+          val ls = g.adj.slice(g.off(v), g.off(v + 1)).map(prev(_)).sorted
+          var (best, run, bestRun) = (ls(0), 0, 0)
+          ls.indices.foreach { j =>
+            run = if (j > 0 && ls(j) == ls(j - 1)) run + 1 else 1
+            if (run > bestRun) { bestRun = run; best = ls(j) }
           }
-          val next = new scala.collection.mutable.HashMap[Long, (Long, Long)]() // dst -> (c, label)
-          cnt.foreach { case ((d, l), c) =>
-            next.get(d) match {
-              case Some((bc, bl)) if bc > c || (bc == c && bl <= l) => ()
-              case _ => next(d) = (c, l)
-            }
-          }
-          val nc = new scala.collection.mutable.HashMap[Long, Long]()
-          next.foreach { case (d, (_, l)) => nc(d) = l }
-          comm = nc
+          best
         }
-        val spark = pairs.sparkSession
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            nodeIds.toSeq.map(nd => org.apache.spark.sql.Row(nd, comm(nd))), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("community", LongType, nullable = false))))
-      } finally { edges.unpersist(); () }
+      }
+      return DriverGraph.frame(pairs.sparkSession, Seq("node" -> g.ids, "community" -> comm))
     }
     // every node of the pair graph appears as a dst after
     // symmetrization, so dst-keyed rounds cover all nodes
@@ -523,7 +452,7 @@ object GraphOps {
     * capped recursive walk replays it verbatim — pure integers. */
   def seedDistance(pairs: DataFrame, idACol: String, idBCol: String,
                    seeds: DataFrame, seedCol: String, maxHops: Int,
-                   smallGraphMax: Long = PeelSmallGraphMax): DataFrame = {
+                   smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val p0 = pairs.select(col(idACol).cast(LongType).as("a"),
         col(idBCol).cast(LongType).as("b"))
@@ -532,49 +461,31 @@ object GraphOps {
       .unionAll(p0.select(col("b").as("src"), col("a").as("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // Small-graph fast path (the connectedComponents discipline —
-      // bound CHECKED on the materialized count, never assumed): the
-      // distributed loop costs ~5 driver-scheduled jobs per hop
-      // (broadcast builds + AQE shuffle stages + checkpoint + probe;
-      // measured 62 jobs / ~4.5 s at sf0.1 on a graph a driver BFS
-      // walks in microseconds). Under the bound, collect the edge list
-      // and seed set once and replay the SAME layered BFS in the
-      // driver — first discovery wins at its true hop, capped at
-      // maxHops — so the output is row-identical; above the bound the
-      // distributed frontier loop below is unchanged.
-      val edgeCount = edges.count() // materializes the persist the loop needs anyway
-      if (edgeCount <= smallGraphMax) {
-        val adj = new scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        edges.collect().foreach { r =>
-          adj.getOrElseUpdate(r.getLong(0), scala.collection.mutable.ArrayBuffer.empty) += r.getLong(1)
+      // Small-graph fast path ([[DriverGraph]]): the distributed loop
+      // costs ~5 driver-scheduled jobs per hop (measured 62 jobs /
+      // ~4.5 s at sf0.1). The replay runs the SAME layered BFS — first
+      // discovery wins at its true hop, capped at maxHops — so the
+      // output is row-identical.
+      val fast = DriverGraph.graph(edges, nodeWords = 2, maxEdges = smallGraphMax)
+      val seedIds = fast.flatMap(g => DriverGraph.collect(
+        seeds.select(col(seedCol).cast(LongType).as(seedCol)),
+        rowBytes = 16L + DriverGraph.OutRowBytes, // an off-graph seed emits a row
+        budget = g.spareBytes))
+      if (seedIds.isDefined) {
+        val (g, sv) = (fast.get, seedIds.get(0))
+        val dist = Array.fill(g.n)(DriverGraph.Null)
+        // first discovery settles a node at its hop and keeps it
+        // (once) in that hop's frontier
+        def settle(h: Long)(v: Int) = v >= 0 && dist(v) == DriverGraph.Null && { dist(v) = h; true }
+        var frontier = sv.map(g.indexOf).filter(settle(0L))
+        (1 to maxHops).foreach { h =>
+          frontier = frontier.flatMap(v => g.adj.slice(g.off(v), g.off(v + 1))).filter(settle(h.toLong))
         }
-        val seedIds = seeds.select(col(seedCol).cast(LongType).as("node"))
-          .distinct().collect().map(_.getLong(0))
-        val dist = new scala.collection.mutable.HashMap[Long, Long]()
-        seedIds.foreach(dist(_) = 0L)
-        var frontier: Seq[Long] = seedIds.toSeq
-        var h = 1L
-        while (h <= maxHops && frontier.nonEmpty) {
-          val nxt = scala.collection.mutable.ArrayBuffer[Long]()
-          frontier.foreach { n =>
-            adj.getOrElse(n, Nil).foreach { m =>
-              if (!dist.contains(m)) { dist(m) = h; nxt += m }
-            }
-          }
-          frontier = nxt.toSeq
-          h += 1
-        }
-        // spine: every graph node (all appear as dst after
-        // symmetrization) plus every seed; unreached stay NULL
-        val spine = (adj.keysIterator ++ seedIds.iterator).toArray.distinct
-        val spark = pairs.sparkSession
-        val rows = spine.toSeq.map(n =>
-          org.apache.spark.sql.Row(n, dist.get(n).map(Long.box).orNull))
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("dist", LongType, nullable = true))))
+        // spine: every graph node plus every off-graph seed (dist 0);
+        // unreached nodes stay NULL
+        val offGraph = DriverGraph.sortedDistinct(sv.filter(g.indexOf(_) < 0))
+        return DriverGraph.frame(pairs.sparkSession, Seq("node" -> (g.ids ++ offGraph),
+          "dist" -> (dist ++ new Array[Long](offGraph.length))), nullable = Set("dist"))
       }
       val s0 = seeds.select(col(seedCol).cast(LongType).as("node")).distinct()
         .withColumn("dist", lit(0L)).localCheckpoint()
@@ -596,9 +507,8 @@ object GraphOps {
       // Checkpointed EAGERLY (O(nodes), and the edge cache is still hot
       // from the loop) so the finally-unpersist below cannot force the
       // caller's action to replay the whole pair derivation for the
-      // spine scan — the operator is eager throughout, so unlike the
-      // lazy labelPropagation there is no reason to leave a cache
-      // entry behind.
+      // spine scan — the operator is eager throughout, so there is no
+      // reason to leave a cache entry behind.
       val spine = edges.select(col("dst").as("node")).distinct()
         .unionAll(s0.select(col("node"))).distinct()
         .localCheckpoint()
@@ -645,16 +555,9 @@ object GraphOps {
     * truncated per round and stays distributed; the driver holds only
     * the round counter and the per-round emptiness probe. Edges are
     * symmetrized + distinct'd ONCE, persisted across rounds. */
-  // Fast-path bound: 2M symmetrized edges = 32 MB of primitive longs
-  // collected (plus transient Row overhead) — comfortably inside the
-  // driver budget, and the driver replay is O(rounds·|E|) integer ops
-  // (milliseconds). CC's tighter 100k bound predates the byte math;
-  // the peel/BFS replays hold only two long arrays and node-sized maps.
-  private val PeelSmallGraphMax = 2000000L
-
   def kCorePeel(pairs: DataFrame, idACol: String, idBCol: String,
                 k: Int, rounds: Int,
-                smallGraphMax: Long = PeelSmallGraphMax): DataFrame = {
+                smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val p0 = pairs.select(col(idACol).cast(LongType).as("a"),
@@ -664,53 +567,30 @@ object GraphOps {
       .unionAll(p0.select(col("b").as("src"), col("a").as("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // Small-graph fast path (the connectedComponents discipline —
-      // bound CHECKED on the materialized count): the distributed peel
-      // costs ~5 driver-scheduled jobs per round (degree shuffle +
-      // broadcast + two checkpoints + probe; measured 33 jobs / ~4 s
-      // at sf0.1). Under the bound, collect the symmetrized edge list
-      // once and replay the SAME capped peel in the driver — degree
-      // among survivors, remove < k, 1-based round labels, early exit
-      // on an empty round — row-identical output; above the bound the
-      // distributed loop below is unchanged.
-      val edgeCount = edges.count() // materializes the persist the loop needs anyway
-      if (edgeCount <= smallGraphMax) {
-        val rowsA = edges.collect()
-        val nE = rowsA.length
-        val srcA = new Array[Long](nE)
-        val dstA = new Array[Long](nE)
-        var i = 0
-        while (i < nE) { srcA(i) = rowsA(i).getLong(0); dstA(i) = rowsA(i).getLong(1); i += 1 }
-        val spine = dstA.distinct
-        val peeled = new scala.collection.mutable.HashMap[Long, Long]() // node -> round
-        var surv = spine.toSet
-        var liveIdx = Array.range(0, nE)
+      // Small-graph fast path ([[DriverGraph]]): the distributed peel
+      // costs ~5 driver-scheduled jobs per round (measured 33 jobs /
+      // ~4 s at sf0.1). The replay runs the SAME capped peel — degree
+      // among survivors, remove < k, 1-based round labels, early exit on
+      // an empty round — so the output is row-identical.
+      val fast = DriverGraph.graph(edges, nodeWords = 2, maxEdges = smallGraphMax)
+      if (fast.isDefined) {
+        val g = fast.get
+        val peeled = Array.fill(g.n)(DriverGraph.Null) // node -> peel round
+        def live(v: Int) = peeled(v) == DriverGraph.Null
         var r = 1
         var fixed = false
         while (r <= rounds && !fixed) {
-          val deg = new scala.collection.mutable.HashMap[Long, Long]()
-          liveIdx.foreach { j => val s = srcA(j); deg(s) = deg.getOrElse(s, 0L) + 1L }
-          // iterate SURVIVORS, not degree keys: a survivor whose last
-          // neighbours were peeled in an earlier round has no live
-          // edge at all (degree 0 < k) and must still be labelled —
-          // exactly the distributed form's coalesce(dg, 0) < k
-          val rem = surv.filter(n => deg.getOrElse(n, 0L) < k)
-          if (rem.isEmpty) fixed = true
-          else {
-            rem.foreach(peeled(_) = r.toLong)
-            surv --= rem
-            liveIdx = liveIdx.filter(j => !rem.contains(srcA(j)) && !rem.contains(dstA(j)))
-          }
+          // every SURVIVOR, not only those with live edges: one whose
+          // last neighbours were peeled earlier has degree 0 < k and must
+          // still be labelled — the distributed form's coalesce(dg, 0) < k
+          val rem = Array.range(0, g.n).filter(v =>
+            live(v) && (g.off(v) until g.off(v + 1)).count(j => live(g.adj(j))) < k)
+          rem.foreach(peeled(_) = r.toLong)
+          fixed = rem.isEmpty
           r += 1
         }
-        val spark = pairs.sparkSession
-        val rows = spine.toSeq.map(n =>
-          org.apache.spark.sql.Row(n, peeled.get(n).map(Long.box).orNull))
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("peel_round", LongType, nullable = true))))
+        return DriverGraph.frame(pairs.sparkSession,
+          Seq("node" -> g.ids, "peel_round" -> peeled), nullable = Set("peel_round"))
       }
       // every node appears as dst after symmetrization
       val spine = edges.select(col("dst").as("node")).distinct()
@@ -788,7 +668,7 @@ object GraphOps {
     * graph size. */
   def hyperBall(edges: DataFrame, srcCol: String, dstCol: String,
                 p: Int = 4, maxRadius: Int = 3,
-                smallGraphMax: Long = 2000000L): DataFrame = {
+                smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     require(p >= 2 && p <= 12, s"p must be in [2,12], got $p")
     require(maxRadius >= 0 && maxRadius <= 16,
       s"maxRadius must be in [0,16], got $maxRadius")
@@ -810,64 +690,42 @@ object GraphOps {
     val rho = when(w === 0L, lit(rhoCap))
       .otherwise((bit_count(w.bitwiseAND(-w) - 1) + 1).cast(LongType))
     try {
-      // Small-graph fast path (the seedDistance discipline): the
-      // distributed loop pays ~4 driver-scheduled jobs per radius over
-      // register frames the driver replays in milliseconds. Bound is
-      // register-aware (nodes·m dense longs ≤ ~2·edges·m): 4M/m edges
-      // keeps the replay under ~100 MB. PolyHash64.compute is the SAME
-      // static kernel codegen calls, pmod == ((h % m) + m) % m, and
+      // Small-graph fast path ([[DriverGraph]]): the distributed loop
+      // pays ~4 driver-scheduled jobs per radius over register frames
+      // the driver replays in milliseconds. PolyHash64.compute is the
+      // SAME static kernel codegen calls, pmod == ((h % m) + m) % m, and
       // bit_count((w & -w) - 1) + 1 == numberOfTrailingZeros(w) + 1 —
-      // registers bit-identical; above the bound the loop below is
-      // unchanged.
-      if (e.count() <= math.min(smallGraphMax, 4000000L / m)) {
-        val rows = e.collect()
-        val nE = rows.length
-        val srcA = new Array[Long](nE); val dstA = new Array[Long](nE)
-        var i = 0
-        while (i < nE) { srcA(i) = rows(i).getLong(0); dstA(i) = rows(i).getLong(1); i += 1 }
-        val nodeIds = (srcA ++ dstA).distinct
-        val idx = nodeIds.zipWithIndex.toMap
-        var regs = Array.ofDim[Long](nodeIds.length, m) // 0 = absent (rho >= 1)
-        nodeIds.foreach { nd =>
+      // registers bit-identical. A register (rho <= 64 - p + 1) fits a
+      // byte: two n·m byte arrays are m/4 words per node.
+      val fast = DriverGraph.graph(e, nodeWords = m / 4, outRows = maxRadius + 1,
+        maxEdges = smallGraphMax)
+      if (fast.isDefined) {
+        val g = fast.get
+        var regs = new Array[Byte](g.n * m) // 0 = absent (rho >= 1)
+        g.ids.indices.foreach { v =>
           val hv = graft.plans.PolyHash64.compute(
-            org.apache.spark.unsafe.types.UTF8String.fromString(s"hll|$nd"))
-          val bucket = (((hv % m) + m) % m).toInt
+            org.apache.spark.unsafe.types.UTF8String.fromString(s"hll|${g.ids(v)}"))
           val wv = hv >>> p
-          val rhoV = if (wv == 0L) rhoCap
-            else java.lang.Long.numberOfTrailingZeros(wv) + 1L
-          regs(idx(nd))(bucket) = rhoV
+          regs(v * m + (((hv % m) + m) % m).toInt) =
+            (if (wv == 0L) rhoCap else java.lang.Long.numberOfTrailingZeros(wv) + 1L).toByte
         }
-        val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-        def emit(r: Int): Unit = nodeIds.foreach { nd =>
-          val a = regs(idx(nd))
-          var s = 0L; var nf = 0L; var j = 0
-          while (j < m) { if (a(j) > 0L) { s += a(j); nf += 1L }; j += 1 }
-          out += org.apache.spark.sql.Row(nd, r.toLong, s, nf)
-        }
-        emit(0)
-        (1 to maxRadius).foreach { t =>
-          val next = regs.map(_.clone())
-          i = 0
-          while (i < nE) {
-            val si = idx(srcA(i)); val di = idx(dstA(i))
-            var j = 0
-            while (j < m) {
-              if (regs(di)(j) > next(si)(j)) next(si)(j) = regs(di)(j)
-              j += 1
-            }
-            i += 1
+        val out = Array.fill(4)(new Array[Long](g.n * (maxRadius + 1))) // node, radius, reg_sum, n_filled
+        (0 to maxRadius).foreach { r =>
+          if (r > 0) { // max-merge every edge's target registers into its source
+            val next = regs.clone()
+            for (i <- g.src.indices; j <- 0 until m)
+              next(g.src(i) * m + j) = math.max(next(g.src(i) * m + j), regs(g.dst(i) * m + j)).toByte
+            regs = next
           }
-          regs = next
-          emit(t)
+          g.ids.indices.foreach { v =>
+            val filled = regs.slice(v * m, v * m + m).filter(_ > 0)
+            val o = r * g.n + v
+            out(0)(o) = g.ids(v); out(1)(o) = r.toLong
+            out(2)(o) = filled.map(_.toLong).sum; out(3)(o) = filled.length.toLong
+          }
         }
-        val spark = edges.sparkSession
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(out.toSeq, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("radius", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("reg_sum", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("n_filled", LongType, nullable = false))))
+        return DriverGraph.frame(edges.sparkSession, Seq("node" -> out(0),
+          "radius" -> out(1), "reg_sum" -> out(2), "n_filled" -> out(3)))
       }
       var state = nodes
         .select(col("node"), pmod(h, lit(m.toLong)).as("bucket"), rho.as("reg"))
@@ -929,7 +787,7 @@ object GraphOps {
     * Nothing is per-pair. */
   def deterministicWalks(edges: DataFrame, srcCol: String, dstCol: String,
                          walksPerNode: Int = 2, length: Int = 4,
-                         smallGraphMax: Long = 2000000L): DataFrame = {
+                         smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     require(walksPerNode >= 1 && walksPerNode <= 64,
       s"walksPerNode must be in [1,64], got $walksPerNode")
     require(length >= 1 && length <= 32, s"length must be in [1,32], got $length")
@@ -940,52 +798,36 @@ object GraphOps {
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node"))).distinct()
     try {
-      // Small-graph fast path (the seedDistance discipline): ~3 jobs
-      // per step for frontiers the driver replays exactly —
-      // PolyHash64.compute is the same static kernel, the argmin tie
-      // order (h, dst) is the signed-long struct min, Long.toString
-      // matches the long→string cast. Bound is output-aware: the
-      // replay materializes nodes × walksPerNode × (length+1) rows.
-      if (e.count() <= math.min(smallGraphMax, 2000000L / (walksPerNode.toLong * (length + 1)))) {
-        val rowsA = e.collect()
-        val adj = new scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        rowsA.foreach { r =>
-          adj.getOrElseUpdate(r.getLong(0), scala.collection.mutable.ArrayBuffer.empty) += r.getLong(1)
-        }
-        val nodeIds = (rowsA.map(_.getLong(0)) ++ rowsA.map(_.getLong(1))).distinct
-        val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-        nodeIds.foreach { nd =>
-          (0 until walksPerNode).foreach { wk =>
-            out += org.apache.spark.sql.Row(nd, wk.toLong, 0L, nd)
-          }
-        }
-        var alive = nodeIds.flatMap(nd =>
-          (0 until walksPerNode).map(wk => (nd, wk.toLong, nd))).toSeq
-        (1 to length).foreach { t =>
-          alive = alive.flatMap { case (start, wk, cur) =>
-            adj.get(cur) match {
-              case None => None // dead end: the walk just stops
-              case Some(ds) =>
-                var bestH = Long.MaxValue; var bestD = Long.MaxValue
-                ds.foreach { d =>
-                  val hv = graft.plans.PolyHash64.compute(
-                    org.apache.spark.unsafe.types.UTF8String.fromString(
-                      s"walk|$start|$wk|$t|$d"))
-                  if (hv < bestH || (hv == bestH && d < bestD)) { bestH = hv; bestD = d }
-                }
-                out += org.apache.spark.sql.Row(start, wk, t.toLong, bestD)
-                Some((start, wk, bestD))
+      // Small-graph fast path ([[DriverGraph]]): ~3 jobs per step for
+      // frontiers the driver replays exactly — PolyHash64.compute is the
+      // same static kernel, the argmin tie order (h, dst) is the
+      // signed-long struct min (index order is id order), Long.toString
+      // matches the long→string cast. The replay emits nodes ×
+      // walksPerNode × (length+1) rows at most, all charged.
+      val fast = DriverGraph.graph(e, nodeWords = walksPerNode,
+        outRows = walksPerNode * (length + 1), maxEdges = smallGraphMax)
+      if (fast.isDefined) {
+        val g = fast.get
+        // cur(v * walksPerNode + wk): where walk wk from v stands; -1 once
+        // it reaches a node without out-edges, which ends the walk
+        val cur = Array.tabulate(g.n * walksPerNode)(_ / walksPerNode)
+        val out = Array.fill(4)(new Array[Long](cur.length * (length + 1))) // start, walk, step, node
+        var rows = 0
+        (0 to length).foreach { t =>
+          cur.indices.foreach { x =>
+            val (start, wk) = (x / walksPerNode, x % walksPerNode)
+            if (t > 0 && cur(x) >= 0) cur(x) = g.adj.slice(g.off(cur(x)), g.off(cur(x) + 1))
+              .minByOption(u => (graft.plans.PolyHash64.compute(
+                org.apache.spark.unsafe.types.UTF8String.fromString(
+                  s"walk|${g.ids(start)}|$wk|$t|${g.ids(u)}")), u)).getOrElse(-1)
+            if (cur(x) >= 0) {
+              out(0)(rows) = g.ids(start); out(1)(rows) = wk; out(2)(rows) = t; out(3)(rows) = g.ids(cur(x))
+              rows += 1
             }
           }
         }
-        val spark = edges.sparkSession
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(out.toSeq, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("start", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("walk", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("step", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("node", LongType, nullable = false))))
+        return DriverGraph.frame(edges.sparkSession, Seq("start" -> out(0),
+          "walk" -> out(1), "step" -> out(2), "node" -> out(3)), rows = rows)
       }
       var frontier = nodes
         .withColumn("walk", explode(array((0 until walksPerNode)

@@ -346,14 +346,17 @@ object Regression {
     // narrow scan layout (a single-row-group parquet file is ONE
     // task); the pre-explode row shuffle is 1/B of the frame it
     // parallelizes
-    // persisted: TWO consumers (the ×B replicate chain and the
+    // checkpointed: TWO consumers (the ×B replicate chain and the
     // point-mean aggregate at the bottom) — unpinned, each re-scans
-    // the source and re-pays the key spread (guide §5)
+    // the source and re-pays the key spread (guide §5). A checkpoint,
+    // not a persist, so no CacheManager entry outlives the caller's
+    // action; lazy, so only the key spread's map stage runs at call
+    // time (AQE plans the checkpoint's input).
     val rows = df.filter(valueCol.isNotNull)
       .select(groupCol.as("g"), keyCol.as("k"),
         floor(valueCol * 100.0 + 0.5).cast(LongType).as("cents"))
       .repartition(col("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val u = pmod(graft.plans.PolyHash64.poly_hash64(
       concat(lit("boot|"), col("b").cast(StringType),
         lit("|"), col("k").cast(StringType))), lit(1000000L))

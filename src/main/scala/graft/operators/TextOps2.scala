@@ -185,7 +185,7 @@ object TextOps2 {
   def buildBm25Postings(docs: DataFrame, idCol: Column, textCol: Column): (DataFrame, DataFrame) = {
     // persisted: tf feeds BOTH the postings window and the stats
     // tot_dl aggregate — unpinned, the corpus text is tokenized twice
-    // per index build (call-lifetime entry, the labelPropagation
+    // per index build (call-lifetime entry, the minhashNearDups
     // posture; the harnesses clear caches per query)
     val tf = docs.select(idCol.as("doc_id"),
         explode(regexp_extract_all(lower(textCol), lit(TokenPattern), lit(0))).as("token"))

@@ -148,52 +148,37 @@ object WebIr {
     * needs the PageRank weight-compression trick upstream. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
            scale: Long = 1000000L,
-           smallGraphMax: Long = 2000000L): DataFrame = {
+           smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e = edges.select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Small-graph fast path (the GraphOps.pageRank discipline, bound
-      // CHECKED on the materialized distinct-edge count): the
-      // distributed loop pays ~6 driver-scheduled jobs per iteration
-      // (two aggregate checkpoints + two total broadcasts + two
-      // normalize checkpoints; measured 35 jobs at sf0.1). Under the
-      // bound, collect the edge list once and replay the SAME integer
-      // half-steps in the driver (Math.floorDiv == fdiv for positive
-      // divisors) — hub/auth values bit-identical; above the bound the
-      // distributed loop below is unchanged.
-      if (e.count() <= smallGraphMax) {
-        val rows = e.collect()
-        val nE = rows.length
-        val srcA = new Array[Long](nE); val dstA = new Array[Long](nE)
-        var i = 0
-        while (i < nE) { srcA(i) = rows(i).getLong(0); dstA(i) = rows(i).getLong(1); i += 1 }
-        var h = new scala.collection.mutable.HashMap[Long, Long]()
-        srcA.distinct.foreach(h(_) = scale)
-        var a = new scala.collection.mutable.HashMap[Long, Long]()
-        (1 to iters).foreach { _ =>
-          val ar = new scala.collection.mutable.HashMap[Long, Long]()
-          i = 0
-          while (i < nE) { ar(dstA(i)) = ar.getOrElse(dstA(i), 0L) + h(srcA(i)); i += 1 }
-          val asum = ar.valuesIterator.sum
-          a = ar.map { case (k, v) => k -> Math.floorDiv(v * scale, asum) }
-          val hr = new scala.collection.mutable.HashMap[Long, Long]()
-          i = 0
-          while (i < nE) { hr(srcA(i)) = hr.getOrElse(srcA(i), 0L) + a(dstA(i)); i += 1 }
-          val hsum = hr.valuesIterator.sum
-          h = hr.map { case (k, v) => k -> Math.floorDiv(v * scale, hsum) }
+      // Small-graph fast path ([[DriverGraph]]): the distributed loop
+      // pays ~6 driver-scheduled jobs per iteration (measured 35 jobs at
+      // sf0.1). The replay runs the SAME integer half-steps
+      // (Math.floorDiv == fdiv for positive divisors), so hub/auth
+      // values are bit-identical.
+      val fast = DriverGraph.graph(e, nodeWords = 4, maxEdges = smallGraphMax)
+      if (fast.isDefined) {
+        val g = fast.get
+        // one L1-normalized half-step: scores flow along `from` -> `to`
+        def halfStep(from: Array[Int], to: Array[Int], score: Array[Long]): Array[Long] = {
+          val acc = new Array[Long](g.n)
+          from.indices.foreach(i => acc(to(i)) += score(from(i)))
+          val total = acc.sum
+          acc.map(x => Math.floorDiv(x * scale, total))
         }
-        val nodeIds = (srcA ++ dstA).distinct
-        val spark = edges.sparkSession
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            nodeIds.toSeq.map(nd => org.apache.spark.sql.Row(
-              nd, h.getOrElse(nd, 0L), a.getOrElse(nd, 0L))), 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("hub", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("auth", LongType, nullable = false))))
+        // a role a node never plays stays 0: only sources start with a
+        // hub score, and a node without in-edges accrues no authority
+        val h0 = new Array[Long](g.n)
+        g.src.foreach(h0(_) = scale)
+        val (hub, auth) = (1 to iters).foldLeft((h0, h0)) { case ((h, _), _) =>
+          val a = halfStep(g.src, g.dst, h)
+          (halfStep(g.dst, g.src, a), a)
+        }
+        return DriverGraph.frame(edges.sparkSession,
+          Seq("node" -> g.ids, "hub" -> hub, "auth" -> auth))
       }
       var h = e.select(col("src").as("node")).distinct()
         .withColumn("s", lit(scale))

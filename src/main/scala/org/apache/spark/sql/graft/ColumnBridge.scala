@@ -42,6 +42,12 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
 
+  /** The rows a DataFrame's executed plan yields, in internal form —
+    * what `Dataset.rdd` maps to external rows. */
+  def toRdd(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.toRdd
+
   /** Add a planner strategy to a running session. */
   def addStrategy(spark: org.apache.spark.sql.SparkSession,
                   strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {

@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * CacheManager entries behind — their persisted working frames are
   * dead the moment the eagerly-checkpointed result exists, and a
   * leaked entry pins executor memory for the session's lifetime (the
-  * hyperBall leak the round-14 verdict flagged). LAZY operators are
-  * exempt by design: their call-lifetime entries are live until the
-  * caller's action, and Verify/Bench clear them between queries. */
+  * hyperBall leak the round-14 verdict flagged). Operators whose
+  * result is read lazily pin a working frame their two consumers
+  * share with a local checkpoint instead, which leaves no entry
+  * either. */
 class CacheHygieneSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -52,6 +53,20 @@ class CacheHygieneSpec extends AnyFunSuite {
     assertNoCacheLeft("hits") {
       graft.operators.WebIr.hits(edges.select($"src", $"dst"), "src", "dst",
         iters = 2).count()
+    }
+  }
+
+  test("label propagation's distributed path leaves no entry behind") {
+    assertNoCacheLeft("labelPropagation (distributed)") {
+      graft.operators.GraphOps.labelPropagation(pairs, "id_a", "id_b", iters = 2,
+        smallGraphMax = 0L).count()
+    }
+  }
+
+  test("the lazy bootstrap CI leaves no entry behind") {
+    assertNoCacheLeft("poissonBootstrapCi") {
+      graft.operators.Regression.poissonBootstrapCi(edges, $"src", $"dst",
+        $"w".cast("double"), b = 4, loRank = 1, hiRank = 4).count()
     }
   }
 }

@@ -284,7 +284,7 @@ class GraphSpec extends AnyFunSuite {
   test("seed distance: driver fast path equals the distributed frontier loop") {
     val pairs = graft.operators.VectorQueries.embedNearDupQ(spark, TestSpark.sf)
     val seeds = Seq(0L, 1L, 7L).toDF("node")
-    val fast = GraphOps.seedDistance(pairs, "id_a", "id_b", seeds, "node", 8)
+    val fast = TestSpark.onDriver(GraphOps.seedDistance(pairs, "id_a", "id_b", seeds, "node", 8))
       .orderBy($"node").collect().toSeq
     val dist = GraphOps.seedDistance(pairs, "id_a", "id_b", seeds, "node", 8,
         smallGraphMax = 0L) // forces the distributed loop
@@ -294,29 +294,29 @@ class GraphSpec extends AnyFunSuite {
 
   test("pagerank/ppr/hits: driver fast path equals the distributed iteration") {
     val e = GraphOps.nationFlowEdges(spark, TestSpark.sf)
-    val fastPr = GraphOps.pageRank(e, "src", "dst", "w", iters = 3)
+    val fastPr = TestSpark.onDriver(GraphOps.pageRank(e, "src", "dst", "w", iters = 3))
       .orderBy($"node").collect().toSeq
     val distPr = GraphOps.pageRank(e, "src", "dst", "w", iters = 3,
         smallGraphMax = 0L) // forces the distributed loop
       .orderBy($"node").collect().toSeq
     assert(fastPr == distPr && fastPr.nonEmpty)
     val seeds = Seq(1L, 3L).toDF("seed")
-    val fastPpr = GraphOps.personalizedPageRank(e, "src", "dst", "w",
-        seeds, "seed", iters = 3)
+    val fastPpr = TestSpark.onDriver(GraphOps.personalizedPageRank(e, "src", "dst", "w",
+        seeds, "seed", iters = 3))
       .orderBy($"node").collect().toSeq
     val distPpr = GraphOps.personalizedPageRank(e, "src", "dst", "w",
         seeds, "seed", iters = 3, smallGraphMax = 0L)
       .orderBy($"node").collect().toSeq
     assert(fastPpr == distPpr && fastPpr.nonEmpty)
     val le = e.select($"src", pmod($"dst" * 7L + 3L, lit(25L)).as("dst"))
-    val fastH = graft.operators.WebIr.hits(le, "src", "dst", iters = 2)
+    val fastH = TestSpark.onDriver(graft.operators.WebIr.hits(le, "src", "dst", iters = 2))
       .orderBy($"node").collect().toSeq
     val distH = graft.operators.WebIr.hits(le, "src", "dst", iters = 2,
         smallGraphMax = 0L)
       .orderBy($"node").collect().toSeq
     assert(fastH == distH && fastH.nonEmpty)
     val pairs = graft.operators.VectorQueries.embedNearDupQ(spark, TestSpark.sf)
-    val fastL = GraphOps.labelPropagation(pairs, "id_a", "id_b", iters = 4)
+    val fastL = TestSpark.onDriver(GraphOps.labelPropagation(pairs, "id_a", "id_b", iters = 4))
       .orderBy($"node").collect().toSeq
     val distL = GraphOps.labelPropagation(pairs, "id_a", "id_b", iters = 4,
         smallGraphMax = 0L)
@@ -329,13 +329,13 @@ class GraphSpec extends AnyFunSuite {
     val e = docs.select($"doc_id".as("src"), ($"doc_id" / 2).cast("long").as("dst"))
       .unionAll(docs.select($"doc_id".as("src"),
         (($"doc_id" / 2).cast("long") + 1).as("dst")))
-    val fastB = GraphOps.hyperBall(e, "src", "dst", p = 4, maxRadius = 3)
+    val fastB = TestSpark.onDriver(GraphOps.hyperBall(e, "src", "dst", p = 4, maxRadius = 3))
       .orderBy($"node", $"radius").collect().toSeq
     val distB = GraphOps.hyperBall(e, "src", "dst", p = 4, maxRadius = 3,
         smallGraphMax = 0L)
       .orderBy($"node", $"radius").collect().toSeq
     assert(fastB == distB && fastB.nonEmpty)
-    val fastW = GraphOps.deterministicWalks(e, "src", "dst", 2, 4)
+    val fastW = TestSpark.onDriver(GraphOps.deterministicWalks(e, "src", "dst", 2, 4))
       .orderBy($"start", $"walk", $"step").collect().toSeq
     val distW = GraphOps.deterministicWalks(e, "src", "dst", 2, 4,
         smallGraphMax = 0L)
@@ -349,7 +349,7 @@ class GraphSpec extends AnyFunSuite {
     val pairs = Seq((2L, 3L), (2L, 5L), (4L, 3L), (4L, 5L), (6L, 3L),
         (6L, 5L), (8L, 3L), (10L, 5L), (10L, 7L), (12L, 7L))
       .toDF("a", "b")
-    val fast = GraphOps.kCorePeel(pairs, "a", "b", k = 2, rounds = 6)
+    val fast = TestSpark.onDriver(GraphOps.kCorePeel(pairs, "a", "b", k = 2, rounds = 6))
       .orderBy($"node").collect().toSeq
     val dist = GraphOps.kCorePeel(pairs, "a", "b", k = 2, rounds = 6,
         smallGraphMax = 0L)
@@ -358,7 +358,7 @@ class GraphSpec extends AnyFunSuite {
     // and on the real purchase graph at the test SF, against the
     // distributed form with the registered query's parameters
     val pe = GraphOps.purchaseEdges(spark, TestSpark.sf)
-    val f2 = GraphOps.kCorePeel(pe, "ca", "sb", k = 48, rounds = 6)
+    val f2 = TestSpark.onDriver(GraphOps.kCorePeel(pe, "ca", "sb", k = 48, rounds = 6))
       .orderBy($"node").collect().toSeq
     val d2 = GraphOps.kCorePeel(pe, "ca", "sb", k = 48, rounds = 6,
         smallGraphMax = 0L)

@@ -99,9 +99,10 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toDF("id_a", "id_b")
     // smallGraphMax default → driver union-find; 0 → distributed stars
     for (cap <- Seq(100000L, 0L)) {
-      val comp = graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b",
+      val cc = graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b",
           smallGraphMax = cap)
-        .as[(Long, Long)].collect().toMap
+      if (cap > 0L) TestSpark.onDriver(cc)
+      val comp = cc.as[(Long, Long)].collect().toMap
       assert((1L to 5L).forall(comp(_) == 1L), s"cap=$cap")
       assert(comp(10L) == 10L && comp(11L) == 10L, s"cap=$cap")
       assert(comp.size == 7, s"cap=$cap")
@@ -116,7 +117,8 @@ class PipelineOpsSpec extends AnyFunSuite {
       val b = (i * 40503L + 7) % 193
       (a, if (a == b) b + 199 else b)
     }.toDF("id_a", "id_b")
-    val fast = graft.operators.Dedup.connectedComponents(edges, "id_a", "id_b")
+    val fast = TestSpark.onDriver(
+        graft.operators.Dedup.connectedComponents(edges, "id_a", "id_b"))
       .as[(Long, Long)].collect().toMap
     val dist = graft.operators.Dedup.connectedComponents(edges, "id_a", "id_b",
         smallGraphMax = 0L)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for all suites (forked test JVM). */
 object TestSpark {
@@ -26,5 +26,16 @@ object TestSpark {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** `df`, after checking it is a graph kernel's driver-replay output
+    * (a local relation) and not its distributed loop's — a parity test
+    * whose fast side silently fell back would compare a path with
+    * itself. */
+  def onDriver(df: DataFrame): DataFrame = {
+    val plan = org.apache.spark.sql.graft.ColumnBridge.logicalPlan(df)
+    assert(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      s"expected the driver replay's local relation, got:\n$plan")
+    df
   }
 }
