@@ -350,22 +350,15 @@ object Analytics {
     // The three maps are independent and each STARTS with an eager
     // driver action (cumSumBucketed's approxQuantile probe), so built
     // serially the construction pays three probe cascades back to
-    // back while most cores idle — overlap them from a small pool
-    // (guide §2.6, the bootstrapState wave pattern). users fills ONCE
+    // back while most cores idle — overlap them ([[Concurrently]],
+    // guide §2.6, the bootstrapState wave pattern). users fills ONCE
     // first so the concurrent probes ride the cache instead of racing
     // to compute the same blocks.
     users.count()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val maps = try {
-      Seq(("last_us", "r_score"), ("freq", "f_score"),
-        ("monetary_cents", "m_score"))
-        .map { case (m, o) =>
-          m -> pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            def call(): DataFrame = mapOf(m, o)
-          })
-        }
-        .map { case (m, f) => (m, f.get()) }
-    } finally { pool.shutdown(); () }
+    val metrics = Seq(("last_us", "r_score"), ("freq", "f_score"),
+      ("monetary_cents", "m_score"))
+    val maps = metrics.map(_._1).zip(
+      Concurrently.all(metrics.map { case (m, o) => () => mapOf(m, o) }))
     val scored = maps.foldLeft(users) { case (df, (m, mp)) => df.join(mp, Seq(m)) }
     scored.select(col("user_id"), col("last_us"), col("freq"),
       col("monetary_cents"), col("r_score"), col("f_score"), col("m_score"))

@@ -306,11 +306,13 @@ object Dedup {
     val p0 = pairs.select(col(idACol).cast(LongType).as("x"),
         col(idBCol).cast(LongType).as("y"))
       .filter(col("x") =!= col("y"))
+    // Under AQE the checkpoint call already runs the pair plan's query
+    // stages (6 jobs in a traced `ingestBatch`); the budget's count
+    // then materializes the checkpoint, which the first distributed
+    // iteration needs anyway
     val edges0 = p0.select(greatest(col("x"), col("y")).as("hi"),
         least(col("x"), col("y")).as("lo"))
       .distinct().localCheckpoint(eager = false)
-    // the budget's count materializes edges0's checkpoint, which the
-    // first distributed iteration needs anyway
     val fast = DriverGraph.graph(edges0, nodeWords = 2, maxEdges = smallGraphMax)
     if (fast.isDefined) {
       // union-find, union by MIN root: the surviving root of every merge

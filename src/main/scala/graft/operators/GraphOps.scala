@@ -133,7 +133,7 @@ object GraphOps {
           // which runs as its own collect job) — measured, the lazy
           // form re-pays rank lineage in the broadcast job (q_pagerank
           // 2.7 -> 4.4 s); label propagation below, with one consumer
-          // per round, takes the lazy form
+          // per round, takes the non-eager form
         next
       }
       last
@@ -365,7 +365,7 @@ object GraphOps {
     * celebrity node costs a wide aggregate, not a single-task sort);
     * label state is localCheckpoint-truncated per round, the pageRank
     * posture. Edge symmetrization doubles the edge frame once,
-    * up front, persisted across rounds. */
+    * up front, checkpointed across rounds. */
   def labelPropagation(pairs: DataFrame, idACol: String, idBCol: String,
                        iters: Int = 4,
                        smallGraphMax: Long = DriverGraph.NoCap): DataFrame = {
@@ -373,9 +373,10 @@ object GraphOps {
     val p0 = pairs.select(col(idACol).cast(LongType).as("a"),
         col(idBCol).cast(LongType).as("b"))
       .filter(col("a") =!= col("b"))
-    // Checkpointed lazily, not persisted: the budget's count fills the
+    // Checkpointed, not persisted: the budget's count fills the
     // checkpoint the distributed rounds read, and no CacheManager entry
-    // outlives the call.
+    // outlives the call. (Not lazy under AQE: the call itself runs the
+    // distinct's map stage.)
     val edges = p0.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(p0.select(col("b").as("src"), col("a").as("dst")))
       .distinct().localCheckpoint(eager = false)
@@ -412,9 +413,12 @@ object GraphOps {
         .agg(max(struct(col("c"), (-col("community")).as("nl"))).as("m"))
         .select(col("dst").as("node"), (-col("m.nl")).as("community"))
         .localCheckpoint(eager = false) // O(nodes); truncates per-round
-        // lineage LAZILY — no per-round job barrier (measured: the
-        // eager form cost ~1s/round in pure scheduling on a small
-        // graph)
+        // lineage. Not lazy: under AQE each round's call runs that
+        // round's query stages at once (3 jobs per round on a 7-edge
+        // graph, counted with a job listener; the caller's action then
+        // runs one); it still skips the eager form's extra
+        // materializing job (measured: ~1s/round in pure scheduling on
+        // a small graph)
     }
   }
 

@@ -223,12 +223,14 @@ object TrainingOps {
       .repartitionByRange(p, grpCol, idCol)
       .sortWithinPartitions(grpCol, idCol)
       .withColumn("__pid", spark_partition_id())
-      // lazy localCheckpoint, not persist: the slice-stats job and the
+      // localCheckpoint, not persist: the slice-stats job and the
       // offset pass below MUST see the same physical partitioning (the
       // range partitioner samples), and checkpoint blocks free with GC
       // when the caller drops the frame — a persist here would pin a
       // corpus-sized cache entry per call for the session's lifetime
-      // (the semanticGroups lesson)
+      // (the semanticGroups lesson). Not lazy: under AQE the call runs
+      // the range sample and every stage below it (14-15 jobs per
+      // packing in a traced `ingestBatch`).
       .localCheckpoint(false)
     val slices = sorted.groupBy(col("__pid"), col("__gk"))
       .agg(sum(col("__tk")).as("__s"))

@@ -82,8 +82,26 @@ object TrainingPipeline {
     * common subplans only via best-effort exchange reuse, so without
     * pinning, the gate chain replays once per consumer (measured: the
     * bootstrap phase alone at 15s vs 5s). Persist keeps lineage —
-    * lost blocks recompute — and the ContextCleaner reclaims them. */
+    * lost blocks recompute. */
   private val Lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  /** The frames one call persisted, oldest first — the call's cache
+    * entries, which stay until someone [[release]]s them. */
+  private[operators] final class Pins {
+    private val buf = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def apply(df: DataFrame): DataFrame = { buf += df; df.persist(Lvl) }
+    def frames: Seq[DataFrame] = buf.toSeq
+  }
+
+  /** Unpersist `frames` newest first. Persist order is a topological
+    * order (a frame is built after its parents), so this drops every
+    * child before its parents: `unpersist` re-plans each still-cached
+    * dependent whose buffer is not loaded, and a parent dropped first
+    * would re-plan its children's deep ingest plans. Children first,
+    * releasing a batch's 13 frames runs no job and takes 5-25 ms
+    * (4 vCPUs, 250-doc batches). */
+  private def release(frames: Seq[DataFrame]): Unit =
+    frames.reverseIterator.foreach(_.unpersist())
 
   /** The shared token pass: ONE explode yields every text-derived view
     * the stages need — the lead words are read by codegen array
@@ -96,7 +114,8 @@ object TrainingPipeline {
     * (doc_id, h), decon-gram hashes (doc_id, h)); each view is
     * byte-identical to what its standalone operator computes, so
     * results cannot drift. */
-  private def tokenPass(docs: DataFrame, cfg: Config): (DataFrame, DataFrame, DataFrame) = {
+  private def tokenPass(docs: DataFrame, cfg: Config, pin: Pins)
+      : (DataFrame, DataFrame, DataFrame) = {
     require(cfg.decontShingle >= 3,
       s"decontShingle must be >= 3, got ${cfg.decontShingle}")
     val L = cfg.decontShingle - 1
@@ -119,7 +138,7 @@ object TrainingPipeline {
     // the old post-filter exactly: h is NULL iff the gram would have
     // been filtered (lead NULL past the doc end) — concat_ws SKIPS
     // nulls, so an unguarded hash would alias short grams.
-    val leads = TextFunctions.tokenLeadRows(
+    val leads = pin(TextFunctions.tokenLeadRows(
         docs.repartition(col("doc_id")), Seq(col("doc_id")),
         col("text"), L + 1)
       .select(col("doc_id"), col("__w"), col("__l1"),
@@ -129,8 +148,7 @@ object TrainingPipeline {
         when(col(s"__l$L").isNotNull,
           xxhash64(concat_ws(" ",
             (col("__w") +: (1 to L).map(i => col(s"__l$i"))): _*)))
-          .as("__hd"))
-      .persist(Lvl)
+          .as("__hd")))
     val tri = leads.filter(col("__h3").isNotNull)
       .select(col("doc_id"), col("__h3").as("h"))
     val dec = leads.filter(col("__hd").isNotNull)
@@ -146,37 +164,36 @@ object TrainingPipeline {
     * side is a pure function of the batch up to the exact-dedup
     * anti-join, so nothing about its values can depend on when the
     * fill runs. */
-  private[operators] def gateStage(docs: DataFrame, cfg: Config)
+  private[operators] def gateStage(docs: DataFrame, cfg: Config, pin: Pins = new Pins)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (repToks, tri, dec) = tokenPass(docs, cfg)
+    val (repToks, tri, dec) = tokenPass(docs, cfg, pin)
     val scored = Curation.filterQuality(Curation.score(docs, col("text")), cfg.minQuality)
     val rep = CorpusOps.repetitionStatsFromTokens(repToks, "doc_id")
       .filter(col("top_frac") <= cfg.maxTopFrac && col("dup2_frac") <= cfg.maxDup2Frac)
       .select(col("doc_id"))
-    val gated = scored.join(rep, Seq("doc_id"))
-      .withColumn("__h", md5(TextFunctions.normalize(col("text"))))
-      .persist(Lvl)
+    val gated = pin(scored.join(rep, Seq("doc_id"))
+      .withColumn("__h", md5(TextFunctions.normalize(col("text")))))
     (gated, tri, dec)
   }
 
+  /** Every frame this persists is recorded on `pin`. */
   private[operators] def runStages(docs: DataFrame, cfg: Config,
-                                   probe: (String, DataFrame) => Unit = (_, _) => ()): Stages = {
+                                   probe: (String, DataFrame) => Unit = (_, _) => (),
+                                   pin: Pins = new Pins): Stages = {
     // 1. quality gate (shared stage-1 block)
-    val (gated, tri, dec) = gateStage(docs, cfg)
+    val (gated, tri, dec) = gateStage(docs, cfg, pin)
     probe("gate", gated)
 
     // 2. exact dedup
-    val exactDeduped = Curation.dedupKeepFirst(gated, col("text"), col("doc_id"))
-      .persist(Lvl)
+    val exactDeduped = pin(Curation.dedupKeepFirst(gated, col("text"), col("doc_id")))
     probe("exact_dedup", exactDeduped)
 
     // 3. near-dup groups -> canonical doc per group (signature state is
     // computed once, persisted, and handed back for incremental reuse)
-    val sigs = Dedup.minhashStateFromHashes(
+    val sigs = pin(Dedup.minhashStateFromHashes(
         tri.join(exactDeduped.select(col("doc_id")), Seq("doc_id"))
           .select(col("doc_id").as("id"), col("h")),
-        numPerm = 32, verifyK = cfg.verifyK)
-      .persist(Lvl)
+        numPerm = 32, verifyK = cfg.verifyK))
     val pairs = Dedup.minhashNearDupsFromState(sigs, numPerm = 32,
       bands = cfg.lshBands, threshold = cfg.nearDupThreshold, verifyK = cfg.verifyK)
     val labels = Dedup.connectedComponents(pairs, "id_a", "id_b")
@@ -206,19 +223,19 @@ object TrainingPipeline {
         .withColumn("text", col("clean_text")).drop("clean_text")
 
     // 4. split
-    val split = TrainingOps.assignSplit(canonical, col("doc_id"),
-      cfg.trainPct, cfg.valPct).persist(Lvl)
+    val split = pin(TrainingOps.assignSplit(canonical, col("doc_id"),
+      cfg.trainPct, cfg.valPct))
     probe("split", split)
 
     // 5. decontamination: drop leaking train docs (train×test on shared
     // decon-gram hashes — same join [[TrainingOps.decontaminate]] runs,
     // fed from the shared pass)
-    val sh = dec.join(split.select(col("doc_id"), col("split")), Seq("doc_id"))
-      .select(col("doc_id"), col("split"), col("h")).distinct().persist(Lvl)
+    val sh = pin(dec.join(split.select(col("doc_id"), col("split")), Seq("doc_id"))
+      .select(col("doc_id"), col("split"), col("h")).distinct())
     val leaks = sh.filter(col("split") === "train")
       .join(sh.filter(col("split") === "test").select(col("h")).distinct(), Seq("h"))
       .select(col("doc_id")).distinct()
-    val clean = split.join(leaks, Seq("doc_id"), "left_anti").persist(Lvl)
+    val clean = pin(split.join(leaks, Seq("doc_id"), "left_anti"))
     probe("decon", clean)
 
     // 6. pack per (split, lang)
@@ -256,8 +273,8 @@ object TrainingPipeline {
           else {
             val train = clean.filter(col("split") === "train")
             val merges = BpeOps.learnMerges(train, "text", cfg.bpeMerges)
-            val pieces = BpeOps.encode(clean, "doc_id", "text", merges)
-              .persist(Lvl) // feeds the vocab count AND the id mapping
+            // feeds the vocab count AND the id mapping
+            val pieces = pin(BpeOps.encode(clean, "doc_id", "text", merges))
             val vocab = TrainingOps.buildVocabFromTokens(
               pieces.join(train.select(col("doc_id")), Seq("doc_id")),
               col("pieces"), cfg.vocabSize)
@@ -274,7 +291,9 @@ object TrainingPipeline {
 
   /** Returns the shard manifest: one row per surviving document —
     * (split, lang, bin, doc_id, n_tokens), where `bin` is the
-    * token-budget pack within (split, lang). */
+    * token-budget pack within (split, lang). The manifest reads the
+    * stage frames this persists lazily, after it returns, so nothing
+    * here releases them: they stay cached for the session. */
   def run(docs: DataFrame, cfg: Config = Config(),
           probe: (String, DataFrame) => Unit = (_, _) => ()): DataFrame =
     runStages(docs, cfg, probe).manifest
@@ -344,26 +363,44 @@ object TrainingPipeline {
     * test doc revealed verbatim overlap with a shipped train doc);
     * `state` — the extended [[CorpusState]] for the next ingest;
     * `stateDelta` — the same state update in delta form, for O(batch)
-    * commits. */
+    * commits.
+    *
+    * Every field reads frames [[runIncremental]] persisted; they stay
+    * cached until [[release]]. */
   final case class IngestDelta(
       accepted: DataFrame,
       tombstones: DataFrame,
       state: CorpusState,
-      stateDelta: StateDelta)
+      stateDelta: StateDelta)(cached: Seq[DataFrame]) {
+
+    /** Unpersist every frame `runIncremental` cached for this delta —
+      * its gate frames (unless the caller handed them in), its stage
+      * frames, `accepted`, `tombstones` and the five `state` frames —
+      * children first. Call it once nothing reads the delta any more:
+      * afterwards each field recomputes from its inputs on every
+      * read. [[graft.streaming.CorpusIngest.ingestBatch]] releases
+      * each batch's delta after its commit. */
+    def release(): Unit = TrainingPipeline.release(cached)
+  }
 
   /** Pin every OUTPUT state frame to one computation. Persist (not
     * checkpoint): planning stays lazy, lineage survives a lost block,
     * and each frame's 2-4 downstream consumers reuse one computation —
     * an unpinned manifest replayed the whole bootstrap once per
     * consumer (measured 26s vs 6s on the registered query). Plan-DEPTH
-    * control across CHAINED in-memory ingests is [[truncated]]'s job. */
-  private def pinned(state: CorpusState): CorpusState =
+    * control across CHAINED in-memory ingests is [[truncated]]'s job.
+    *
+    * Who releases: [[bootstrapState]] hands its five frames to the
+    * caller, who unpersists them once the state is committed or
+    * replaced; [[runIncremental]] records them on its delta, and
+    * [[IngestDelta.release]] drops them. */
+  private def pinned(state: CorpusState, pin: Pins): CorpusState =
     CorpusState(
-      hashes = state.hashes.persist(Lvl),
-      sigs = state.sigs.persist(Lvl),
-      labels = state.labels.persist(Lvl),
-      shingles = state.shingles.persist(Lvl),
-      manifest = state.manifest.persist(Lvl))
+      hashes = pin(state.hashes),
+      sigs = pin(state.sigs),
+      labels = pin(state.labels),
+      shingles = pin(state.shingles),
+      manifest = pin(state.manifest))
 
   /** Truncate the INPUT state's plans at the ingest boundary. The
     * output state's frames reference each other (tombstones embed
@@ -375,11 +412,16 @@ object TrainingPipeline {
     * parquet-backed state (the deployment form) plans in milliseconds,
     * and an in-memory chained state pays one planning pass of
     * one-generation depth. `localCheckpoint(eager = false)` is the
-    * same truncation connectedComponents applies per iteration; its
+    * same truncation connectedComponents applies to its edges; its
     * blocks also CACHE the state scans the ingest reads 2-3 times
-    * each. Local-checkpoint blocks die with their executor — the
-    * documented trade-off; cluster deployments feed parquet state via
-    * [[loadState]] anyway. */
+    * each. It is not lazy: under AQE the call plans its input and runs
+    * every query stage below it at call time — in a traced
+    * `ingestBatch` over loaded state, one job each for shingles and
+    * manifest (their loads anti-join the dead set) and none for the
+    * three plain scans. Local-checkpoint blocks die with their
+    * executor — the documented trade-off; cluster deployments feed
+    * parquet state via [[loadState]] anyway — and the ContextCleaner
+    * drops them once the frames are unreachable. */
   private def truncated(state: CorpusState): CorpusState =
     CorpusState(
       hashes = state.hashes.localCheckpoint(false),
@@ -414,39 +456,39 @@ object TrainingPipeline {
   /** Capture incremental state from a full [[run]] over the initial
     * corpus — same manifest as `run`, plus the witness tables.
     *
-    * The five pinned frames are materialized HERE, overlapped from a
-    * small thread pool (guide §2.6 — Spark runs concurrent jobs fine;
-    * they were only serial because the ingest's first-touch jobs are
-    * issued by one driver thread, so five cache fills queued behind
-    * each other while most cores idled). Waves follow the dependency
-    * spine so shared persisted parents fill once before concurrent
-    * children read them: hashes first (fills the token-pass and gate
-    * caches), then sigs ∥ labels (sigs fills exactDeduped), then
-    * shingles ∥ manifest (both read the already-warm split/clean).
-    * Values are unchanged — the ingest consumed every frame anyway;
-    * this only moves WHEN the cache fills happen and lets them share
-    * the cluster. */
+    * The five pinned frames are materialized HERE, overlapped in
+    * waves ([[Concurrently]]; they were only serial because the
+    * ingest's first-touch jobs are issued by one driver thread, so
+    * five cache fills queued behind each other while most cores
+    * idled). Waves follow the dependency spine so shared persisted
+    * parents fill once before concurrent children read them: hashes
+    * first (fills the token-pass and gate caches), then sigs ∥ labels
+    * (sigs fills exactDeduped), then shingles ∥ manifest (both read
+    * the already-warm split/clean). Values are unchanged — the ingest
+    * consumed every frame anyway; this only moves WHEN the cache fills
+    * happen and lets them share the cluster.
+    *
+    * Once the waves have filled the five frames, the stage frames they
+    * were computed from are unpersisted: the returned five are the
+    * only cache entries this leaves, and the caller owns them
+    * (unpersist them once the state is committed or replaced). */
   def bootstrapState(docs: DataFrame, cfg: Config = Config()): CorpusState = {
-    val st = runStages(docs, cfg)
-    val state = pinned(CorpusState(
-      hashes = st.gated.select(col("__h").as("h")).distinct(),
-      sigs = st.sigs,
-      labels = st.labels,
-      shingles = st.shippedShingles,
-      manifest = st.manifest))
-    state.hashes.count()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val working = new Pins
+    val kept = new Pins
     try {
-      def warm(waves: Seq[Seq[DataFrame]]): Unit = waves.foreach { wave =>
-        wave.map(f => pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = f.count()
-        })).foreach(_.get())
-      }
-      warm(Seq(
-        Seq(state.sigs, state.labels),
-        Seq(state.shingles, state.manifest)))
-    } finally { pool.shutdown(); () }
-    state
+      val st = runStages(docs, cfg, pin = working)
+      val state = pinned(CorpusState(
+        hashes = st.gated.select(col("__h").as("h")).distinct(),
+        sigs = st.sigs,
+        labels = st.labels,
+        shingles = st.shippedShingles,
+        manifest = st.manifest), kept)
+      state.hashes.count()
+      Concurrently.both(state.sigs.count(), state.labels.count())
+      Concurrently.both(state.shingles.count(), state.manifest.count())
+      release(working.frames.filterNot(f => kept.frames.exists(_ eq f)))
+      state
+    } catch { case e: Throwable => release(working.frames ++ kept.frames); throw e }
   }
 
   /** Ingest a NEW batch against maintained state — the corpus is never
@@ -465,18 +507,33 @@ object TrainingPipeline {
     * IncrementalPipelineSpec pins exactly that. Bin numbers differ by
     * design: incremental bins append after the group's historical max
     * (from the PRE-tombstone manifest, so a tombstoned doc's bin is
-    * never reused while shard files may still contain it). */
+    * never reused while shard files may still contain it).
+    *
+    * Every frame this persists is recorded on the returned delta and
+    * stays cached until [[IngestDelta.release]]; a call that throws
+    * releases them itself. Callers that keep reading the delta's
+    * frames after they return — chained in-memory ingests,
+    * [[incrementalPipelineQ]] — do not release. */
   def runIncremental(inputState: CorpusState, batch: DataFrame,
                      cfg: Config = Config(),
                      probe: (String, DataFrame) => Unit = (_, _) => (),
                      preGated: Option[(DataFrame, DataFrame, DataFrame)] = None)
       : IngestDelta = {
+    val pin = new Pins
+    try ingest(inputState, batch, cfg, probe, preGated, pin)
+    catch { case e: Throwable => release(pin.frames); throw e }
+  }
+
+  private def ingest(inputState: CorpusState, batch: DataFrame, cfg: Config,
+                     probe: (String, DataFrame) => Unit,
+                     preGated: Option[(DataFrame, DataFrame, DataFrame)],
+                     pin: Pins): IngestDelta = {
     val state = truncated(inputState)
     // 1. quality gate (per-doc, identical to the full run; `preGated`
     // hands in the SAME gateStage frames when the caller pre-filled
     // them concurrently with other work — values identical by
     // construction, only the fill time moves)
-    val (gated, tri, dec) = preGated.getOrElse(gateStage(batch, cfg))
+    val (gated, tri, dec) = preGated.getOrElse(gateStage(batch, cfg, pin))
     probe("gate", gated)
 
     // 2. exact dedup: within batch, then against every hash ever seen.
@@ -486,27 +543,27 @@ object TrainingPipeline {
     // ingest), then anti-join the tiny overlap back. The broadcasts
     // encode the ingest contract: batch ≪ corpus.
     val batchDeduped = Curation.dedupKeepFirst(gated, col("text"), col("doc_id"))
-    // localCheckpoint (lazy): seenHashes feeds TWO broadcast consumers
-    // (the entrant anti-join and the hash-delta anti-join); un-cut,
-    // each broadcast re-plans AND re-executes the corpus-hash scan —
-    // one scan of the largest-cardinality state table per consumer.
+    // localCheckpoint: seenHashes feeds TWO broadcast consumers (the
+    // entrant anti-join and the hash-delta anti-join); un-cut, each
+    // broadcast re-plans AND re-executes the corpus-hash scan — one
+    // scan of the largest-cardinality state table per consumer. Not
+    // lazy: under AQE the call runs the gate and the semi-join's query
+    // stages at once (8 jobs in a traced `ingestBatch`).
     val seenHashes = state.hashes
       .join(broadcast(gated.select(col("__h").as("h")).distinct()), Seq("h"))
       .localCheckpoint(false)
-    val entrants = batchDeduped
-      .join(broadcast(seenHashes), col("__h") === col("h"), "left_anti").drop("__h")
-      .persist(Lvl)
+    val entrants = pin(batchDeduped
+      .join(broadcast(seenHashes), col("__h") === col("h"), "left_anti").drop("__h"))
     probe("exact_dedup", entrants)
 
     // 3. near-dup: batch×batch pairs + batch×corpus pairs + the prior
     // components replayed as star edges (id -> comp). CC over the union
     // merges components exactly: mins only ever decrease, so a shipped
     // canonical whose component gained a smaller min is now superseded.
-    val entrantSigs = Dedup.minhashStateFromHashes(
+    val entrantSigs = pin(Dedup.minhashStateFromHashes(
         tri.join(entrants.select(col("doc_id")), Seq("doc_id"))
           .select(col("doc_id").as("id"), col("h")),
-        numPerm = 32, verifyK = cfg.verifyK)
-      .persist(Lvl)
+        numPerm = 32, verifyK = cfg.verifyK))
     // batch×batch AND batch×corpus pairs from ONE band join over a
     // side-tagged union of signature states: the batch side probes,
     // every row builds; a batch-batch collision dedups with id_a <
@@ -538,7 +595,9 @@ object TrainingPipeline {
     // touched/touchedComps BROADCAST nodes and into every CC-loop and
     // label consumer — persist dedups the EXECUTION but each action
     // still re-PLANS the full LSH tree (measured ~21s of pure driver
-    // planning per ingest); the cut makes every downstream plan shallow
+    // planning per ingest); the cut makes every downstream plan
+    // shallow. Under AQE the call itself runs the band join's query
+    // stages (12 jobs in a traced `ingestBatch`).
     }.localCheckpoint(false)
     // Delta-only CC: a prior component can only change if a new edge
     // touches one of its nodes (graphs merge through shared nodes and
@@ -559,7 +618,7 @@ object TrainingPipeline {
       .join(broadcast(touchedComps), Seq("comp"), "left_anti")
       .select(col("id"), col("comp"))
       .unionByName(ccLabels)
-      .localCheckpoint(false) // same planning-cost cut as newEdges
+      .localCheckpoint(false) // same planning-cost cut as newEdges (3 jobs at call time)
     probe("lsh_cc", labels)
     val canonical = entrants
       .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -571,16 +630,15 @@ object TrainingPipeline {
       .select(col("doc_id"))
 
     // 4. split (a pure function of the id — re-runs agree by construction)
-    val split = TrainingOps.assignSplit(canonical, col("doc_id"),
-      cfg.trainPct, cfg.valPct).persist(Lvl)
+    val split = pin(TrainingOps.assignSplit(canonical, col("doc_id"),
+      cfg.trainPct, cfg.valPct))
     probe("split", split)
 
     // 5. decontamination, both directions. Shingles of docs tombstoned
     // in step 3 are dead and must not witness leaks.
-    val batchShingles = dec
+    val batchShingles = pin(dec
       .join(split.select(col("doc_id"), col("split")), Seq("doc_id"))
-      .select(col("doc_id"), col("split"), col("h")).distinct()
-      .persist(Lvl)
+      .select(col("doc_id"), col("split"), col("h")).distinct())
     val liveOld = state.shingles
       .join(broadcast(superseded), Seq("doc_id"), "left_anti")
     val newTestH = batchShingles.filter(col("split") === "test")
@@ -617,11 +675,10 @@ object TrainingPipeline {
       .withColumn("bin", col("bin") + coalesce(col("__off"), lit(0L)))
       .select(col("split"), col("lang"), col("bin"), col("doc_id"), col("n_tokens"))
 
-    val pinnedRows = newRows.persist(Lvl)
+    val pinnedRows = pin(newRows)
     probe("pack", pinnedRows)
-    val pinnedTombs = superseded.withColumn("reason", lit("superseded"))
-      .unionByName(decontaminated.withColumn("reason", lit("decontaminated")))
-      .persist(Lvl)
+    val pinnedTombs = pin(superseded.withColumn("reason", lit("superseded"))
+      .unionByName(decontaminated.withColumn("reason", lit("decontaminated"))))
     val deadIds = pinnedTombs.select(col("doc_id"))
 
     // Every state update is append- or scan-shaped: the hash delta is
@@ -647,9 +704,9 @@ object TrainingPipeline {
         .unionByName(newShingles),
       manifest = state.manifest
         .join(broadcast(deadIds), Seq("doc_id"), "left_anti")
-        .unionByName(pinnedRows)))
+        .unionByName(pinnedRows)), pin)
     IngestDelta(pinnedRows, pinnedTombs, newState,
-      StateDelta(newHashes, entrantSigs, newShingles))
+      StateDelta(newHashes, entrantSigs, newShingles))(pin.frames)
   }
 
   /** §2.5 capstone — the manifest over `documents`, ORACLE-BACKED
@@ -687,16 +744,13 @@ object TrainingPipeline {
     val (corpus, batch) = CorpusOps.corpusBatchSplit(s, d)
     val cfg = Config(lshBands = 16)
     // The batch's gate is a pure function of the batch, so its cache
-    // fill overlaps the corpus bootstrap from one pool thread (guide
-    // §2.6 — the bootstrapState wave pattern, one level up): the
-    // ingest then consumes the already-warm frames via preGated.
+    // fill overlaps the corpus bootstrap ([[Concurrently]] — the
+    // bootstrapState wave pattern, one level up): the ingest then
+    // consumes the already-warm frames via preGated.
+    // The returned frame reads the state and delta lazily, so nothing
+    // here is released: it all stays cached for the session.
     val pre = gateStage(batch, cfg)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val warm = pool.submit(new java.util.concurrent.Callable[Long] {
-      def call(): Long = pre._1.count()
-    })
-    val st = try bootstrapState(corpus, cfg)
-    finally { warm.get(); pool.shutdown(); () }
+    val (st, _) = Concurrently.both(bootstrapState(corpus, cfg), pre._1.count())
     val delta = runIncremental(st, batch, cfg, preGated = Some(pre))
     delta.accepted
       .select(lit("add").as("action"), col("doc_id"), col("split"),

@@ -92,7 +92,10 @@ object ShardStore {
       .drop("__z")
 
   /** Manifest rows + their text, clustered and landed. Fails loudly if
-    * a manifest row has no document (stale or filtered input).
+    * a manifest row has no document (stale or filtered input): the
+    * write job itself raises on such a row, before any file is
+    * committed, and the call throws an `IllegalArgumentException`
+    * naming the row — no separate counting job.
     *
     * `maxRecordsPerFile` (0 = unbounded) bounds shard-file size — the
     * knob a training-data reader wants ("one shard file ≈ one worker's
@@ -103,15 +106,25 @@ object ShardStore {
   private def land(docs: DataFrame, manifest: DataFrame, root: String,
                    mode: String, maxRecordsPerFile: Long,
                    cluster: DataFrame => DataFrame = plainCluster): Unit = {
-    val missing = manifest
-      .join(docs.select(col("doc_id")), Seq("doc_id"), "left_anti").count()
-    require(missing == 0,
-      s"$missing manifest rows have no document in `docs` — stale or filtered input?")
-    cluster(manifest.join(docs.select(col("doc_id"), col("text")), Seq("doc_id")))
-      .write.mode(mode)
+    val rows = manifest
+      .join(docs.select(col("doc_id"), col("text"), lit(true).as("__doc")), Seq("doc_id"), "left")
+      .withColumn("text", when(col("__doc").isNull, raise_error(concat(
+        lit("manifest row doc_id="), coalesce(col("doc_id").cast("string"), lit("null")),
+        lit(" " + NoDocument)))).otherwise(col("text")))
+      .drop("__doc")
+    try cluster(rows).write.mode(mode)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("split", "lang").parquet(root)
+    catch { case e: Exception =>
+      val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage).flatMap(RaisedNoDocument.findFirstIn)).nextOption()
+      throw raised.fold[Throwable](e)(new IllegalArgumentException(_, e))
+    }
   }
+
+  private val NoDocument = "has no document in `docs` — stale or filtered input?"
+  private val RaisedNoDocument =
+    ("manifest row doc_id=\\S+ " + java.util.regex.Pattern.quote(NoDocument)).r
 
   /** Land the bootstrap manifest (replaces any prior table at the
     * root) as committed version 0 — the table is addressable only once

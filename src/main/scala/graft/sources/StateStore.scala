@@ -240,6 +240,12 @@ object StateStore {
   def load(spark: SparkSession, root: String): Option[CorpusState] =
     latestVersion(spark, root).map(v => loadVersion(spark, root, v))
 
+  /** The empty corpus, in the stored tables' schemas. */
+  private[graft] def empty(spark: SparkSession): CorpusState = {
+    def none(t: String) = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemas(t))
+    CorpusState(none("hashes"), none("sigs"), none("labels"), none("shingles"), none("manifest"))
+  }
+
   /** Consolidate the accumulated delta partitions: commit the live
     * state as of LATEST, with `dead` applied physically, as a new base
     * version LATEST+1, which then deletes every partition and label

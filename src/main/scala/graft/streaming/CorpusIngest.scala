@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 import graft.operators.TrainingPipeline
 import graft.sources.{ShardStore, StateStore}
@@ -51,23 +50,21 @@ object CorpusIngest {
              root: String): Long =
     StateStore.commitDelta(spark, delta, root)
 
-  /** Latest committed state; an untouched root loads the empty-corpus
-    * bootstrap (so the very first batch needs no special casing). */
+  /** Latest committed state; an untouched root loads the empty corpus
+    * (so the very first batch needs no special casing). Nothing here
+    * is cached. */
   def load(spark: SparkSession, root: String): TrainingPipeline.CorpusState =
-    StateStore.load(spark, root).getOrElse {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("lang", StringType),
-          StructField("text", StringType))))
-      TrainingPipeline.bootstrapState(empty)
-    }
+    StateStore.load(spark, root).getOrElse(StateStore.empty(spark))
 
   /** One micro-batch: skip if already committed, else ingest + land +
     * commit + scheduled state maintenance. Exposed for tests and for
     * batch-mode callers that want the same exactly-once-per-batch
     * bookkeeping.
+    *
+    * Cache ownership: the call releases every frame it cached
+    * ([[TrainingPipeline.IngestDelta.release]], after the commit and
+    * the maintenance, also when one of them throws), so a long-lived
+    * session running this loop holds no cache entry between batches.
     *
     * `maxStateDeltas` is the self-maintenance debt cap: once the state
     * store accumulates that many delta partitions, the commit is
@@ -88,12 +85,14 @@ object CorpusIngest {
     val marker = new Path(s"$stateRoot/BATCH_$batchId")
     if (f.exists(marker)) return
     val delta = TrainingPipeline.runIncremental(load(spark, stateRoot), batch, cfg)
-    ShardStore.append(batch, delta.accepted, shardRoot)
-    ShardStore.addTombstones(delta.tombstones, shardRoot)
-    commit(spark, delta, stateRoot)
-    f.create(marker, true).close()
-    if (maxStateDeltas > 0)
-      StateStore.maybeCompact(spark, stateRoot, maxDeltas = maxStateDeltas)
+    try {
+      ShardStore.append(batch, delta.accepted, shardRoot)
+      ShardStore.addTombstones(delta.tombstones, shardRoot)
+      commit(spark, delta, stateRoot)
+      f.create(marker, true).close()
+      if (maxStateDeltas > 0)
+        StateStore.maybeCompact(spark, stateRoot, maxDeltas = maxStateDeltas)
+    } finally delta.release()
   }
 
   /** Wire a document stream (doc_id, lang, text) into the ingest loop. */

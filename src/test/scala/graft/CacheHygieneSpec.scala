@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * hyperBall leak the round-14 verdict flagged). Operators whose
   * result is read lazily pin a working frame their two consumers
   * share with a local checkpoint instead, which leaves no entry
-  * either. */
+  * either. The corpus-ingest loop owns its cache explicitly: a batch
+  * releases everything it cached, and a bootstrap keeps only the
+  * state it returns. */
 class CacheHygieneSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -60,6 +62,29 @@ class CacheHygieneSpec extends AnyFunSuite {
     assertNoCacheLeft("labelPropagation (distributed)") {
       graft.operators.GraphOps.labelPropagation(pairs, "id_a", "id_b", iters = 2,
         smallGraphMax = 0L).count()
+    }
+  }
+
+  private def docs(ids: Long*) =
+    ids.map(i => (i, "en", (1 to 45).map(w => s"d${i}w$w").mkString(" ")))
+      .toDF("doc_id", "lang", "text")
+
+  test("an ingest batch releases every frame it cached, ingested or replayed") {
+    val base = java.nio.file.Files.createTempDirectory("graft_hygiene").toString
+    def ingest(batch: Seq[Long], id: Long): Unit = graft.streaming.CorpusIngest
+      .ingestBatch(docs(batch: _*), id, s"$base/state", s"$base/shards")
+    assertNoCacheLeft("ingestBatch on a fresh root")(ingest(Seq(1L, 2L), 0L))
+    assertNoCacheLeft("ingestBatch on a committed state")(ingest(Seq(10L, 11L), 1L))
+    assertNoCacheLeft("a replayed ingestBatch")(ingest(Seq(10L, 11L), 1L))
+    assert(graft.sources.ShardStore.read(spark, s"$base/shards").count() == 4)
+  }
+
+  test("bootstrapState leaves only the five state frames it returns") {
+    assertNoCacheLeft("bootstrapState") {
+      val st = graft.operators.TrainingPipeline.bootstrapState(docs(1L, 2L, 3L))
+      val five = Seq(st.hashes, st.sigs, st.labels, st.shingles, st.manifest)
+      assert(five.forall(_.storageLevel.useMemory), "a state frame is not cached")
+      five.foreach(_.unpersist())
     }
   }
 

@@ -171,6 +171,31 @@ class ShardStoreSpec extends AnyFunSuite {
     assert(ShardStore.read(spark, fresh).count() == 2)
   }
 
+  private def manifestOf(ids: Long*) = ids.map(i => ("train", "en", 0L, i, 45L))
+    .toDF("split", "lang", "bin", "doc_id", "n_tokens")
+
+  test("init fails loudly on a manifest row with no document and commits no version") {
+    val docs = Seq((1L, "en", filler("ma"))).toDF("doc_id", "lang", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_nodoc").toString + "/shards"
+    val e = intercept[IllegalArgumentException] { ShardStore.init(docs, manifestOf(1L, 2L), root) }
+    assert(e.getMessage.contains("doc_id=2 has no document"), e.getMessage)
+    val r = intercept[IllegalArgumentException] { ShardStore.read(spark, root) }
+    assert(r.getMessage.contains("no committed version"), r.getMessage)
+  }
+
+  test("append fails loudly on a manifest row with no document and lands none of its rows") {
+    val docs = Seq((1L, "en", filler("mb")), (3L, "en", filler("mc"))).toDF("doc_id", "lang", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_nodoc").toString + "/shards"
+    ShardStore.init(docs, manifestOf(1L), root)
+    def live() = ShardStore.read(spark, root).orderBy($"doc_id").collect().toSeq
+    val before = live()
+    val e = intercept[IllegalArgumentException] {
+      ShardStore.append(docs, manifestOf(3L, 4L), root)
+    }
+    assert(e.getMessage.contains("doc_id=4 has no document"), e.getMessage)
+    assert(live() == before)
+  }
+
   test("counted maybeCompact runs zero Spark jobs below the debt threshold") {
     val docs = Seq((1L, "en", filler("za")), (2L, "en", filler("zb")))
       .toDF("doc_id", "lang", "text")
