@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Delta-style maintenance for the landed shard table
@@ -17,14 +17,23 @@ import org.apache.spark.sql.functions._
   * file-open cost both reset to zero.
   *
   * Every change is a version: data lives under `root/v<N>/<token>/`,
-  * appends and tombstones land file-atomically inside the live
-  * version, and [[init]] and [[compact]] commit a whole table through
+  * and [[init]] and [[compact]] commit a whole table through
   * [[VersionLog]], the protocol every versioned store shares: the
   * table is written in its final home, then `commits/v<N>` is claimed
   * (the marker names the token) and `LATEST` flips — nothing moves
-  * after the claim. A reader never sees a missing or half-written
-  * table: it resolves the live version once ([[dataDir]], read-only)
-  * and reads an immutable complete version dir. This store's
+  * after the claim. Appends and tombstones have ONE landing path: they
+  * are written under a writer-private stage, checked, and moved file
+  * by file into the live version. A corpus ingest batch stages them
+  * inside its state version ([[StateStore]]), so the state claim
+  * decides the batch's shard files too
+  * ([[graft.streaming.CorpusIngest.ingestBatch]]); the standalone
+  * [[append]] and [[addTombstones]] stage under `root/staging/` and
+  * claim nothing. Landed files become visible one move at a time, so a
+  * batch that crashed mid-moves shows part of its rows until the next
+  * batch heals it (as a Spark append's job commit did). A reader never
+  * sees a missing or half-written table: it resolves the live version
+  * once ([[dataDir]], read-only) and reads an immutable complete
+  * version dir. This store's
   * retention: the PREVIOUS version is kept until the next compaction
   * as a grace copy, so a reader that resolved the old version
   * mid-compact finishes its scan against intact files; only versions
@@ -34,10 +43,10 @@ import org.apache.spark.sql.functions._
   * deployment-scale graduation and this object's surface maps 1:1
   * onto it: append = append, tombstone = delete, compact = OPTIMIZE.)
   *
-  * [[init]] lands `v0`, and so does the first [[append]] to a root
-  * that does not exist yet. A root whose log holds no committed
-  * version is not a shard table: every reader and writer fails loudly
-  * on it.
+  * [[init]] lands `v0`; the first [[append]] or ingest batch to a root
+  * that does not exist yet commits an empty `v0` and lands in it. A
+  * root whose log holds no committed version is not a shard table:
+  * every reader and writer fails loudly on it.
   *
   * Concurrency contract: READERS are lock-free at any time (the
   * version log + grace copy above); COMPACTORS may race — exactly one
@@ -46,7 +55,12 @@ import org.apache.spark.sql.functions._
   * (the [[graft.streaming.CorpusIngest]] shape). An append racing a
   * compact would land rows in the outgoing version after the rewrite
   * read them; a transactional format's optimistic commit protocol is
-  * the graduation for multi-writer deployments.
+  * the graduation for multi-writer deployments. For the same reason
+  * shard compaction stays the ingest loop's call, made after a batch
+  * returns: a batch that crashed after its claim is healed by the next
+  * batch, which moves the rest of its files into the shard dir
+  * recorded at stage time — a compaction in between would have left
+  * that dir behind.
   */
 object ShardStore {
 
@@ -91,11 +105,14 @@ object ShardStore {
       .sortWithinPartitions(col("split"), col("lang"), col("__z"))
       .drop("__z")
 
-  /** Manifest rows + their text, clustered and landed. Fails loudly if
-    * a manifest row has no document (stale or filtered input): the
-    * write job itself raises on such a row, before any file is
-    * committed, and the call throws an `IllegalArgumentException`
-    * naming the row — no separate counting job.
+  /** Manifest rows + their text, clustered and written to `dir` — always
+    * a stage or an unclaimed version home, so nothing is visible yet.
+    * Fails loudly if a manifest row has no document (stale or filtered
+    * input): the write observes its own row count and the manifest's,
+    * which are equal because `doc_id` is unique (corpus contract), and
+    * only on a shortfall looks up one missing `doc_id` for the
+    * `IllegalArgumentException` — the inner join broadcasts a small
+    * manifest and no separate job runs on success.
     *
     * `maxRecordsPerFile` (0 = unbounded) bounds shard-file size — the
     * knob a training-data reader wants ("one shard file ≈ one worker's
@@ -103,28 +120,75 @@ object ShardStore {
     * makes each file a contiguous bin range: a bin-range read then
     * skips whole files' row groups on parquet min/max stats
     * (ShardPruningSpec measures exactly that). */
-  private def land(docs: DataFrame, manifest: DataFrame, root: String,
-                   mode: String, maxRecordsPerFile: Long,
+  private def land(docs: DataFrame, manifest: DataFrame, dir: String,
+                   maxRecordsPerFile: Long,
                    cluster: DataFrame => DataFrame = plainCluster): Unit = {
-    val rows = manifest
-      .join(docs.select(col("doc_id"), col("text"), lit(true).as("__doc")), Seq("doc_id"), "left")
-      .withColumn("text", when(col("__doc").isNull, raise_error(concat(
-        lit("manifest row doc_id="), coalesce(col("doc_id").cast("string"), lit("null")),
-        lit(" " + NoDocument)))).otherwise(col("text")))
-      .drop("__doc")
-    try cluster(rows).write.mode(mode)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("split", "lang").parquet(root)
-    catch { case e: Exception =>
-      val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .flatMap(t => Option(t.getMessage).flatMap(RaisedNoDocument.findFirstIn)).nextOption()
-      throw raised.fold[Throwable](e)(new IllegalArgumentException(_, e))
-    }
+    val (want, got) = (Observation(), Observation())
+    val rows = manifest.observe(want, count(lit(1)).as("n"))
+      .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
+      .observe(got, count(lit(1)).as("n"))
+    cluster(rows).write.option("maxRecordsPerFile", maxRecordsPerFile)
+      .partitionBy("split", "lang").parquet(dir)
+    // a side the optimizer pruned as empty reports no count: look it up
+    val n = want.get.get("n")
+    if (n.isEmpty || n != got.get.get("n"))
+      manifest.select(col("doc_id")).join(docs.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .head(1).foreach(r => throw new IllegalArgumentException(
+          s"manifest row doc_id=${r.get(0)} has no document in `docs` — stale or filtered input?"))
   }
 
-  private val NoDocument = "has no document in `docs` — stale or filtered input?"
-  private val RaisedNoDocument =
-    ("manifest row doc_id=\\S+ " + java.util.regex.Pattern.quote(NoDocument)).r
+  /** Files staged under `stage/sub`, as (path relative to `stage`,
+    * destination under `dest`); Spark's `_SUCCESS` and checksum files
+    * stay behind. */
+  private def movesOf(spark: SparkSession, stage: String, sub: String,
+                      dest: String): Seq[(String, Path)] = {
+    val f = fs(spark, stage)
+    def walk(rel: String): Seq[String] = f.listStatus(new Path(s"$stage/$rel")).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("_") || name.startsWith(".")) Nil
+      else if (st.isDirectory) walk(s"$rel/$name")
+      else Seq(s"$rel/$name")
+    }
+    walk(sub).map(rel => rel -> new Path(dest + rel.stripPrefix(sub)))
+  }
+
+  /** Stage one ingest's accepted rows (bins were opened past each
+    * group's historical max, so clustering stays monotone across the
+    * appended files) under `stage`; returns their moves into the live
+    * version dir `live`. */
+  private[graft] def stageRows(docs: DataFrame, accepted: DataFrame, stage: String, live: String,
+                               maxRecordsPerFile: Long = 0L): Seq[(String, Path)] = {
+    land(docs, accepted, s"$stage/rows", maxRecordsPerFile)
+    movesOf(docs.sparkSession, stage, "rows", live)
+  }
+
+  /** Stage (doc_id, reason) retractions under `stage`; returns their
+    * moves into the side table of the live version dir `live`. */
+  private[graft] def stageTombstones(tombstones: DataFrame, stage: String,
+                                     live: String): Seq[(String, Path)] = {
+    tombstones.select(col("doc_id"), col("reason")).write.parquet(s"$stage/tombstones")
+    movesOf(tombstones.sparkSession, stage, "tombstones", tombDir(live))
+  }
+
+  /** The live data dir; a root that does not exist yet first gets an
+    * empty committed `v0` to land in. */
+  private[graft] def liveDir(spark: SparkSession, root: String): String = {
+    val f = fs(spark, root)
+    if (!f.exists(new Path(root)))
+      VersionLog.commitNext(f, root, versionPath(root)) { (_, dir) => f.mkdirs(new Path(dir)) }
+    dataDir(spark, root)
+  }
+
+  /** Stage under `root/staging/<token>`, then move into `live`. No
+    * claim: one ingest loop owns appends (see the class doc). */
+  private def landLive(spark: SparkSession, root: String, live: String)
+                      (stage: (String, String) => Seq[(String, Path)]): Unit = {
+    val f = fs(spark, root)
+    val dir = new Path(s"$root/staging/${java.util.UUID.randomUUID()}")
+    val moves = try stage(dir.toString, live)
+      catch { case e: Throwable => f.delete(dir, true); throw e }
+    VersionLog.materialize(f, dir, moves)
+  }
 
   /** Land the bootstrap manifest (replaces any prior table at the
     * root) as committed version 0 — the table is addressable only once
@@ -157,27 +221,22 @@ object ShardStore {
     val f = fs(spark, root)
     if (f.exists(new Path(root))) f.delete(new Path(root), true)
     val (_, won) = VersionLog.commitNext(f, root, versionPath(root)) { (_, dir) =>
-      land(docs, manifest, dir, "overwrite", maxRecordsPerFile, cluster)
+      land(docs, manifest, dir, maxRecordsPerFile, cluster)
     }
     require(won, s"another writer initialized $root concurrently")
   }
 
-  /** Land one ingest's accepted rows (appends; bins were opened past
-    * each group's historical max, so clustering stays monotone across
-    * the appended files). The first append to a root that does not
-    * exist yet lands them as `v0`, the way [[init]] would. */
+  /** Land one ingest's accepted rows in the live version, through the
+    * same stage-check-move path an ingest batch takes. */
   def append(batchDocs: DataFrame, accepted: DataFrame, root: String,
              maxRecordsPerFile: Long = 0L): Unit =
-    if (!fs(batchDocs.sparkSession, root).exists(new Path(root)))
-      init(batchDocs, accepted, root, maxRecordsPerFile)
-    else land(batchDocs, accepted, dataDir(batchDocs.sparkSession, root),
-      "append", maxRecordsPerFile)
+    landLive(batchDocs.sparkSession, root, liveDir(batchDocs.sparkSession, root))(
+      stageRows(batchDocs, accepted, _, _, maxRecordsPerFile))
 
-  /** Record retractions: (doc_id, reason) appended to the side table. */
+  /** Record retractions: (doc_id, reason) landed in the side table. */
   def addTombstones(tombstones: DataFrame, root: String): Unit =
-    tombstones.select(col("doc_id"), col("reason"))
-      .write.mode("append")
-      .parquet(tombDir(dataDir(tombstones.sparkSession, root)))
+    landLive(tombstones.sparkSession, root, dataDir(tombstones.sparkSession, root))(
+      stageTombstones(tombstones, _, _))
 
   /** The live table: every landed row minus tombstoned docs. */
   def read(spark: SparkSession, root: String): DataFrame =

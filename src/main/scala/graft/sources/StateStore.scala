@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,10 +33,13 @@ import graft.operators.TrainingPipeline.{CorpusState, IngestDelta}
   * Every version commits through [[VersionLog]], the protocol all
   * versioned stores share, in its delta shape: the artifacts are
   * staged, `commits/v<v>` is claimed (exactly one writer wins a
-  * version number), the staged dirs move to their
-  * `ingest=<v>`/`v=<v>` partitions, LATEST flips. A
-  * delta version stages one ingest's increment; a BASE version
-  * ([[commitBootstrap]], [[compact]]) stages the full live state. Each
+  * version number) with a marker that records each staged dir's
+  * `ingest=<v>`/`v=<v>` partition, the dirs move there, LATEST flips.
+  * A delta version stages one ingest's increment — plus, for a corpus
+  * ingest batch, the batch's shard rows, tombstones and replay record
+  * ([[graft.streaming.CorpusIngest.ingestBatch]]), so one claim
+  * decides all of it; a BASE version ([[commitBootstrap]],
+  * [[compact]]) stages the full live state. Each
   * marker names its version's base, so [[loadVersion]] reconstructs
   * state-at-v from the partitions `base <= ingest <= v` plus ONE
   * anti-join of the accumulated dead set onto shingles and manifest —
@@ -47,9 +50,12 @@ import graft.operators.TrainingPipeline.{CorpusState, IngestDelta}
   * retention: a base deletes the partitions below it once LATEST names
   * it — the Delta VACUUM trade.
   *
-  * Crash/replay semantics are the log's (a crash while staging leaves
-  * nothing a reader sees; a crash between claim and flip is healed
-  * forward by the next [[latestVersion]]), plus: a crash after a
+  * Crash/replay semantics are the log's: a crash while staging leaves
+  * nothing a reader sees; a version claimed but not yet moved is not
+  * read ([[latestVersion]] returns the one before it, and readers
+  * never write); the next writer ([[commitDelta]],
+  * [[commitDeltaOptimistic]], [[commitBootstrap]], [[compact]], an
+  * ingest batch) finishes its moves before claiming. A crash after a
   * base's flip leaves pre-base partitions that no read touches; the
   * next compaction deletes them. State tables with NO markers fail
   * loudly as corruption instead of silently bootstrapping an empty
@@ -91,38 +97,50 @@ object StateStore {
   private def partitionPath(root: String, t: String, v: Long) =
     new Path(s"$root/$t/${partitionKey(t)}=$v")
 
-  private def layout(root: String): VersionLog.Layout =
-    v => Artifacts.map(t => t -> partitionPath(root, t, v))
-
-  /** Latest committed version ([[VersionLog.healForward]]: the commit
-    * markers are the truth, a LATEST behind them is healed forward).
-    * State tables with no markers at all fail loudly — silently
-    * treating a damaged root as an empty corpus would re-admit every
-    * shipped doc downstream. */
-  def latestVersion(spark: SparkSession, root: String): Option[Long] = {
-    val f = fs(spark, root)
-    val v = VersionLog.healForward(f, root, layout(root))
-    // table dirs receive files only after a claim, so tables without
-    // any marker mean the markers of a real corpus were lost; a first
-    // commit that died while staging left none
-    require(v.nonEmpty || Tables.forall(t => !f.exists(new Path(s"$root/$t"))),
+  /** State tables with no commit marker are a damaged root, not an
+    * empty corpus: table dirs receive files only after a claim, so
+    * tables without any marker mean the markers of a real corpus were
+    * lost (a first commit that died while staging left none). */
+  private def checkMarkers(f: FileSystem, root: String,
+                           markers: Option[Long]): Unit =
+    require(markers.nonEmpty || Tables.forall(t => !f.exists(new Path(s"$root/$t"))),
       s"state tables exist under $root but no commit marker does — " +
         "refusing to treat a damaged state root as an empty corpus")
+
+  /** Latest readable version: the newest whose moves are done
+    * ([[VersionLog.readable]]). Read-only; a damaged root fails
+    * loudly ([[checkMarkers]]). */
+  def latestVersion(spark: SparkSession, root: String): Option[Long] = {
+    val f = fs(spark, root)
+    val v = VersionLog.readable(f, root)
+    if (v.isEmpty) checkMarkers(f, root, VersionLog.latest(f, root))
+    v
+  }
+
+  /** What a writer builds on: every claimed version, its moves finished
+    * first ([[VersionLog.healForward]]). */
+  private[graft] def heal(spark: SparkSession, root: String): Option[Long] = {
+    val f = fs(spark, root)
+    val v = VersionLog.healForward(f, root)
+    checkMarkers(f, root, v)
     v
   }
 
   /** Commit version `v` on `base` through the log: `artifacts` (table
-    * name -> rows) are staged, then claimed and moved into place. A
-    * base version (`base == v`) then deletes the partitions below it.
+    * name -> rows) are staged, plus whatever `extra` stages beside them
+    * (returning its moves), then claimed and moved into place. A base
+    * version (`base == v`) then deletes the partitions below it.
     * Returns false, with the staging discarded, when another writer
     * claimed `v` first. */
   private def commitStaged(spark: SparkSession, root: String, v: Long, base: Long,
-                           artifacts: Seq[(String, DataFrame)]): Boolean = {
+                           artifacts: Seq[(String, DataFrame)],
+                           extra: String => Seq[(String, Path)] = _ => Nil): Boolean = {
     val f = fs(spark, root)
-    val won = VersionLog.commit(f, root, v, base, layout(root)) { stage =>
+    val won = VersionLog.commit(f, root, v, base) { stage =>
       artifacts.foreach { case (t, df) =>
         df.select(schemas(t).fieldNames.toSeq.map(col): _*).write.parquet(s"$stage/$t")
       }
+      Artifacts.map(t => t -> partitionPath(root, t, v)) ++ extra(stage)
     }
     if (won && base == v) Artifacts.foreach { t =>
       val prefix = partitionKey(t) + "="
@@ -169,10 +187,17 @@ object StateStore {
     * O(batch), independent of corpus size — StateCommitSpec measures
     * exactly that. Fails if another writer commits first; use
     * [[commitDeltaOptimistic]] to recompute instead. */
-  def commitDelta(spark: SparkSession, delta: IngestDelta, root: String): Long = {
-    val cur = latestVersion(spark, root)
+  def commitDelta(spark: SparkSession, delta: IngestDelta, root: String): Long =
+    commitDeltaWith(spark, delta, root)(_ => Nil)
+
+  /** [[commitDelta]] whose version also carries what `extra` stages
+    * beside the state artifacts (it gets the stage dir and returns
+    * each staged path's destination): one claim decides both. */
+  private[graft] def commitDeltaWith(spark: SparkSession, delta: IngestDelta, root: String)
+                                    (extra: String => Seq[(String, Path)]): Long = {
+    val cur = heal(spark, root)
     val v = cur.fold(0L)(_ + 1L)
-    if (!commitStaged(spark, root, v, baseOf(spark, root, cur), deltaArtifacts(delta)))
+    if (!commitStaged(spark, root, v, baseOf(spark, root, cur), deltaArtifacts(delta), extra))
       lostRace(root, v)
     v
   }
@@ -193,7 +218,7 @@ object StateStore {
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
-      val cur = latestVersion(spark, root)
+      val cur = heal(spark, root)
       val target = cur.fold(0L)(_ + 1L)
       val delta = deltaOf(cur.map(v => loadVersion(spark, root, v)))
       if (commitStaged(spark, root, target, baseOf(spark, root, cur), deltaArtifacts(delta)))
@@ -206,7 +231,7 @@ object StateStore {
   /** Commit a freshly bootstrapped corpus as a base version (v0 on an
     * empty root). */
   def commitBootstrap(spark: SparkSession, state: CorpusState, root: String): Long =
-    commitBase(spark, root, latestVersion(spark, root).fold(0L)(_ + 1L), state)
+    commitBase(spark, root, heal(spark, root).fold(0L)(_ + 1L), state)
 
   private def readTable(spark: SparkSession, root: String, table: String,
                         base: Long, v: Long): DataFrame = {
@@ -253,7 +278,7 @@ object StateStore {
     * time travel before it is given up — the same trade a Delta VACUUM
     * makes. Returns the version it committed. */
   def compact(spark: SparkSession, root: String): Long = {
-    val v = latestVersion(spark, root).getOrElse(
+    val v = heal(spark, root).getOrElse(
       throw new IllegalStateException(s"nothing committed under $root"))
     commitBase(spark, root, v + 1L, loadVersion(spark, root, v))
   }

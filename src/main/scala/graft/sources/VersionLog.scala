@@ -6,22 +6,29 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The one commit protocol of the versioned stores ([[StateStore]],
   * [[ShardStore]], [[graft.operators.CrawlState]],
-  * [[graft.operators.GraphState]]). Each store keeps its own data
-  * layout, read path and retention; the log owns only the decision
-  * "version N is committed", kept under the store root as
-  * `commits/v<N>` (body `"<token> <base>"`) plus a `LATEST` pointer
+  * [[graft.operators.GraphState]], [[graft.sources.v2.CdxSource]]'s
+  * file lists). Each store keeps its own data layout, read path and
+  * retention; the log owns only the decision "version N is committed",
+  * kept under the store root as `commits/v<N>` plus a `LATEST` pointer
   * flipped last. A writer stages its version in a dir named by a fresh
   * token, then claims `commits/v<N>`: exactly one writer wins a
   * version number, and the newest marker is the truth ([[latest]]).
+  * A marker's first line is `"<token> <base>"`.
   *
   *  - WHOLE versions ([[commitNext]]: ShardStore, CrawlState,
-  *    GraphState) are staged in their final home `<home(N)>/<token>`,
-  *    so a claimed version is complete where it lies: nothing moves
-  *    and readers ([[latest]], [[dir]]) never write.
-  *  - DELTA versions ([[commit]]: StateStore) land in shared
-  *    partitions, so they stage under `staging/<token>` and move into
-  *    the store's [[Layout]] after the claim; [[healForward]] finishes
-  *    a version whose writer died between claim and flip. `<base>` is
+  *    GraphState, CdxSource) are staged in their final home
+  *    `<home(N)>/<token>`, so a claimed version is complete where it
+  *    lies: nothing moves and readers ([[latest]], [[dir]]) never
+  *    write.
+  *  - DELTA versions ([[commit]]: StateStore, and with it each corpus
+  *    ingest batch) stage under `staging/<token>` and move into shared
+  *    dirs after the claim. The marker records every move, one
+  *    `"<staged path>\t<destination>"` line each, so one claim decides
+  *    the whole version, whichever dirs its files end up in. Readers
+  *    ([[readable]]) resolve the newest version whose staging dir is
+  *    gone — its moves are done — and never write. Writers call
+  *    [[healForward]] before they claim: it finishes the moves of a
+  *    version whose writer died between claim and flip. `<base>` is
   *    the version a delta reads back to (whole versions: base = N).
   *
   * A writer that dies (or throws) while staging leaves at most an
@@ -32,11 +39,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 private[graft] object VersionLog {
 
-  /** Where delta version v's staged dirs move: (staged name, destination). */
-  type Layout = Long => Seq[(String, Path)]
-
   private def latestPath(root: String) = new Path(s"$root/LATEST")
   private def markerPath(root: String, v: Long) = new Path(s"$root/commits/v$v")
+  private def stagePath(root: String, token: String) = new Path(s"$root/staging/$token")
 
   /** The trimmed UTF-8 body of `p`, or None when it does not exist. */
   private def read(f: FileSystem, p: Path): Option[String] =
@@ -58,14 +63,15 @@ private[graft] object VersionLog {
     if (!f.rename(tmp, latestPath(root))) f.delete(tmp, false)
   }
 
-  /** (staging token, base version) from the body of marker `v`. */
-  private def marker(f: FileSystem, root: String, v: Long): (String, Long) = {
+  /** (token, base, moves) from the body of marker `v`. */
+  private def marker(f: FileSystem, root: String, v: Long): (String, Long, Seq[(String, Path)]) = {
     val body = read(f, markerPath(root, v)).getOrElse(
       throw new IllegalStateException(s"commit marker v$v is missing under $root"))
-    body.split(" ") match {
-      case Array(token, base) => (token, base.toLong)
-      case _ => throw new IllegalStateException(
-        s"malformed commit marker $root/commits/v$v: '$body'")
+    val lines = body.split("\n").toSeq
+    (lines.head.split(" "), lines.tail.map(_.split("\t"))) match {
+      case (Array(token, base), moves) if moves.forall(_.length == 2) =>
+        (token, base.toLong, moves.map(m => m(0) -> new Path(m(1))))
+      case _ => throw new IllegalStateException(s"malformed commit marker $root/commits/v$v: '$body'")
     }
   }
 
@@ -92,60 +98,76 @@ private[graft] object VersionLog {
     * nothing was ever claimed. Read-only. */
   def latest(f: FileSystem, root: String): Option[Long] = pointerAndNewest(f, root)._2
 
-  /** [[latest]] for a store of delta versions: a LATEST behind a newer
-    * marker (a [[commit]] that crashed between claim and flip) is
-    * healed forward after moving that version's staged dirs into
-    * place. */
-  def healForward(f: FileSystem, root: String, layout: Layout): Option[Long] = {
+  /** The newest DELTA version whose moves are done (its staging dir is
+    * gone), or None. A version claimed but not yet moved is not read:
+    * the reader gets the one before it and leaves the log as it found
+    * it. Read-only. */
+  def readable(f: FileSystem, root: String): Option[Long] = {
+    val (pointer, newest) = pointerAndNewest(f, root)
+    newest.flatMap { m =>
+      (m to pointer.fold(0L)(_ + 1L) by -1L)
+        .find(v => !f.exists(stagePath(root, marker(f, root, v)._1)))
+        .orElse(pointer)
+    }
+  }
+
+  /** For a writer of delta versions, before it claims: finish the moves
+    * of every version claimed after LATEST (a [[commit]] that crashed
+    * between claim and flip), flip LATEST to the newest marker, and
+    * return it. */
+  def healForward(f: FileSystem, root: String): Option[Long] = {
     val (pointer, newest) = pointerAndNewest(f, root)
     for (m <- newest if !pointer.contains(m)) {
       (pointer.fold(0L)(_ + 1L) to m).foreach { v =>
-        materialize(f, new Path(s"$root/staging/${marker(f, root, v)._1}"), layout(v))
+        val (token, _, moves) = marker(f, root, v)
+        materialize(f, stagePath(root, token), moves)
       }
       flip(f, root, m)
     }
     newest
   }
 
-  /** Atomically claim version `v`: the marker body goes to a
-    * writer-private tmp, then is RENAMED into place — the marker
+  /** Atomically claim version `v` with marker `body`: the body goes to
+    * a writer-private tmp, then is RENAMED into place — the marker
     * becomes visible with its body complete, and Hadoop rename refuses
     * an existing destination, so the rename is the fence: exactly one
     * writer wins a version number (atomic on HDFS and
     * precondition-capable object stores; on a raw local FS the
     * strongest primitive available). */
   private def claim(f: FileSystem, root: String, v: Long,
-                    token: String, base: Long): Boolean = {
+                    token: String, body: String): Boolean = {
     f.mkdirs(new Path(s"$root/commits"))
     val tmp = new Path(s"$root/commits/.claim.$token")
     val out = f.create(tmp, true)
-    try out.write(s"$token $base".getBytes("UTF-8")) finally out.close()
+    try out.write(body.getBytes("UTF-8")) finally out.close()
     val won = try !f.exists(markerPath(root, v)) && f.rename(tmp, markerPath(root, v))
       catch { // a rename that failed after landing the marker still won
-        case _: java.io.IOException => read(f, markerPath(root, v)).contains(s"$token $base")
+        case _: java.io.IOException => read(f, markerPath(root, v)).contains(body.trim)
       }
     if (!won) f.delete(tmp, false)
     won
   }
 
-  /** `stage` writes into `dir`, then claim `v`. A stage that throws or
-    * a lost claim discards `dir`, so neither leaves a claim behind. */
-  private def stageAndClaim(f: FileSystem, root: String, v: Long, base: Long,
-                            dir: Path, token: String)(stage: String => Unit): Boolean = {
+  /** `stage` writes into `dir` and returns the marker body, then claim
+    * `v`. A stage that throws or a lost claim discards `dir`, so
+    * neither leaves a claim behind. */
+  private def stageAndClaim(f: FileSystem, root: String, v: Long, dir: Path, token: String)
+                           (stage: String => String): Boolean = {
     val won =
-      try { stage(dir.toString); claim(f, root, v, token, base) }
+      try claim(f, root, v, token, stage(dir.toString))
       catch { case e: Throwable => f.delete(dir, true); throw e }
     if (!won) f.delete(dir, true)
     won
   }
 
-  /** Move the staged dirs of a claimed delta version into their
-    * destinations — by the committing writer, or by a healer finishing
-    * a writer that crashed after its claim. Idempotent: a finished
-    * version has no staging dir. */
-  private def materialize(f: FileSystem, stage: Path, dests: Seq[(String, Path)]): Unit =
+  /** Move staged files or dirs (paths relative to `stage`) to their
+    * destinations, then drop `stage` — by a committing writer, by a
+    * healer finishing a writer that crashed after its claim, or by a
+    * store landing an unclaimed append. Idempotent: a finished stage is
+    * gone. */
+  private[sources] def materialize(f: FileSystem, stage: Path, moves: Seq[(String, Path)]): Unit =
     if (f.exists(stage)) {
-      dests.foreach { case (name, dst) =>
+      moves.foreach { case (name, dst) =>
         val src = new Path(stage, name)
         // dst is looked at BEFORE src: a src that outlives a dst seen
         // earlier means a rename-as-copy crashed mid-copy (a completed
@@ -166,36 +188,43 @@ private[graft] object VersionLog {
     }
 
   /** Write delta version `v` on `base`: `stage` writes the version's
-    * dirs (named as in the layout) under `staging/<token>`; then claim
-    * `v`, move the dirs into place, flip LATEST. False, with the stage
-    * discarded, when another writer claimed `v` first. */
-  def commit(f: FileSystem, root: String, v: Long, base: Long, layout: Layout)
-            (stage: String => Unit): Boolean = {
+    * files under `staging/<token>` and returns their moves (staged
+    * path relative to the stage -> destination); then claim `v` with a
+    * marker recording the moves, make them, flip LATEST. False, with
+    * the stage discarded, when another writer claimed `v` first. */
+  def commit(f: FileSystem, root: String, v: Long, base: Long)
+            (stage: String => Seq[(String, Path)]): Boolean = {
     val token = java.util.UUID.randomUUID().toString
-    val dir = new Path(s"$root/staging/$token")
-    val won = stageAndClaim(f, root, v, base, dir, token)(stage)
+    val dir = stagePath(root, token)
+    var moves = Seq.empty[(String, Path)]
+    val won = stageAndClaim(f, root, v, dir, token) { d =>
+      moves = stage(d)
+      (s"$token $base" +: moves.map { case (src, dst) => s"$src\t$dst" }).mkString("\n")
+    }
     if (won) {
-      materialize(f, dir, layout(v))
+      materialize(f, dir, moves)
       flip(f, root, v)
     }
     won
   }
 
   /** Write the next WHOLE version: `write` gets the version it builds
-    * on (None on an empty log) and the dir that is the new version's
+    * on (None on an empty log) and the path that is the new version's
     * final home. Returns (version, whether this writer won it); a
-    * loser's dir is discarded. */
+    * loser's home is discarded. */
   def commitNext(f: FileSystem, root: String, home: Long => Path)
                 (write: (Option[Long], String) => Unit): (Long, Boolean) = {
     val cur = latest(f, root)
     val v = cur.fold(0L)(_ + 1L)
     val token = java.util.UUID.randomUUID().toString
-    val won = stageAndClaim(f, root, v, v, new Path(home(v), token), token)(write(cur, _))
+    val won = stageAndClaim(f, root, v, new Path(home(v), token), token) { d =>
+      write(cur, d); s"$token $v"
+    }
     if (won) flip(f, root, v)
     (v, won)
   }
 
-  /** The dir committed whole version `v` lives in. */
+  /** The path committed whole version `v` lives at. */
   def dir(f: FileSystem, root: String, v: Long, home: Long => Path): String =
     new Path(home(v), marker(f, root, v)._1).toString
 }

@@ -95,12 +95,12 @@ object CdxSource {
     case _ => None
   }
 
-  /** Listing-order file names of a manifest-less dir — the exact order
+  /** Listing-order file names of a log-less dir — the exact order
     * the fallback scan would read them in: connector-written files by
     * (queryId, NUMERIC partition index), foreign names after,
     * lexicographically. Shared by the scan fallback and by the legacy
     * append seed so "what a listing read showed" and "what the seeded
-    * manifest pins" can never disagree. */
+    * file list pins" can never disagree. */
   private[v2] def listingOrder(fs: org.apache.hadoop.fs.FileSystem,
                                root: Path): Seq[String] =
     fs.listStatus(root).filter(_.isFile)
@@ -114,132 +114,81 @@ object CdxSource {
       }.toSeq
 }
 
-/** The commit LOG that makes the table transition atomic on object
+/** The commit log that makes the table transition atomic on object
   * stores. Promoting staged part files is one RENAME PER FILE there
   * (rename-as-copy — no atomic directory move exists), so a crash
   * mid-promote would leave a partial set of new files visible if the
   * scan trusted directory listings. Instead, visibility is gated by a
-  * manifest: the LAST step of a commit is creating ONE small file
-  * (`_manifests/m%08d-<queryId>.list`) naming the job's part files —
-  * a single-object PUT, atomic on every store. Crash before it:
-  * promoted files are invisible orphans; the retried job simply
-  * commits its own files once (append idempotence). Crash after it:
-  * the commit is durable and only best-effort cleanup remains.
+  * [[graft.sources.VersionLog]] rooted at `_manifests`: each commit is
+  * one WHOLE version whose home holds the table's full visible file
+  * list — the previous list (or, on a legacy dir, the listing seed)
+  * plus the job's files on append, the job's files alone on truncate.
+  * The claim of `commits/v<N>` is the linearization point. Crash
+  * before it: promoted files are invisible orphans; the retried job
+  * simply commits its own files once (append idempotence). Crash after
+  * it: the commit is durable and only best-effort cleanup remains. A
+  * scan reads one list, from the newest marker, and never writes.
   *
-  * Replay: manifests sort by version; a `truncate` manifest resets
-  * the visible set (overwrite mode), an `append` one extends it.
-  * Versions are claimed with create-no-overwrite (the StateStore
-  * optimistic-concurrency pattern) so concurrent committers can
-  * never share one. Truncate does NOT delete old data before its
-  * manifest lands — the old table stays fully readable up to the
-  * atomic flip; the superseded files are deleted after, best-effort
-  * (failures leave invisible garbage, never a broken table).
-  *
-  * A table with NO manifest dir (hand-assembled cdx files, or one
-  * written before this log existed) falls back to listing — the
-  * plain-text interop contract is unchanged. */
-private[v2] object CdxManifest {
+  * A table with NO log (hand-assembled cdx files, or one written
+  * before this log existed) falls back to listing — the plain-text
+  * interop contract is unchanged. */
+private[v2] object CdxLog {
   import org.apache.hadoop.fs.FileSystem
+  import graft.sources.VersionLog
 
-  private def dir(root: Path) = new Path(root, "_manifests")
-  private val Name = """m(\d{8})-.*\.list""".r
-
-  private def versionOf(name: String): Option[Long] = name match {
-    case Name(v) => Some(v.toLong)
-    case _ => None
-  }
-
-  private def listManifests(fs: FileSystem, root: Path): Seq[(Long, Path)] = {
-    val d = dir(root)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq.flatMap(s =>
-      versionOf(s.getPath.getName).map(_ -> s.getPath)).sortBy(_._1)
-  }
-
-  /** True when the table already carries a manifest log. A dir without
-    * one is either empty/new or a LEGACY table (hand-assembled cdx
-    * files, or written before the log existed) whose reads go through
-    * the listing fallback — the first manifested commit against such a
-    * dir must seed the pre-existing listing or those files silently
-    * vanish from reads. */
-  def hasLog(fs: FileSystem, root: Path): Boolean = listManifests(fs, root).nonEmpty
+  private def logRoot(root: Path) = new Path(root, "_manifests").toString
+  private def home(root: Path)(v: Long) = new Path(logRoot(root), s"v$v")
 
   /** Visible part-file names in commit order, or None when the table
-    * has no manifest log (foreign/legacy dir → caller falls back to
-    * directory listing). */
-  def visibleFiles(fs: FileSystem, root: Path): Option[Seq[String]] = {
-    val ms = listManifests(fs, root)
-    if (ms.isEmpty) None
-    else Some(ms.foldLeft(Vector.empty[String]) { case (acc, (_, p)) =>
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-        fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
-      try {
-        val mode = in.readLine()
-        val files = Iterator.continually(in.readLine()).takeWhile(_ != null)
-          .filter(_.nonEmpty).toVector
-        if (mode == "truncate") files else acc ++ files
-      } finally in.close()
-    })
+    * has no log (foreign/legacy dir → caller falls back to directory
+    * listing). Read-only. */
+  def visibleFiles(fs: FileSystem, root: Path): Option[Seq[String]] =
+    VersionLog.latest(fs, logRoot(root)).map(v => read(fs, root, v))
+
+  private def read(fs: FileSystem, root: Path, v: Long): Seq[String] = {
+    val in = fs.open(new Path(VersionLog.dir(fs, logRoot(root), v, home(root))))
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toVector
+    finally in.close()
   }
 
-  /** Land `files` as one atomic commit; returns the claimed version.
-    * The create(overwrite = false) is the linearization point.
-    *
-    * Failure discipline: a create refusal counts as a version RACE
-    * only when the path verifiably exists afterwards (the explicit
-    * `FileAlreadyExistsException`, or a generic IOException with
-    * `fs.exists` confirming a winner landed — some stores surface the
-    * conditional-PUT conflict as a bare IOException). Anything else —
-    * endpoint down, auth revoked, persistent 500s — is rethrown so the
-    * job FAILS instead of spinning through version numbers forever.
-    * The attempt cap bounds even a pathological store that keeps
-    * materializing every probed version under a live writer storm. */
-  private val MaxCommitAttempts = 1000
-  def commit(fs: FileSystem, root: Path, queryId: String,
-             files: Seq[String], truncate: Boolean): Long = {
-    fs.mkdirs(dir(root))
-    var v = listManifests(fs, root).lastOption.map(_._1 + 1).getOrElse(1L)
-    var attempts = 0
-    var out: org.apache.hadoop.fs.FSDataOutputStream = null
-    while (out == null) {
-      val p = new Path(dir(root), f"m$v%08d-$queryId.list")
-      attempts += 1
-      try out = fs.create(p, false)
-      catch {
-        case e: java.io.IOException =>
-          val raced = e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] ||
-            e.isInstanceOf[java.nio.file.FileAlreadyExistsException] ||
-            (try fs.exists(p) catch { case _: java.io.IOException => false })
-          if (!raced || attempts >= MaxCommitAttempts)
-            throw new java.io.IOException(
-              s"CDX manifest commit failed after $attempts attempt(s) at $p", e)
-          v += 1 // version raced: a winner holds this slot, try the next
+  /** Land `files` (already promoted into `root`) as one version;
+    * returns it. A version lost to a concurrent committer rebuilds the
+    * list from the winner's and retries, at most `MaxAttempts` times;
+    * any I/O failure is rethrown at once, so a dead endpoint fails the
+    * job instead of spinning. Legacy seed: the FIRST commit against a
+    * dir that already holds visible cdx files (hand-assembled, or
+    * written before the log existed) appends to them — otherwise the
+    * new list would be the whole visible set and every pre-existing
+    * row would silently vanish from reads. The seed lists the dir in
+    * the exact fallback-scan order, so the read order before and after
+    * the commit agrees on the legacy prefix. Truncate needs no seed. */
+  val MaxAttempts = 100
+  def commit(fs: FileSystem, root: Path, files: Seq[String], truncate: Boolean): Long = {
+    def list(cur: Option[Long]): Seq[String] =
+      if (truncate) files
+      else cur.fold(CdxSource.listingOrder(fs, root).filterNot(files.toSet))(read(fs, root, _)) ++ files
+    Iterator.range(0, MaxAttempts).map { _ =>
+      VersionLog.commitNext(fs, logRoot(root), home(root)) { (cur, dir) =>
+        val out = fs.create(new Path(dir), true)
+        try out.write(list(cur).map(_ + "\n").mkString.getBytes("UTF-8")) finally out.close()
       }
-    }
-    try {
-      val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        out, java.nio.charset.StandardCharsets.UTF_8))
-      w.write(if (truncate) "truncate" else "append"); w.write('\n')
-      files.foreach { f => w.write(f); w.write('\n') }
-      w.flush(); w.close()
-    } finally out.close()
-    v
+    }.collectFirst { case (v, true) => v }.getOrElse(throw new java.io.IOException(
+      s"CDX commit lost the version race $MaxAttempts times under ${logRoot(root)}"))
   }
 
-  /** Best-effort post-truncate GC: drop manifests below `version` and
-    * data files the new manifest does not name. Runs strictly AFTER
-    * the atomic flip — any failure leaves invisible garbage only. */
-  def pruneBelow(fs: FileSystem, root: Path, version: Long,
-                 keep: Set[String]): Unit = {
+  /** Best-effort post-truncate GC: drop the lists below `version` and
+    * data files the new list does not name. Runs strictly AFTER the
+    * claim — any failure leaves invisible garbage only. */
+  def pruneBelow(fs: FileSystem, root: Path, version: Long, keep: Set[String]): Unit =
     try {
-      listManifests(fs, root).filter(_._1 < version)
-        .foreach { case (_, p) => fs.delete(p, false) }
+      fs.listStatus(new Path(logRoot(root))).map(_.getPath)
+        .filter(p => p.getName.matches("v\\d+") && p.getName.drop(1).toLong < version)
+        .foreach(fs.delete(_, true))
       fs.listStatus(root)
         .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
           !keep.contains(s.getPath.getName))
         .foreach(s => fs.delete(s.getPath, false))
     } catch { case _: java.io.IOException => () }
-  }
 }
 
 class CdxTable(path: String) extends Table with SupportsRead with SupportsWrite {
@@ -292,15 +241,15 @@ class CdxBatchWrite(path: String, queryId: String, truncate: Boolean,
     * Object-store crash discipline (proven in CdxSourceSpec over the
     * `graftoss:` rename-as-copy FS): the per-file promotes can die at
     * any point and the table never shows a partial — promoted files
-    * stay INVISIBLE until the manifest write, which is one atomic
-    * single-file create ([[CdxManifest.commit]], the linearization
-    * point). Truncate deletes nothing up front; superseded data is
-    * pruned best-effort only after the flip. */
+    * stay INVISIBLE until the job's version of the file list is
+    * claimed ([[CdxLog.commit]], the linearization point). Truncate
+    * deletes nothing up front; superseded data is pruned best-effort
+    * only after the claim. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
     val f = root.getFileSystem(conf.value)
     f.mkdirs(root)
-    // partition order, so the manifest preserves a sorted write's order
+    // partition order, so the file list preserves a sorted write's order
     val ordered = messages.map { case c: CdxCommit => c }
       .sortBy(c => CdxSource.fileKey(c.finalName).map(_._2).getOrElse(0L))
     ordered.foreach { case CdxCommit(staged, name) =>
@@ -308,26 +257,14 @@ class CdxBatchWrite(path: String, queryId: String, truncate: Boolean,
       if (f.exists(dst)) f.delete(dst, false) // idempotent re-commit
       require(f.rename(new Path(staged), dst), s"could not commit $staged -> $dst")
     }
-    // Legacy-append seed: the FIRST manifested commit against a dir
-    // that already holds visible cdx files (hand-assembled, or written
-    // before the log existed) must name those files too — otherwise
-    // the new manifest becomes the whole visible set and every
-    // pre-existing row silently vanishes from reads. Truncate mode
-    // needs no seed (it replaces the visible set by definition). The
-    // seed lists the dir in the exact fallback-scan order, so the read
-    // order before and after the commit agrees on the legacy prefix.
-    val legacy =
-      if (truncate || CdxManifest.hasLog(f, root)) Seq.empty[String]
-      else CdxSource.listingOrder(f, root)
-        .filterNot(ordered.map(_.finalName).toSet)
     val names = ordered.map(_.finalName).toSeq
-    val v = CdxManifest.commit(f, root, queryId, legacy ++ names, truncate)
-    if (truncate) CdxManifest.pruneBelow(f, root, v, names.toSet)
+    val v = CdxLog.commit(f, root, names, truncate)
+    if (truncate) CdxLog.pruneBelow(f, root, v, names.toSet)
     f.delete(new Path(stagingDir), true)
   }
 
   /** Drop the staging dir AND any files this job already promoted —
-    * they carry no manifest, so they were never visible; deleting them
+    * no committed list names them, so they were never visible; deleting them
     * just keeps a crashed job from leaving orphans for the GC. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
@@ -409,10 +346,10 @@ class CdxScan(path: String) extends Scan with Batch {
   override def toBatch: Batch = this
   override def description(): String = s"CdxScan path=$path"
 
-  /** Partition order: a manifest-logged table reads its files in
-    * COMMIT order (each job's files contiguous, in partition order —
-    * [[CdxManifest]]); files promoted by a crashed commit carry no
-    * manifest and are never read. A manifest-less dir (hand-assembled
+  /** Partition order: a logged table reads its files in COMMIT order
+    * (each job's files contiguous, in partition order — [[CdxLog]]);
+    * files promoted by a crashed commit are in no list and are never
+    * read. A log-less dir (hand-assembled
     * cdx files, pre-log tables) falls back to listing, ordered by
     * (queryId, NUMERIC partition index) — numeric so the ordering
     * survives >99,999 partitions (a lexicographic path sort would put
@@ -424,7 +361,7 @@ class CdxScan(path: String) extends Scan with Batch {
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
     val fs = p.getFileSystem(hadoopConf.value)
-    val files: Seq[Path] = CdxManifest.visibleFiles(fs, p) match {
+    val files: Seq[Path] = CdxLog.visibleFiles(fs, p) match {
       case Some(names) => names.map(new Path(p, _))
       case None =>
         CdxSource.listingOrder(fs, p).map(new Path(p, _))

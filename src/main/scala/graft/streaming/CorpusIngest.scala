@@ -14,30 +14,29 @@ import graft.sources.{ShardStore, StateStore}
   * decontamination, packing — landing accepted rows and tombstones in
   * the [[ShardStore]] and committing the next state version.
   *
-  * Both stores commit every version through the one version log
-  * ([[graft.sources.VersionLog]]: stage, claim `commits/v<N>`, flip
-  * `LATEST`; state deltas move into their partitions after the
-  * claim, whole shard versions are written in place). A batch's state
-  * commit is a VERSIONED DELTA ([[StateStore]]): its O(batch) witness
-  * deltas become new `ingest=<v>` partitions (never touching the
-  * partitions it is concurrently reading) — which also gives state
-  * time travel for free. Commit I/O is independent of how large the corpus has grown
-  * (StateCommitSpec measures it); a lost LATEST is recovered from the
-  * per-version commit markers instead of silently bootstrapping an
-  * empty corpus. State compaction commits a new base version; shard
-  * compaction commits a rewritten `v<N>` table dir ([[ShardStore]]);
-  * shard appends and tombstones land inside the live version.
+  * Each batch is ONE version of the state store's log
+  * ([[graft.sources.VersionLog]]): its state delta, its shard rows,
+  * its tombstones and its replay record are staged together, one claim
+  * of `commits/v<N>` decides all of them, and the marker records where
+  * each staged file moves — the state's new `ingest=<v>` partitions
+  * (never touching the partitions it is concurrently reading), the
+  * live shard version dir ([[ShardStore]]) and `batches/<id>`. Commit
+  * I/O is independent of how large the corpus has grown
+  * (StateCommitSpec measures it), and versions give state time travel
+  * for free; a lost LATEST is recovered from the per-version commit
+  * markers instead of silently bootstrapping an empty corpus. State
+  * compaction commits a new base version (keeping `batches/`); shard
+  * compaction commits a rewritten `v<N>` table dir and stays the
+  * caller's ([[ShardStore.maybeCompact]]).
   *
-  * Failure semantics (bare parquet, no transactional format):
-  * foreachBatch is at-least-once, and a REPLAYED batch whose commit
-  * went through is detected by its `BATCH_<id>` marker and skipped
-  * outright. A replay that lost the race between the shard append and
-  * the marker can double-append — that residual window is the honest
-  * limit of bare parquet; with content addressing the STATE never
-  * corrupts either way, because every replayed document is an exact
-  * dup of itself and the pipeline drops it (`runIncremental` replays
-  * are structural no-ops). At deployment scale the store graduates to
-  * Delta/Iceberg and the window closes.
+  * Failure semantics — the reference's "no batch missing, none twice":
+  * foreachBatch is at-least-once. A crash before the claim leaves only
+  * an unclaimed stage, so the replay lands the batch once. A crash
+  * after the claim leaves a version whose moves the next batch's
+  * writer finishes before it checks for its replay record, so a
+  * replayed batch id whose claim went through is skipped outright.
+  * The state and shard roots must share one file system, because the
+  * moves are renames.
   */
 object CorpusIngest {
 
@@ -56,10 +55,12 @@ object CorpusIngest {
   def load(spark: SparkSession, root: String): TrainingPipeline.CorpusState =
     StateStore.load(spark, root).getOrElse(StateStore.empty(spark))
 
-  /** One micro-batch: skip if already committed, else ingest + land +
-    * commit + scheduled state maintenance. Exposed for tests and for
-    * batch-mode callers that want the same exactly-once-per-batch
-    * bookkeeping.
+  /** One micro-batch: finish any crashed batch's moves, skip if this
+    * batch id is already committed, else ingest and commit the state
+    * delta, shard rows, tombstones and replay record as one state
+    * version, then run scheduled state maintenance. Exposed for tests
+    * and for batch-mode callers that want the same
+    * exactly-once-per-batch bookkeeping.
     *
     * Cache ownership: the call releases every frame it cached
     * ([[TrainingPipeline.IngestDelta.release]], after the commit and
@@ -71,7 +72,7 @@ object CorpusIngest {
     * followed by a consolidating [[StateStore.compact]] (the
     * auto-OPTIMIZE pattern — one amortized pause instead of unbounded
     * small-file accumulation; drops pre-compaction time travel, which
-    * replay does not need: replayed batch ids are marker-skipped).
+    * replay does not need: replay records survive compaction).
     * The debt CHECK is one directory listing, no Spark job. `0`
     * disables maintenance. Shard-table compaction stays caller-paced
     * ([[ShardStore.maybeCompact]]) — it rewrites shipped data files,
@@ -82,14 +83,21 @@ object CorpusIngest {
                   maxStateDeltas: Int = 64): Unit = {
     val spark = batch.sparkSession
     val f = fs(spark, stateRoot)
-    val marker = new Path(s"$stateRoot/BATCH_$batchId")
-    if (f.exists(marker)) return
+    require(f.getUri == fs(spark, shardRoot).getUri,
+      s"state root $stateRoot and shard root $shardRoot are on different file systems — " +
+        "a batch commit moves its shard files by rename, which cannot cross them")
+    StateStore.heal(spark, stateRoot)
+    val record = s"batches/$batchId"
+    if (f.exists(new Path(s"$stateRoot/$record"))) return
     val delta = TrainingPipeline.runIncremental(load(spark, stateRoot), batch, cfg)
     try {
-      ShardStore.append(batch, delta.accepted, shardRoot)
-      ShardStore.addTombstones(delta.tombstones, shardRoot)
-      commit(spark, delta, stateRoot)
-      f.create(marker, true).close()
+      val live = ShardStore.liveDir(spark, shardRoot)
+      StateStore.commitDeltaWith(spark, delta, stateRoot) { stage =>
+        val moves = ShardStore.stageRows(batch, delta.accepted, stage, live) ++
+          ShardStore.stageTombstones(delta.tombstones, stage, live)
+        f.create(new Path(s"$stage/$record"), true).close()
+        moves :+ (record -> new Path(s"$stateRoot/$record"))
+      }
       if (maxStateDeltas > 0)
         StateStore.maybeCompact(spark, stateRoot, maxDeltas = maxStateDeltas)
     } finally delta.release()

@@ -67,9 +67,10 @@ object ObjectStoreFs {
   * BOTH sides present, one partial. These tests prove the healing
   * paths against exactly that:
   *
-  *  - StateStore's materialize step: src-and-dst both present means
-  *    the dst is a partial copy (a completed rename deletes its
-  *    source) — it is dropped and re-renamed, never skipped;
+  *  - StateStore's materialize step, run by the next writer: src-and-dst
+  *    both present means the dst is a partial copy (a completed rename
+  *    deletes its source) — it is dropped and re-renamed, never
+  *    skipped;
   *  - the full commit lifecycle (compaction included) and the classic
   *    interleaved lost-update run end-to-end over the `graftoss:`
   *    scheme, parquet committer renames included.
@@ -135,7 +136,7 @@ class CloudRenameSpec extends AnyFunSuite {
     assert(Set(3001L, 3002L, 3003L).subsetOf(ids))
   }
 
-  test("a reader crash mid-materialize leaves a partial dst; the next read redoes it") {
+  test("a healer crash mid-move leaves a partial dst; the next writer redoes it") {
     val root = newOssRoot("graft_oss_heal") + "/state"
     StateStore.commitBootstrap(spark,
       TrainingPipeline.bootstrapState(corpusOf(3)), root)
@@ -143,8 +144,8 @@ class CloudRenameSpec extends AnyFunSuite {
       TrainingPipeline.runIncremental(st.get, batchOf(2000L, "aa"))
     }
     assert(v1 == 1L)
-    // a writer CLAIMED v2 with staged artifacts but died before
-    // materialize (the StateRaceSpec fixture, over graftoss:)
+    // a writer CLAIMED v2 with staged artifacts but died before its
+    // moves (the StateRaceSpec fixture, over graftoss:)
     val f = new Path(root).getFileSystem(conf)
     val token = "deadbeef-dead-dead-dead-deaddeadbeef"
     Seq("hashes", "sigs", "shingles", "manifest", "dead").foreach { t =>
@@ -153,21 +154,25 @@ class CloudRenameSpec extends AnyFunSuite {
     }
     FileUtil.copy(f, new Path(s"$root/labels/v=1"),
       f, new Path(s"$root/staging/$token/labels"), false, conf)
-    val out = f.create(new Path(s"$root/commits/v2"), false)
-    out.write(s"$token 0".getBytes("UTF-8")); out.close() // body: token, base
+    StoreFixtures.claimedDelta(root, 2L, token, 0L, StoreFixtures.stateMoves(root, 2L))
 
-    // first healer crashes after ONE file copy: its current table dst
-    // is left PARTIAL with the staged src still present
+    // the first healing writer crashes after ONE file copy: its current
+    // table dst is left PARTIAL with the staged src still present
+    def ingest(base: Long, tag: String) = StateStore.commitDeltaOptimistic(spark, root) { st =>
+      TrainingPipeline.runIncremental(st.get, batchOf(base, tag))
+    }
     ObjectStoreFs.armCrash(afterFiles = 1)
-    try intercept[Exception] { StateStore.latestVersion(spark, root) }
+    try intercept[Exception] { ingest(3000L, "bb") }
     finally ObjectStoreFs.disarm()
     assert(f.exists(new Path(s"$root/staging/$token"))) // src survived the crash
+    // a reader meanwhile reads v1 and does not touch the partial dst
+    assert(StateStore.latestVersion(spark, root).contains(1L))
 
-    // the next reader detects src-and-dst, drops the partial dst, and
-    // completes the commit — the healed state loads whole
-    assert(StateStore.latestVersion(spark, root).contains(2L))
+    // the next writer detects src-and-dst, drops the partial dst, and
+    // completes v2 before committing v3 — the healed state loads whole
+    assert(ingest(3000L, "bb") == 3L)
     assert(!f.exists(new Path(s"$root/staging/$token")))
     val st = StateStore.load(spark, root)
-    assert(st.nonEmpty && st.get.manifest.count() >= 6)
+    assert(st.nonEmpty && st.get.manifest.count() >= 9)
   }
 }

@@ -187,8 +187,9 @@ class StateCommitSpec extends AnyFunSuite {
       val root = newRoot(scheme, "graft_sc_b")
       storeAtV1(root)
       val before = live(root)
-      // a compaction that claimed base v2 and died before materializing:
-      // the full live state staged, the marker names its token and base
+      // a compaction that claimed base v2 and died before its moves:
+      // the full live state staged, the marker names its token, base
+      // and moves
       val st = StateStore.loadVersion(spark, root, 1L)
       val stage = s"$root/staging/$token"
       st.hashes.write.parquet(s"$stage/hashes")
@@ -197,16 +198,21 @@ class StateCommitSpec extends AnyFunSuite {
       st.manifest.write.parquet(s"$stage/manifest")
       st.manifest.select($"doc_id").limit(0).write.parquet(s"$stage/dead")
       st.labels.write.parquet(s"$stage/labels")
+      StoreFixtures.claimedDelta(root, 2L, token, 2L, StoreFixtures.stateMoves(root, 2L))
       val f = fsOf(root)
-      val out = f.create(new Path(s"$root/commits/v2"), false)
-      out.write(s"$token 2".getBytes("UTF-8")); out.close()
-      if (scheme == "graftoss") { // the first healer itself dies mid-copy
+      // readers never write: they read v1 and leave the claim unmoved
+      val files = StoreFixtures.files(root)
+      assert(StateStore.latestVersion(spark, root).contains(1L))
+      assert(live(root) == before)
+      assert(StoreFixtures.files(root) == files, "a reader wrote")
+      if (scheme == "graftoss") { // the first healing writer dies mid-copy
         ObjectStoreFs.armCrash(afterFiles = 1)
-        try intercept[Exception] { StateStore.latestVersion(spark, root) }
+        try intercept[Exception] { StateStore.compact(spark, root) }
         finally ObjectStoreFs.disarm()
         assert(f.exists(new Path(stage)), "the staged source survives the crash")
       }
-      assert(StateStore.latestVersion(spark, root).contains(2L))
+      // the next writer finishes v2's moves, then compacts on top of it
+      assert(StateStore.compact(spark, root) == 3L)
       assert(!f.exists(new Path(stage)))
       assert(live(root) == before, "healed compaction changed the live state")
     }

@@ -8,9 +8,9 @@ import graft.sources.{ShardStore, StateStore}
 
 /** Optimistic-concurrency commits (the rows-90/93 Delta-story close):
   * a lost claim means RECOMPUTE against the winner's state — never a
-  * lost update; version numbers commit exactly once; a crash between
-  * claim and pointer flip is healed forward by the next reader, and a
-  * reader healing a live commit does not undo it; the protocol holds
+  * lost update; version numbers commit exactly once; a version claimed
+  * but not yet moved is not read, readers never write, and the next
+  * writer heals it forward — without undoing a live commit it heals; the protocol holds
   * over the non-file `graftfs:` scheme; racing ShardStore compactions
   * converge on one winner, and a shard reader racing a compaction
   * reads a whole version without writing. */
@@ -77,7 +77,7 @@ class StateRaceSpec extends AnyFunSuite {
     }
   }
 
-  test("crash between claim and flip heals forward on the next read") {
+  test("crash between claim and flip: readers never write, the next writer heals") {
     val root = java.nio.file.Files.createTempDirectory("graft_race3").toString
     StateStore.commitBootstrap(spark,
       TrainingPipeline.bootstrapState(corpusOf(3)), root)
@@ -86,8 +86,8 @@ class StateRaceSpec extends AnyFunSuite {
     }
     assert(v1 == 1L)
     // simulate a writer that CLAIMED v2 with staged artifacts but died
-    // before materialize + flip: stage = a copy of v1's artifact dirs,
-    // marker carries the token, LATEST still says 1
+    // before its moves + flip: stage = a copy of v1's artifact dirs,
+    // marker carries the token and the moves, LATEST still says 1
     val f = fsOf(root)
     val conf = spark.sparkContext.hadoopConfiguration
     val token = "deadbeef-dead-dead-dead-deaddeadbeef"
@@ -97,15 +97,24 @@ class StateRaceSpec extends AnyFunSuite {
     }
     FileUtil.copy(f, new Path(s"$root/labels/v=1"),
       f, new Path(s"$root/staging/$token/labels"), false, conf)
-    val out = f.create(new Path(s"$root/commits/v2"), false)
-    out.write(s"$token 0".getBytes("UTF-8")); out.close() // body: token, base
+    StoreFixtures.claimedDelta(root, 2L, token, 0L, StoreFixtures.stateMoves(root, 2L))
 
-    // the next reader heals: LATEST advances to 2, artifacts land
-    assert(StateStore.latestVersion(spark, root).contains(2L))
+    // readers get v1, whole, and leave every file as they found it
+    val files = StoreFixtures.files(root)
+    assert(StateStore.latestVersion(spark, root).contains(1L))
+    assert(manifestIds(root) == Set(1L, 2L, 3L, 2001L, 2002L, 2003L))
+    assert(StoreFixtures.files(root) == files, "a reader wrote")
+
+    // the next writer heals v2 forward before claiming v3
+    val v3 = StateStore.commitDeltaOptimistic(spark, root) { st =>
+      TrainingPipeline.runIncremental(st.get, batchOf(3000L, "bb"))
+    }
+    assert(v3 == 3L)
     assert(f.exists(new Path(s"$root/hashes/ingest=2")))
     assert(f.exists(new Path(s"$root/labels/v=2")))
     assert(!f.exists(new Path(s"$root/staging/$token")))
-    assert(StateStore.load(spark, root).nonEmpty)
+    assert(StateStore.latestVersion(spark, root).contains(3L))
+    assert(Set(2001L, 3001L).subsetOf(manifestIds(root)))
   }
 
   test("the interleaved-writer protocol holds over graftfs:") {
@@ -129,21 +138,28 @@ class StateRaceSpec extends AnyFunSuite {
     assert(Set(2001L, 3001L).subsetOf(ids))
   }
 
-  test("a reader healing a delta commit mid-move over graftfs: leaves it whole") {
+  test("a writer healing a delta commit mid-move over graftfs: leaves it whole") {
     val root = StoreFixtures.newRoot("graftfs", "graft_race7")
     StateStore.commitBootstrap(spark,
       TrainingPipeline.bootstrapState(corpusOf(3)), root)
     // the committer of v1, past its claim, looks up its first
-    // destination: a reader heals v1 forward right then, and the
-    // committer must not undo the move the reader made
+    // destination: a second writer heals v1 forward right then and
+    // commits v2, and the first committer must not undo the moves the
+    // second one made
     var seen = Set.empty[Long]
-    StoreFixtures.raceFor(new Path(s"$root/hashes/ingest=1")) { seen = manifestIds(root) }
+    StoreFixtures.raceFor(new Path(s"$root/hashes/ingest=1")) {
+      StateStore.commitDeltaOptimistic(spark, root) { st =>
+        seen = st.get.manifest.select($"doc_id").as[Long].collect().toSet
+        TrainingPipeline.runIncremental(st.get, batchOf(3000L, "bb"))
+      }
+    }
     val v1 = StateStore.commitDeltaOptimistic(spark, root) { st =>
       TrainingPipeline.runIncremental(st.get, batchOf(2000L, "aa"))
     }
     assert(v1 == 1L)
     assert(Set(2001L, 2002L, 2003L).subsetOf(seen))
-    assert(manifestIds(root) == seen)
+    assert(StateStore.latestVersion(spark, root).contains(2L))
+    assert(manifestIds(root) == seen ++ Set(3001L, 3002L, 3003L))
     assert(fsOf(root).exists(new Path(s"$root/hashes/ingest=1")))
   }
 

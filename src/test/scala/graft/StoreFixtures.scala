@@ -33,6 +33,21 @@ object StoreFixtures {
   def claimed(root: String, v: Long, token: String): Unit =
     write(fsOf(root), new Path(s"$root/commits/v$v"), s"$token $v")
 
+  /** Claim DELTA version `v` on `base` under `root` the way a committer
+    * that died right after its claim leaves it: the marker records the
+    * moves (path staged under `staging/<token>` -> destination), none
+    * is made yet, and LATEST still names an older version. */
+  def claimedDelta(root: String, v: Long, token: String, base: Long,
+                   moves: Seq[(String, String)]): Unit =
+    write(fsOf(root), new Path(s"$root/commits/v$v"),
+      (s"$token $base" +: moves.map { case (src, dst) => s"$src\t$dst" }).mkString("\n"))
+
+  /** A StateStore version's moves: each staged table dir to its
+    * `ingest=<v>` (labels: `v=<v>`) partition. */
+  def stateMoves(root: String, v: Long): Seq[(String, String)] =
+    Seq("hashes", "sigs", "shingles", "manifest", "dead").map(t => t -> s"$root/$t/ingest=$v") :+
+      ("labels" -> s"$root/labels/v=$v")
+
   /** Names directly under `dir` (Nil when it does not exist): the
     * writer-private dirs of `root/staging` or of one version's home. */
   def children(dir: String): Seq[String] = {
