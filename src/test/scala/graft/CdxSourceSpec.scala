@@ -140,9 +140,9 @@ class CdxSourceSpec extends AnyFunSuite {
   test("graftoss: crash mid-promote on APPEND — prior table intact, retry lands rows exactly once") {
     val dir = newOssDir()
     writeTo(dir, sample(10), "overwrite")
-    ObjectStoreFs.armCrash(afterFiles = 2) // third promoted file dies mid-copy
+    ObjectStoreFs.armCrash(dir, afterFiles = 2) // third promoted file dies mid-copy
     try intercept[Exception] { writeTo(dir, sample(10), "append") }
-    finally ObjectStoreFs.disarm()
+    finally ObjectStoreFs.disarm(dir)
     // the crashed job promoted some files but never wrote its manifest:
     // nothing of it is visible, the prior table reads whole
     assert(readBack(dir).orderBy($"surt").collect().toSeq ==
@@ -154,9 +154,9 @@ class CdxSourceSpec extends AnyFunSuite {
   test("graftoss: crash mid-promote on OVERWRITE — old table stays fully readable") {
     val dir = newOssDir()
     writeTo(dir, sample(12), "overwrite")
-    ObjectStoreFs.armCrash(afterFiles = 1)
+    ObjectStoreFs.armCrash(dir, afterFiles = 1)
     try intercept[Exception] { writeTo(dir, sample(30), "overwrite") }
-    finally ObjectStoreFs.disarm()
+    finally ObjectStoreFs.disarm(dir)
     // truncate must not delete ANY old data before the manifest flip
     assert(readBack(dir).orderBy($"surt").collect().toSeq ==
       sample(12).orderBy($"surt").collect().toSeq)

@@ -1,7 +1,10 @@
 package graft
 
 import java.io.IOException
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,10 +15,10 @@ import graft.sources.StateStore
 /** An object-store-semantics FileSystem: rename is COPY-THEN-DELETE
   * (file at a time, the S3/GCS reality — no atomic directory rename
   * exists), refusing an existing destination. A crash budget can be
-  * armed so the Nth file copy inside a rename throws — the mid-rename
-  * crash the commit protocols must survive — and `exists` and `open` run the
-  * [[StoreFixtures.raceFor]] hook. Must be top-level with a no-arg
-  * ctor (Hadoop reflection). */
+  * armed on a root so the Nth file copy under it inside a rename
+  * throws — the mid-rename crash the commit protocols must survive —
+  * and `exists` and `open` run the [[StoreFixtures.raceFor]] hook.
+  * Must be top-level with a no-arg ctor (Hadoop reflection). */
 class ObjectStoreFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftoss:///")
   override def getScheme: String = "graftoss"
@@ -35,30 +38,51 @@ class ObjectStoreFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
   private def copyRec(src: Path, dst: Path): Unit = {
     if (getFileStatus(src).isDirectory) {
+      // an object store has no directories: a copy that dies before its
+      // next file leaves nothing at `dst`, not even an empty dir
+      ObjectStoreFs.budgetFor(src).foreach(_.maybeCrash())
       mkdirs(dst)
       listStatus(src).sortBy(_.getPath.getName).foreach { c =>
         copyRec(c.getPath, new Path(dst, c.getPath.getName))
       }
     } else {
-      ObjectStoreFs.maybeCrash()
+      val budget = ObjectStoreFs.budgetFor(src)
+      budget.foreach(_.maybeCrash())
       val in = open(src)
       val out = create(dst, false)
       try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 16)
       finally { in.close(); out.close() }
-      ObjectStoreFs.copied.incrementAndGet(); ()
+      budget.foreach(_.copied.incrementAndGet()); ()
     }
   }
 }
 
+/** Crash budgets keyed by root, like [[StoreFixtures.raceFor]]: suites
+  * share one test JVM and run in parallel, so a budget fires only on
+  * copies under the root it was armed for. */
 object ObjectStoreFs {
-  // -1 = disarmed; n >= 0 = throw before the (n+1)th file copy
-  @volatile var crashAfterFiles: Int = -1
-  val copied = new AtomicInteger(0)
-  def armCrash(afterFiles: Int): Unit = { copied.set(0); crashAfterFiles = afterFiles }
-  def disarm(): Unit = crashAfterFiles = -1
-  private[graft] def maybeCrash(): Unit =
-    if (crashAfterFiles >= 0 && copied.get() >= crashAfterFiles)
-      throw new IOException("simulated crash mid-rename (object-store copy)")
+  private[graft] final class Budget(afterFiles: Int) {
+    val copied = new AtomicInteger(0)
+    def maybeCrash(): Unit =
+      if (copied.get() >= afterFiles)
+        throw new IOException("simulated crash mid-rename (object-store copy)")
+  }
+  private val budgets = new ConcurrentHashMap[String, Budget]()
+  private def key(p: Path): String = p.toUri.getPath.stripSuffix("/")
+
+  /** Throw before the (afterFiles+1)th file copy under `root`, and on
+    * every one after it, until [[disarm]]. */
+  def armCrash(root: String, afterFiles: Int): Unit = {
+    budgets.put(key(new Path(root)), new Budget(afterFiles)); ()
+  }
+  def disarm(root: String): Unit = { budgets.remove(key(new Path(root))); () }
+
+  private[graft] def budgetFor(p: Path): Option[Budget] = {
+    val path = key(p)
+    budgets.asScala.collectFirst {
+      case (root, b) if path == root || path.startsWith(root + "/") => b
+    }
+  }
 }
 
 /** Commit protocols vs rename-as-copy (SURVEY.md §2 rows 258/93):
@@ -161,9 +185,9 @@ class CloudRenameSpec extends AnyFunSuite {
     def ingest(base: Long, tag: String) = StateStore.commitDeltaOptimistic(spark, root) { st =>
       TrainingPipeline.runIncremental(st.get, batchOf(base, tag))
     }
-    ObjectStoreFs.armCrash(afterFiles = 1)
+    ObjectStoreFs.armCrash(root, afterFiles = 1)
     try intercept[Exception] { ingest(3000L, "bb") }
-    finally ObjectStoreFs.disarm()
+    finally ObjectStoreFs.disarm(root)
     assert(f.exists(new Path(s"$root/staging/$token"))) // src survived the crash
     // a reader meanwhile reads v1 and does not touch the partial dst
     assert(StateStore.latestVersion(spark, root).contains(1L))

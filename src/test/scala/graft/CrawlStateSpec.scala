@@ -97,10 +97,10 @@ class CrawlStateSpec extends AnyFunSuite {
         .withColumn("day", raise_error(lit("fetch record rejected")))
       intercept[Exception] { CrawlState.commitFetched(spark, bad, root) }
       if (scheme == "graftoss") { // and a commit killed mid-rename
-        ObjectStoreFs.armCrash(afterFiles = 0)
+        ObjectStoreFs.armCrash(root, afterFiles = 0)
         try intercept[Exception] {
           CrawlState.commitFetched(spark, fetched(("u2", "h", "2025-01-11")), root)
-        } finally ObjectStoreFs.disarm()
+        } finally ObjectStoreFs.disarm(root)
       }
       assert(StoreFixtures.children(s"$root/fetched/v=1").isEmpty, "a failed merge leaves no dir")
       // a dir a dead writer left where v=1 lives is never resolved

@@ -293,7 +293,11 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("pagerank/ppr/hits: driver fast path equals the distributed iteration") {
-    val e = GraphOps.nationFlowEdges(spark, TestSpark.sf)
+    // small literal graphs keep this test short; each kernel still runs
+    // its driver replay and its distributed loop. Weighted, with a
+    // cycle, a chord and a dangling node (6).
+    val e = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 4L, 5L), (4L, 5L, 1L),
+        (5L, 1L, 1L), (2L, 6L, 4L)).toDF("src", "dst", "w")
     val fastPr = TestSpark.onDriver(GraphOps.pageRank(e, "src", "dst", "w", iters = 3))
       .orderBy($"node").collect().toSeq
     val distPr = GraphOps.pageRank(e, "src", "dst", "w", iters = 3,
@@ -315,7 +319,10 @@ class GraphSpec extends AnyFunSuite {
         smallGraphMax = 0L)
       .orderBy($"node").collect().toSeq
     assert(fastH == distH && fastH.nonEmpty)
-    val pairs = graft.operators.VectorQueries.embedNearDupQ(spark, TestSpark.sf)
+    // a path longer than the rounds (labels still moving at the last
+    // one) and bridged triangles
+    val pairs = Seq((6L, 5L), (5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (10L, 11L), (11L, 12L),
+        (12L, 10L), (12L, 13L), (13L, 14L), (14L, 15L), (15L, 13L)).toDF("id_a", "id_b")
     val fastL = TestSpark.onDriver(GraphOps.labelPropagation(pairs, "id_a", "id_b", iters = 4))
       .orderBy($"node").collect().toSeq
     val distL = GraphOps.labelPropagation(pairs, "id_a", "id_b", iters = 4,

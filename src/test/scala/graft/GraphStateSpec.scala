@@ -32,9 +32,9 @@ class GraphStateSpec extends AnyFunSuite {
       // a refresh that died mid-write, as a bare ranks/v=1 dir
       StoreFixtures.fsOf(root).mkdirs(new Path(s"$root/ranks/v=1/_temporary/0"))
       if (scheme == "graftoss") { // and a real one killed mid-rename
-        ObjectStoreFs.armCrash(afterFiles = 0)
+        ObjectStoreFs.armCrash(root, afterFiles = 0)
         try intercept[Exception] { GraphState.refreshRanks(spark, root, iters = 1) }
-        finally ObjectStoreFs.disarm()
+        finally ObjectStoreFs.disarm(root)
       }
       assert(GraphState.latestRankVersion(spark, root).contains(0L))
       assert(rows(GraphState.ranks(spark, root).get) == r0)

@@ -246,9 +246,9 @@ class ShardStoreSpec extends AnyFunSuite {
       // crash in the rewrite's own output renames
       val corrupt = new org.apache.hadoop.fs.Path(live, "split=train/lang=en/corrupt.parquet")
       if (scheme == "file") StoreFixtures.write(f, corrupt, "not parquet")
-      else ObjectStoreFs.armCrash(afterFiles = 0)
+      else ObjectStoreFs.armCrash(root, afterFiles = 0)
       try intercept[Exception] { ShardStore.compact(spark, root) }
-      finally ObjectStoreFs.disarm()
+      finally ObjectStoreFs.disarm(root)
       f.delete(corrupt, false)
       assert(StoreFixtures.children(s"$root/v1").isEmpty, "a failed rewrite leaves no dir")
 

@@ -173,9 +173,9 @@ class StateCommitSpec extends AnyFunSuite {
       st.hashes.write.parquet(s"$root/staging/$token/hashes")
       st.sigs.limit(1).write.parquet(s"$root/staging/$token/sigs")
       if (scheme == "graftoss") { // and a real one, killed by a mid-rename crash
-        ObjectStoreFs.armCrash(afterFiles = 1)
+        ObjectStoreFs.armCrash(root, afterFiles = 1)
         try intercept[Exception] { StateStore.commitBootstrap(spark, st, root) }
-        finally ObjectStoreFs.disarm()
+        finally ObjectStoreFs.disarm(root)
       }
       assert(StateStore.load(spark, root).isEmpty)
       assert(StateStore.commitBootstrap(spark, st, root) == 0L)
@@ -206,9 +206,9 @@ class StateCommitSpec extends AnyFunSuite {
       assert(live(root) == before)
       assert(StoreFixtures.files(root) == files, "a reader wrote")
       if (scheme == "graftoss") { // the first healing writer dies mid-copy
-        ObjectStoreFs.armCrash(afterFiles = 1)
+        ObjectStoreFs.armCrash(root, afterFiles = 1)
         try intercept[Exception] { StateStore.compact(spark, root) }
-        finally ObjectStoreFs.disarm()
+        finally ObjectStoreFs.disarm(root)
         assert(f.exists(new Path(stage)), "the staged source survives the crash")
       }
       // the next writer finishes v2's moves, then compacts on top of it
