@@ -4,12 +4,13 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `GraftSession.builder`'s task sizing on the `local[4]` test session:
-  * a small input spreads over the cores instead of one task per stage,
-  * and a tiny one still runs as one. */
+/** `GraftSession.builder`'s sizing on the `local[4]` test session: a
+  * small input spreads over the cores instead of one task per stage, a
+  * tiny one still runs as one, and generated code stays compiled. */
 class SessionSizingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -63,5 +64,17 @@ class SessionSizingSpec extends AnyFunSuite {
     assert(bytes(f) < 256 * 1024, bytes(f))
     assert(rowGroups(f) > 1, rowGroups(f))
     assert(partitionRows(spark.read.parquet(f.toString)) == Seq(600))
+  }
+
+  test("code compiled once is reused after more than 100 other classes are compiled") {
+    // the codegen cache reads its static size once per JVM, from the
+    // session active on the first thread to generate code
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    def compile(i: Int) = CodeGenerator.compile(new CodeAndComment(
+      s"public Object generate(Object[] references) { return Integer.valueOf($i); }",
+      Map.empty))._1
+    val first = compile(-1)
+    (0 until 150).foreach(compile)
+    assert(compile(-1) eq first, "the first class was evicted and compiled again")
   }
 }
